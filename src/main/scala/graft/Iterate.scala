@@ -1,0 +1,90 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+
+/** The one loop driver of the iterative operators: it owns the loop
+  * state, the round counter, the pin cadence, round-scoped pins, the
+  * convergence hook and the `maxRounds` bound, so every loop keeps the
+  * same pin discipline (the reference owns a batch's lifetime in one
+  * place the same way, through its reference-counted batches).
+  *
+  * Pin discipline:
+  *  - round `i` pins its new state (eager `localCheckpoint`) when
+  *    `i % pinEvery == 0` or `i == maxRounds`; rounds in between chain
+  *    into one plan (the pageRank bodies, where nothing is read twice);
+  *  - once a new state is pinned, the scoped pins ([[Round.pin]]) it read
+  *    and the superseded state pin are released ([[Pins.release]]);
+  *    `retain` keeps every state pin instead, for callers whose result
+  *    reads them all;
+  *  - the returned state and the pins its lineage reads are the caller's;
+  *  - when a step or the `done` hook throws, or `maxRounds` runs out with
+  *    `exhausted` set, every pin the driver holds is released first.
+  *
+  * `init` belongs to the driver from the call on: it is released like any
+  * superseded state (a no-op when it is not a pin).
+  */
+private[graft] object Iterate {
+
+  /** One round: the state it starts from and the intermediates it pins. */
+  final class Round private[Iterate] (val state: DataFrame) {
+    private[Iterate] var scoped: List[DataFrame] = Nil
+
+    /** Eagerly pin an intermediate the round reads more than once; it is
+      * released once a state that reads it is pinned.
+      */
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.localCheckpoint(true)
+      scoped ::= p
+      p
+    }
+  }
+
+  /** Run `step` from `init` for at most `maxRounds` rounds (none, and
+    * `init` returned, when `maxRounds` ≤ 0).
+    *
+    * A step that returns `r.state` itself declares a fixed point: the loop
+    * ends converged without pinning. Otherwise `done` sees the round's new
+    * state (the pinned one on pin rounds) and its number, and returning
+    * true ends the loop converged. A loop that runs out of rounds without
+    * converging returns its last state, or throws an
+    * `IllegalStateException` with the `exhausted` message when one is set.
+    */
+  def apply(init: DataFrame, maxRounds: Int, pinEvery: Int = 1, retain: Boolean = false,
+      done: (DataFrame, Int) => Boolean = (_, _) => false,
+      exhausted: Option[String] = None)(step: Round => DataFrame): DataFrame = {
+    require(pinEvery >= 1, s"Iterate: pinEvery $pinEvery < 1")
+    var held = List(init) // state pins
+    var scoped = List.empty[DataFrame] // scoped pins the unpinned state still reads
+    var round: Round = null
+    var state = init
+    var i = 0
+    var converged = false
+    var ok = false
+    try {
+      while (!converged && i < maxRounds) {
+        i += 1
+        round = new Round(state)
+        val next = step(round)
+        if (next eq state) converged = true
+        else {
+          scoped = round.scoped ++ scoped
+          round.scoped = Nil
+          if (i % pinEvery == 0 || i == maxRounds) {
+            state = next.localCheckpoint(true)
+            scoped.foreach(Pins.release)
+            scoped = Nil
+            if (!retain) { held.foreach(Pins.release); held = Nil }
+            held ::= state
+          } else state = next
+          converged = done(state, i)
+        }
+      }
+      if (!converged) exhausted.foreach(msg => throw new IllegalStateException(msg))
+      ok = true
+      state
+    } finally {
+      if (round != null) round.scoped.foreach(Pins.release)
+      if (!ok) (scoped ++ held).foreach(Pins.release)
+    }
+  }
+}

@@ -15,8 +15,9 @@ import org.apache.spark.sql.DataFrame
   * therefore not bounding state to one live snapshot as documented.
   *
   * Use [[release]] wherever a checkpoint pin is superseded — per-round
-  * loop state especially, where the leak compounds. For `cache()`d
-  * frames keep plain `unpersist()` (that path works).
+  * loop state especially, where the leak compounds ([[Iterate]] does it
+  * for the iterative operators). For `cache()`d frames keep plain
+  * `unpersist()` (that path works).
   */
 object Pins {
 

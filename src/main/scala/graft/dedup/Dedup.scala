@@ -700,47 +700,38 @@ object Dedup {
       .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
       .cache()
-    var labels = edges
+    // labels (id, newRep[, chg]): the update select names its output
+    // newRep because Spark 4's lateral alias resolution would let a `rep`
+    // alias shadow the input `rep` in the change flag
+    val init = edges
       .select(col("src").as("id"))
       .distinct()
-      .withColumn("rep", col("id"))
+      .withColumn("newRep", col("id"))
       .localCheckpoint(true)
-    // handle to the checkpoint backing `labels`: each round's eager
-    // localCheckpoint supersedes the previous one, which would otherwise
-    // stay pinned in executor storage until ContextCleaner GC — one
-    // node-sized materialization per round on long-diameter graphs.
-    var prevPinned = labels
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIters) {
+    // change detection folded into the update row (one extra boolean per
+    // row, one tiny agg) instead of a second join+count pass; coalesce:
+    // max over an EMPTY label set (no near-duplicate pairs at all — the
+    // common clean-corpus case) aggregates to null, not false
+    def unchanged(updated: DataFrame, round: Int): Boolean =
+      !updated.agg(coalesce(max(col("chg")), lit(false))).head().getBoolean(0)
+    // every round pinned, not cached: the labels feed each round TWICE
+    // (neighborMin + the update join), so an uncut lineage doubles per
+    // iteration — a 2^diameter logical plan that OOMs the DRIVER on
+    // chain-shaped components (~20 hops) long before any executor sees data
+    val labels = try graft.Iterate(init, maxIters, done = unchanged) { r =>
+      val labels = r.state.select(col("id"), col("newRep").as("rep"))
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("rep").as("nrep")), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("nrep")).as("minNeighbor"))
-      // change detection folded into the update row (one extra boolean per
-      // row, one tiny agg) instead of a second join+count pass.
-      // localCheckpoint (eager — it IS the iteration's materialization),
-      // not cache: `labels` feeds this plan TWICE (neighborMin + the
-      // update join), so an uncut lineage doubles per iteration — a
-      // 2^diameter logical plan that OOMs the DRIVER on chain-shaped
-      // components (~20 hops) long before any executor sees data
-      val updatedWithFlag = labels
+      labels
         .join(neighborMin, Seq("id"), "left")
         .select(
           col("id"),
           least(col("rep"), coalesce(col("minNeighbor"), col("rep"))).as("newRep"),
           (coalesce(col("minNeighbor"), col("rep")) < col("rep")).as("chg"))
-        .localCheckpoint(true)
-      graft.Pins.release(prevPinned) // superseded — the new checkpoint is live
-      prevPinned = updatedWithFlag
-      // coalesce: max over an EMPTY label set (no near-duplicate pairs at
-      // all — the common clean-corpus case) aggregates to null, not false
-      changed = updatedWithFlag.agg(coalesce(max(col("chg")), lit(false))).head().getBoolean(0)
-      labels = updatedWithFlag.select(col("id"), col("newRep").as("rep"))
-      iter += 1
-    }
-    edges.unpersist()
-    labels
+    } finally edges.unpersist()
+    labels.select(col("id"), col("newRep").as("rep"))
   }
 
   /** Incremental exact dedup: survivors of `batch` against an existing

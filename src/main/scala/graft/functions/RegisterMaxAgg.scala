@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * per-element Integer allocation on every row of every round. Here the
   * update reads the Catalyst array directly (`getInt`, no boxing) into
   * the primitive `Array[Int]` buffer; serialize is the raw int array at
-  * exchange boundaries. Measured (ReachAb, one JVM, sf0.1): the three
+  * exchange boundaries. Measured (one JVM, sf0.1): the three
   * propagation rounds' aggregation time drops ~2×.
   */
 case class RegisterMaxAgg(

@@ -23,11 +23,19 @@ import org.apache.spark.sql.types._
   * serialize is 16k bytes at exchange boundaries.
   *
   * Ordering and tie-break are IDENTICAL to the udaf it replaces (score
-  * descending, id ascending on equal scores) — the q_topk_per_key oracle
-  * pins it. Output: `array<struct<_1: double, _2: long>>`, the exact
-  * shape the Aggregator's `Seq[(Double, Long)]` encoder produced, so
-  * consumers (`pair._1` / `pair._2`) are untouched. Null inputs (either
-  * column) are skipped, matching aggregate convention.
+  * descending, id ascending on equal scores) for non-null, non-NaN
+  * inputs — the q_topk_per_key oracle pins it. Output:
+  * `array<struct<_1: double, _2: long>>`, the exact shape the
+  * Aggregator's `Seq[(Double, Long)]` encoder produced, so consumers
+  * (`pair._1` / `pair._2`) are untouched. Two carve-outs from the udaf:
+  *  - null inputs (either column) are skipped, matching aggregate
+  *    convention, where the udaf's tuple encoder failed on them;
+  *  - a NaN score fails the query with an `IllegalArgumentException`
+  *    naming the id. NaN compares false both ways, so no insertion
+  *    point is consistent for it: the udaf put it first and this buffer
+  *    would put it last, and either choice misplaces later rows and
+  *    depends on the order rows arrive. Filter or replace NaN scores
+  *    before ranking.
   */
 case class TopKAgg(
     scoreChild: Expression,
@@ -60,8 +68,13 @@ case class TopKAgg(
   override def update(buf: TopKAgg.Buf, input: InternalRow): TopKAgg.Buf = {
     val s = scoreChild.eval(input)
     val i = idChild.eval(input)
-    if (s != null && i != null)
-      buf.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
+    if (s != null && i != null) {
+      val score = s.asInstanceOf[Double]
+      if (score.isNaN) throw new IllegalArgumentException(
+        s"top_k: NaN score for id $i - NaN has no place in a score-descending " +
+          "order; filter or replace NaN scores before ranking")
+      buf.insert(score, i.asInstanceOf[Long])
+    }
     buf
   }
 

@@ -73,14 +73,17 @@ object StreamingMediaDedup {
     try {
       val corpusFps = readFingerprints(spark, fpDir, excludeBatch = Some(batchId))
         .getOrElse(emptyFingerprints(spark))
-      val survivors = incrementalFps(corpusFps, batchFps, batch, idCol,
-        maxHamming, bands, minMatches).localCheckpoint(true)
+      val (verdict, members) = verdictAndMembers(corpusFps, batchFps, batch, idCol,
+        maxHamming, bands, minMatches)
       try {
-        survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-        batchFps
-          .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .write.mode("overwrite").parquet(s"$fpDir/batch=$batchId")
-      } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
+        val survivors = verdict.localCheckpoint(true)
+        try {
+          survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
+          batchFps
+            .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
+            .write.mode("overwrite").parquet(s"$fpDir/batch=$batchId")
+        } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
+      } finally graft.Pins.release(members) // batchGroups' pin, read by the verdict
     } finally batchFps.unpersist()
   }
 
@@ -100,7 +103,15 @@ object StreamingMediaDedup {
       maxHamming: Int,
       bands: Int,
       minMatches: Int
-  ): DataFrame = {
+  ): DataFrame =
+    verdictAndMembers(corpusFps, batchFps, batch, idCol, maxHamming, bands, minMatches)._1
+
+  /** [[incrementalFps]] plus the [[batchGroups]] `members` pin its plan
+    * reads, for callers that release the pin once the verdict is done.
+    */
+  private def verdictAndMembers(corpusFps: DataFrame, batchFps: DataFrame,
+      batch: DataFrame, idCol: String, maxHamming: Int, bands: Int,
+      minMatches: Int): (DataFrame, DataFrame) = {
     require(maxHamming < bands, s"maxHamming ($maxHamming) must be < bands ($bands) for full recall")
     require(minMatches >= 1, s"minMatches must be >= 1, got $minMatches")
     val keyedC = keyedFps(collapsedCorpus(corpusFps), bands)
@@ -116,7 +127,8 @@ object StreamingMediaDedup {
     val candCB = keyedR.as("b").join(keyedC.as("c"), Seq("slot", "band", "bucket"))
       .select(col("b.id").as("id_b"), col("c.id").as("id_other"), col("slot"),
         col("b.fp").as("fp_b"), col("c.fp").as("fp_o"))
-    survivorsCollapsed(candCB, keyedR, members, batch, idCol, maxHamming, minMatches)
+    (survivorsCollapsed(candCB, keyedR, members, batch, idCol, maxHamming, minMatches),
+      members)
   }
 
   /** Corpus side collapsed to one representative (min id) per distinct
@@ -179,8 +191,8 @@ object StreamingMediaDedup {
     * 2,500 batch videos collapse to 307 distinct vectors and the
     * in-batch LSH self-join drops from 18.2M candidate rows to the rep
     * pairs. `members` rides a checkpoint pin (consumed by three verdict
-    * lanes; released by GC with the returned plan, the family
-    * discipline).
+    * lanes): [[applyBatch]] releases it once its writes are done; callers
+    * that return a lazy verdict leave it to GC with the returned plan.
     */
   private[graft] def batchGroups(batchFps: DataFrame): (DataFrame, DataFrame) = {
     val vecs = batchFps.groupBy(col("id"))

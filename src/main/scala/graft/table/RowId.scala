@@ -198,31 +198,16 @@ object RowId {
       s"uniquifyRowIds: null values in RowID column '$keyCol'")
     val tmp = "__graft_occurrence"
     val ord = "__graft_order"
-    var cur = withRowIndex(df, ord)
-    var iters = 0
-    var done = false
-    // superseded periodic checkpoints release for real (graft.Pins —
-    // Dataset.unpersist is a no-op for checkpoint blocks); the LAST pin
-    // stays live for the returned plan
-    var prevPinned: Option[org.apache.spark.sql.DataFrame] = None
-    while (!done) {
+    // each pass strictly shrinks the duplicate set (first occurrence of
+    // every key is untouched), so termination is guaranteed; the pin every
+    // 20 passes only guards pathological inputs from unbounded plan growth
+    graft.Iterate(withRowIndex(df, ord), maxRounds = Int.MaxValue, pinEvery = 20,
+        done = (cur, _) => duplicateKeys(cur, keyCol).isEmpty) { r =>
       val w = Window.partitionBy(col(keyCol)).orderBy(col(ord))
-      cur = cur
+      r.state
         .withColumn(tmp, row_number().over(w) - 1)
         .withColumn(keyCol, concat(col(keyCol), repeat(lit("_dup"), col(tmp).cast("int"))))
         .drop(tmp)
-      iters += 1
-      done = duplicateKeys(cur, keyCol).isEmpty
-      // each pass strictly shrinks the duplicate set (first occurrence of
-      // every key is untouched), so termination is guaranteed; the bound
-      // only guards pathological inputs from unbounded plan growth
-      if (!done && iters >= 20) {
-        cur = cur.localCheckpoint(true)
-        prevPinned.foreach(graft.Pins.release)
-        prevPinned = Some(cur)
-        iters = 0
-      }
-    }
-    cur.orderBy(col(ord)).drop(ord)
+    }.orderBy(col(ord)).drop(ord)
   }
 }

@@ -144,30 +144,33 @@ object HyperBall {
   private def propagate(nodes: DataFrame, idCol: String, edges: DataFrame,
       maxHops: Int, perHop: Boolean): DataFrame = {
     require(maxHops >= 1, s"HyperBall: maxHops $maxHops < 1")
-    val ids = nodes.select(col(idCol).as("id"))
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
-    var regs = ids.select(col("id"), initRegisters(col("id")).as("reg"))
+    val init = nodes.select(col(idCol).as("id"))
+      .select(col("id"), initRegisters(col("id")).as("reg"))
       .localCheckpoint(true)
-    var snapshots = regs.select(col("id"))
-    var d = 0
-    while (d < maxHops) {
-      // ball(v) ⊇ ball(u) for every edge v → u: v pulls u's registers
-      val prev = regs
-      val nb = e.join(regs, col("dst") === col("id"))
-        .select(col("src").as("id"), col("reg"))
-      regs = regs.unionAll(nb)
-        .groupBy(col("id")).agg(RegisterMaxAgg.registerMax(col("reg"), M).as("reg"))
-        .localCheckpoint(true)
-      // per-hop mode keeps every round's snapshot live (the final join
-      // reads them all); otherwise the superseded round releases
-      // (Dataset.unpersist is a no-op for checkpoints — graft.Pins)
-      if (!perHop) graft.Pins.release(prev)
-      d += 1
+    // per-hop mode keeps every round's pin live (the final join reads
+    // them all); otherwise the driver releases each superseded round
+    var snapshots = init.select(col("id"))
+    def snapshot(regs: DataFrame, d: Int): Boolean = {
       if (perHop) snapshots = snapshots.join(
         regs.select(col("id"), col("reg").as(s"__reg$d")), Seq("id"))
+      false
     }
-    e.unpersist()
+    val regs = try graft.Iterate(init, maxHops, retain = perHop, done = snapshot) { r =>
+      registerRound(e, r.state)
+    } finally e.unpersist()
     if (perHop) snapshots else regs
+  }
+
+  /** One max-merge round over `regs (id, reg)`: ball(v) ⊇ ball(u) for
+    * every edge v → u, so v pulls u's registers. Shared with
+    * [[HyperBallStore]].
+    */
+  private[graft] def registerRound(e: DataFrame, regs: DataFrame): DataFrame = {
+    val nb = e.join(regs, col("dst") === col("id"))
+      .select(col("src").as("id"), col("reg"))
+    regs.unionAll(nb)
+      .groupBy(col("id")).agg(RegisterMaxAgg.registerMax(col("reg"), M).as("reg"))
   }
 }

@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.functions.RegisterMaxAgg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,19 +90,13 @@ object HyperBallStore {
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
     try {
-      var regs = ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg"))
+      val init = ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg"))
         .localCheckpoint(true)
-      val nNodes = regs.count()
-      writeHop(regs, dir, 0, nBuckets)
-      var d = 0
-      while (d < maxHops) {
-        val prev = regs
-        regs = round(e, regs).localCheckpoint(true)
-        graft.Pins.release(prev) // superseded round (unpersist is a checkpoint no-op)
-        d += 1
-        writeHop(regs, dir, d, nBuckets)
-      }
-      graft.Pins.release(regs)
+      val nNodes = init.count()
+      writeHop(init, dir, 0, nBuckets)
+      graft.Pins.release(graft.Iterate(init, maxHops, done = (regs, d) => {
+        writeHop(regs, dir, d, nBuckets); false
+      })(r => HyperBall.registerRound(e, r.state)))
       writeManifest(spark, dir,
         Manifest(1, HyperBall.M, maxHops, nNodes, nBuckets, source))
     } finally e.unpersist()
@@ -195,16 +188,10 @@ object HyperBallStore {
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
     try {
-      var regs = readHop(spark, dir, m.maxHops).localCheckpoint(true)
-      var d = m.maxHops
-      while (d < newMaxHops) {
-        val prev = regs
-        regs = round(e, regs).localCheckpoint(true)
-        graft.Pins.release(prev)
-        d += 1
-        writeHop(regs, dir, d, m.nBuckets)
-      }
-      graft.Pins.release(regs)
+      graft.Pins.release(graft.Iterate(readHop(spark, dir, m.maxHops).localCheckpoint(true),
+        newMaxHops - m.maxHops, done = (regs, i) => {
+          writeHop(regs, dir, m.maxHops + i, m.nBuckets); false
+        })(r => HyperBall.registerRound(e, r.state)))
       // manifest LAST; source per the scaladoc (None unless re-verified)
       writeManifest(spark, dir, m.copy(maxHops = newMaxHops, source = source))
     } finally e.unpersist()
@@ -376,16 +363,6 @@ object HyperBallStore {
       .select(col("id"), col("reg"))
 
   // ---- internals ----
-
-  /** One max-merge round: ball(v) ⊇ ball(u) for every edge v → u
-    * (identical to [[HyperBall]]'s in-memory loop body).
-    */
-  private def round(e: DataFrame, regs: DataFrame): DataFrame = {
-    val nb = e.join(regs, col("dst") === col("id"))
-      .select(col("src").as("id"), col("reg"))
-    regs.unionAll(nb)
-      .groupBy(col("id")).agg(RegisterMaxAgg.registerMax(col("reg"), HyperBall.M).as("reg"))
-  }
 
   /** The wide `(id, __reg1 … __regD)` frame the shared readouts consume,
     * reassembled from the stored hop tables by id-joins (node-sized; the

@@ -41,8 +41,9 @@ object LinkGraph {
     * the iterative lanes run FASTER on 8 cores than 32 at sf0.1 —
     * PERF_r18 scaling 0.55). A pin every [[CheckpointEvery]] iterations
     * bounds plan depth and lineage for large `iters`; the declared lanes
-    * (iters ≤ 3) run as ONE job. One-JVM A/B (PrAb, sf0.1): chained
-    * 0.97 s vs per-iteration pins 1.15 s, rank tables bit-identical.
+    * (iters ≤ 3) run as ONE job. One-JVM A/B (sf0.1): chained 0.97 s vs
+    * per-iteration pins 1.15 s, rank tables bit-identical
+    * (OPTIMIZATION_r19.md §1).
     */
   private val CheckpointEvery = 8
 
@@ -108,6 +109,9 @@ object LinkGraph {
   private def centralityImpl(nodes: DataFrame, idCol: String, edges: DataFrame,
       maxHops: Int, maxReachPerRoot: Option[Long], maxEstimatedReach: Long): DataFrame = {
     require(maxHops >= 1, s"LinkGraph.centrality: maxHops $maxHops < 1")
+    // this loop stays off graft.Iterate: its cache()d rounds are
+    // materialized by the convergence count itself, so a driver pin
+    // would add one job per hop.
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
     // reached: (root, id, d) with d = min hops root → id; seed d = 0 rows
@@ -282,54 +286,52 @@ object LinkGraph {
     // iteration's zero-contribution lane — uncached, a chained plan would
     // re-scan the node source 2·iters times
     val ids = nodes.select(col(idCol).as("id")).cache()
+    val ewd = degreeEdges(edges).cache()
+    try {
+      val n = ids.count()
+      if (n == 0) throw new IllegalArgumentException("LinkGraph.pageRank: empty node set")
+      val teleport = ((dampDen - dampNum).toLong * scale / dampDen) / n
+      // iterations chain into one plan; see [[CheckpointEvery]]. The final
+      // pin materializes the whole chained tail as ONE job before the
+      // caches its lineage reads are freed
+      rankReadout(graft.Iterate(ids.withColumn("r", lit(scale / n)), iters, CheckpointEvery) { r =>
+        pageRankStep(r.state, ids, ewd, "r div __deg", teleport, dampNum, dampDen)
+      }, idCol, scale)
+    } finally { ids.unpersist(); ewd.unpersist() }
+  }
+
+  /** `(src, dst, __deg)`: the distinct non-loop edges with their source's
+    * out-degree, cached by [[pageRank]] as both the degree and the join
+    * side of every iteration (the one data-sized table in the loop).
+    */
+  private[graft] def degreeEdges(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct()
-    // (src, dst, deg) cached once: both the degree and the join side of
-    // every iteration (the one data-sized table in the loop)
-    val ewd = e.join(
-        e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"))
-      .cache()
-    val n = ids.count()
-    if (n == 0) { // fail-fast must not leak the caches
-      ids.unpersist()
-      ewd.unpersist()
-      throw new IllegalArgumentException("LinkGraph.pageRank: empty node set")
-    }
-    val teleport = ((dampDen - dampNum).toLong * scale / dampDen) / n
-    var ranks = ids.withColumn("r", lit(scale / n))
-    // iterations chain into one plan; see [[CheckpointEvery]]
-    var prevPinned: Option[DataFrame] = None
-    var i = 0
-    while (i < iters) {
-      // `div`, not `/`: Spark's `/` on longs is DOUBLE division — the
-      // fixed-point contract needs truncating integer division.
-      // The node set rides the aggregation as zero-contribution rows
-      // (optimization round 18): the r17 shape aggregated contributions
-      // and then LEFT-JOINED ids back in — one extra node-sized join per
-      // iteration; Σ over the union is the same exact Long sum, and
-      // every id is present by construction (guide §2.4)
-      val contrib = ranks.join(ewd, col("id") === col("src"))
-        .select(col("dst").as("id"), expr("r div __deg").as("__c"))
-      ranks = ids.withColumn("__c", lit(0L)).unionAll(contrib)
-        .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
-        .select(col("id"),
-          (lit(teleport) + expr(s"(${dampNum}L * __s) div ${dampDen}L")).as("r"))
-      i += 1
-      if (i % CheckpointEvery == 0 && i < iters) {
-        ranks = ranks.localCheckpoint(true)
-        prevPinned.foreach(graft.Pins.release)
-        prevPinned = Some(ranks)
-      }
-    }
-    // the final pin materializes the whole chained tail as ONE job and
-    // frees the caches the lineage reads
-    val out = ranks.localCheckpoint(true)
-    prevPinned.foreach(graft.Pins.release)
-    ids.unpersist()
-    ewd.unpersist()
-    out.select(col("id").as(idCol), col("r").as("rank_fp"),
-      (col("r").cast("double") / lit(scale.toDouble)).as("score"))
+    e.join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"))
   }
+
+  /** One [[pageRank]] iteration over `ranks (id, r)`, with `contrib` the
+    * per-edge contribution over the `ewd` columns. `div`, not `/`: Spark's
+    * `/` on longs is DOUBLE division — the fixed-point contract needs
+    * truncating integer division. The node set rides the aggregation as
+    * zero-contribution rows (optimization round 18): the r17 shape
+    * aggregated contributions and then LEFT-JOINED ids back in — one extra
+    * node-sized join per iteration; Σ over the union is the same exact
+    * Long sum, and every id is present by construction (guide §2.4).
+    */
+  private[graft] def pageRankStep(ranks: DataFrame, ids: DataFrame, ewd: DataFrame,
+      contrib: String, teleport: Long, dampNum: Int, dampDen: Int): DataFrame = {
+    val c = ranks.join(ewd, col("id") === col("src"))
+      .select(col("dst").as("id"), expr(contrib).as("__c"))
+    ids.withColumn("__c", lit(0L)).unionAll(c)
+      .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
+      .select(col("id"),
+        (lit(teleport) + expr(s"(${dampNum}L * __s) div ${dampDen}L")).as("r"))
+  }
+
+  private def rankReadout(ranks: DataFrame, idCol: String, scale: Long): DataFrame =
+    ranks.select(col("id").as(idCol), col("r").as("rank_fp"),
+      (col("r").cast("double") / lit(scale.toDouble)).as("score"))
 
   /** Personalized (seed-biased) PageRank — the TrustRank-family quality
     * signal (Gyöngyi/Garcia-Molina/Pedersen, VLDB 2004 — public): all
@@ -352,11 +354,7 @@ object LinkGraph {
       s"LinkGraph.pageRankPersonalized: damping $dampNum/$dampDen")
     require(scale >= 1 && scale <= Long.MaxValue / dampDen,
       s"LinkGraph.pageRankPersonalized: scale $scale would overflow the damping multiply")
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-    val ewd = e.join(
-        e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"))
-      .cache()
+    val ewd = degreeEdges(edges).cache()
     // (id, __seed) pinned once: consumed by the seed count, the initial
     // distribution, and every iteration's teleport lane
     val idsFlag = nodes.select(col(idCol).as("id"))
@@ -364,45 +362,29 @@ object LinkGraph {
         Seq("id"), "left")
       .select(col("id"), coalesce(col("__s"), lit(false)).as("__seed"))
       .localCheckpoint(true)
-    val nSeeds = idsFlag.where(col("__seed")).count()
-    if (nSeeds == 0) { // fail-fast must not leak the edge cache / id pin
-      ewd.unpersist()
-      graft.Pins.release(idsFlag)
-      throw new IllegalArgumentException(
+    try {
+      val nSeeds = idsFlag.where(col("__seed")).count()
+      if (nSeeds == 0) throw new IllegalArgumentException(
         "LinkGraph.pageRankPersonalized: no seed is in the node set")
-    }
-    val teleport = ((dampDen - dampNum).toLong * scale / dampDen) / nSeeds
-    var ranks = idsFlag.select(col("id"),
-      when(col("__seed"), lit(scale / nSeeds)).otherwise(lit(0L)).as("r"))
-    // iterations chain into one plan; see [[CheckpointEvery]]
-    var prevPinned: Option[DataFrame] = None
-    var i = 0
-    while (i < iters) {
-      // same union-into-the-aggregate shape as [[pageRank]] (r18): the
-      // node rows carry their seed flag and zero contribution; contrib
-      // rows carry false, so max(__seed) restores the flag exactly
-      // (every id has exactly one idsFlag row)
-      val contrib = ranks.join(ewd, col("id") === col("src"))
-        .select(col("dst").as("id"), expr("r div __deg").as("__c"), lit(false).as("__seed"))
-      ranks = idsFlag.select(col("id"), lit(0L).as("__c"), col("__seed"))
-        .unionAll(contrib)
-        .groupBy(col("id")).agg(sum(col("__c")).as("__s"), max(col("__seed")).as("__sd"))
-        .select(col("id"),
-          (when(col("__sd"), lit(teleport)).otherwise(lit(0L)) +
-            expr(s"(${dampNum}L * __s) div ${dampDen}L")).as("r"))
-      i += 1
-      if (i % CheckpointEvery == 0 && i < iters) {
-        ranks = ranks.localCheckpoint(true)
-        prevPinned.foreach(graft.Pins.release)
-        prevPinned = Some(ranks)
-      }
-    }
-    val out = ranks.localCheckpoint(true)
-    prevPinned.foreach(graft.Pins.release)
-    ewd.unpersist()
-    graft.Pins.release(idsFlag) // r18 kept this pinned past return — leak
-    out.select(col("id").as(idCol), col("r").as("rank_fp"),
-      (col("r").cast("double") / lit(scale.toDouble)).as("score"))
+      val teleport = ((dampDen - dampNum).toLong * scale / dampDen) / nSeeds
+      val init = idsFlag.select(col("id"),
+        when(col("__seed"), lit(scale / nSeeds)).otherwise(lit(0L)).as("r"))
+      // iterations chain into one plan; see [[CheckpointEvery]]
+      rankReadout(graft.Iterate(init, iters, CheckpointEvery) { r =>
+        // same union-into-the-aggregate shape as [[pageRankStep]]: the
+        // node rows carry their seed flag and zero contribution; contrib
+        // rows carry false, so max(__seed) restores the flag exactly
+        // (every id has exactly one idsFlag row)
+        val contrib = r.state.join(ewd, col("id") === col("src"))
+          .select(col("dst").as("id"), expr("r div __deg").as("__c"), lit(false).as("__seed"))
+        idsFlag.select(col("id"), lit(0L).as("__c"), col("__seed"))
+          .unionAll(contrib)
+          .groupBy(col("id")).agg(sum(col("__c")).as("__s"), max(col("__seed")).as("__sd"))
+          .select(col("id"),
+            (when(col("__sd"), lit(teleport)).otherwise(lit(0L)) +
+              expr(s"(${dampNum}L * __s) div ${dampDen}L")).as("r"))
+      }, idCol, scale)
+    } finally { ewd.unpersist(); graft.Pins.release(idsFlag) }
   }
 
   /** [[pageRank]] with per-edge Long weights (`edges: (src, dst,
@@ -423,66 +405,36 @@ object LinkGraph {
     require(scale >= 1 && scale <= Long.MaxValue / dampDen,
       s"LinkGraph.pageRankWeighted: scale $scale would overflow the damping multiply")
     val ids = nodes.select(col(idCol).as("id")).cache() // see pageRank
-
     val e = edges.select(col("src"), col("dst"), col("weight").cast("long").as("weight"))
       .where(col("src") =!= col("dst") && col("weight") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
     val ewd = e.join(
         e.groupBy(col("src")).agg(sum(col("weight")).as("__wsum")), Seq("src"))
       .cache()
-    // overflow guard (fail fast, riding the cached edge table): the
-    // per-edge product rank·weight is bounded by scale·maxW, which must
-    // stay under Long.MaxValue with headroom for the damping multiply
-    val maxW = ewd.agg(max(col("__wsum"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    if (maxW > maxSourceWeight) {
-      ewd.unpersist()
-      throw new IllegalArgumentException(
+    try {
+      // overflow guard (fail fast, riding the cached edge table): the
+      // per-edge product rank·weight is bounded by scale·maxW, which must
+      // stay under Long.MaxValue with headroom for the damping multiply
+      val maxW = ewd.agg(max(col("__wsum"))).head() match {
+        case r if r.isNullAt(0) => 0L
+        case r => r.getLong(0)
+      }
+      if (maxW > maxSourceWeight) throw new IllegalArgumentException(
         s"LinkGraph.pageRankWeighted: max per-source weight $maxW exceeds " +
           s"maxSourceWeight $maxSourceWeight - rank*weight products at scale $scale " +
           s"could overflow 64-bit (bound: scale*maxW <= ${Long.MaxValue}). Rescale " +
           "the weights (only ratios within a source matter) or raise maxSourceWeight " +
           "explicitly after checking the product bound.")
-    }
-    if (maxW != 0 && scale > Long.MaxValue / maxW) {
-      ewd.unpersist() // fail-fast must not leak the edge cache
-      throw new IllegalArgumentException(
+      if (maxW != 0 && scale > Long.MaxValue / maxW) throw new IllegalArgumentException(
         s"LinkGraph.pageRankWeighted: scale $scale * max weight $maxW overflows 64-bit")
-    }
-    val n = ids.count()
-    if (n == 0) {
-      ids.unpersist()
-      ewd.unpersist()
-      throw new IllegalArgumentException("LinkGraph.pageRankWeighted: empty node set")
-    }
-    val teleport = ((dampDen - dampNum).toLong * scale / dampDen) / n
-    var ranks = ids.withColumn("r", lit(scale / n))
-    // iterations chain into one plan; see [[CheckpointEvery]]
-    var prevPinned: Option[DataFrame] = None
-    var i = 0
-    while (i < iters) {
-      // same union-into-the-aggregate shape as [[pageRank]] (r18)
-      val contrib = ranks.join(ewd, col("id") === col("src"))
-        .select(col("dst").as("id"), expr("(r * weight) div __wsum").as("__c"))
-      ranks = ids.withColumn("__c", lit(0L)).unionAll(contrib)
-        .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
-        .select(col("id"),
-          (lit(teleport) + expr(s"(${dampNum}L * __s) div ${dampDen}L")).as("r"))
-      i += 1
-      if (i % CheckpointEvery == 0 && i < iters) {
-        ranks = ranks.localCheckpoint(true)
-        prevPinned.foreach(graft.Pins.release)
-        prevPinned = Some(ranks)
-      }
-    }
-    val out = ranks.localCheckpoint(true)
-    prevPinned.foreach(graft.Pins.release)
-    ids.unpersist()
-    ewd.unpersist()
-    out.select(col("id").as(idCol), col("r").as("rank_fp"),
-      (col("r").cast("double") / lit(scale.toDouble)).as("score"))
+      val n = ids.count()
+      if (n == 0) throw new IllegalArgumentException("LinkGraph.pageRankWeighted: empty node set")
+      val teleport = ((dampDen - dampNum).toLong * scale / dampDen) / n
+      // iterations chain into one plan; see [[CheckpointEvery]]
+      rankReadout(graft.Iterate(ids.withColumn("r", lit(scale / n)), iters, CheckpointEvery) { r =>
+        pageRankStep(r.state, ids, ewd, "(r * weight) div __wsum", teleport, dampNum, dampDen)
+      }, idCol, scale)
+    } finally { ids.unpersist(); ewd.unpersist() }
   }
 
   /** Shared-span document graph: symmetric (src, dst) edges between
@@ -601,8 +553,14 @@ object LinkGraph {
     * the edge set is a fixed point iff every `hi` maps to exactly one
     * distinct `lo` and no `lo` appears as a `hi` — which forces each
     * component to be a star rooted at its minimum (a root that were not
-    * the component min would appear on both sides). Two node-sized
-    * aggregations per round, short-circuited with `limit(1)`.
+    * the component min would appear on both sides). The probe is one
+    * aggregation over a 2|E|-row union, short-circuited with `limit(1)`,
+    * and runs only on rounds that leave the edge count unchanged.
+    *
+    * `maxRounds` counts the rounds run, and at least one round runs even
+    * on an input that is already a star (the probe only follows a round),
+    * so a bound must leave room for that round. Exhausting it throws an
+    * `IllegalStateException` rather than return a partial labeling.
     *
     * Returns `(idCol, rep, component_size)` for every node in `nodes`;
     * isolated nodes report `rep = id, component_size = 1`. Works for any
@@ -612,55 +570,44 @@ object LinkGraph {
   def connectedComponents(nodes: DataFrame, idCol: String, edges: DataFrame,
       maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, s"LinkGraph.connectedComponents: maxRounds $maxRounds < 1")
-    var e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .distinct()
-      .localCheckpoint(true)
-    var cnt = e.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      // each star pass is consumed twice (its own min-agg + join), so pin
-      // both — otherwise the per-round plan executes the pass twice; the
-      // intermediate pin and the superseded round are released explicitly
-      // (Dataset.unpersist is a no-op for checkpoints — graft.Pins).
-      // Optimization round 18 note: a window-based one-pass star variant
-      // (no ls pin, 2 jobs/round) A/B-measured 25-40% SLOWER in one JVM
-      // (CcAb: 1.63 s vs 2.02-2.27 s) — WindowExec's per-round sort costs
-      // more than the hash-agg + broadcast join it replaced. Round 19: a
-      // fused smallStar(largeStar(e)) single-checkpoint round also lost
-      // (CcAb2: exchange reuse never fired, largeStar ran twice).
-      val ls = largeStar(e).localCheckpoint(true)
-      val next = smallStar(ls).localCheckpoint(true)
-      graft.Pins.release(ls)
-      graft.Pins.release(e)
-      e = next
-      // convergence = the EXACT star-fixpoint probe, but gated behind
-      // edge-count stability (optimization round 19): the star passes
-      // can only reach their fixpoint through a round that leaves the
-      // edge count unchanged (a fixpoint round leaves the SET unchanged),
-      // and the count is a near-free job over the just-pinned checkpoint,
-      // while isStarSet is a full 2|E| shuffle+aggregation. Probing only
-      // count-stable rounds ran the expensive probe ONCE instead of
-      // every round (CcAb2 one-JVM A/B: 2.15 s vs 3.27 s, labels
-      // identical; a count-stable non-fixpoint round just pays one
-      // extra probe and keeps looping — exactness is untouched).
-      // Already-star inputs run one extra round: the passes are
-      // idempotent at the fixpoint, so the set (and labels) are identical.
+    val canon = canonicalEdges(edges).localCheckpoint(true)
+    var cnt = canon.count()
+    // convergence = the EXACT star-fixpoint probe, but gated behind
+    // edge-count stability (optimization round 19): the star passes can
+    // only reach their fixpoint through a round that leaves the edge count
+    // unchanged (a fixpoint round leaves the SET unchanged), and the count
+    // is a near-free job over the just-pinned checkpoint, while isStarSet
+    // is a full 2|E| shuffle+aggregation. Probing only count-stable rounds
+    // ran the expensive probe ONCE instead of every round (one-JVM A/B:
+    // 2.15 s vs 3.27 s, labels identical, OPTIMIZATION_r19.md §2); a
+    // count-stable non-fixpoint round just pays one extra probe and keeps
+    // looping — exactness is untouched. Already-star inputs run one extra
+    // round: the passes are idempotent at the fixpoint, so the set (and
+    // labels) are identical.
+    def starFixpoint(next: DataFrame, round: Int): Boolean = {
       val c = next.count()
-      if (c == cnt) converged = isStarSet(e)
+      val star = c == cnt && isStarSet(next)
       cnt = c
-      rounds += 1
+      star
     }
     // the alternation provably converges in O(log² n) rounds; a graph
     // that exhausts maxRounds means a bound set far too low — fail fast
     // rather than return a partially-contracted (wrong) labeling
-    if (!converged) throw new IllegalStateException(
-      s"LinkGraph.connectedComponents: not converged after $maxRounds rounds - " +
-        "the alternating algorithm needs O(log^2 n) rounds; raise maxRounds " +
-        "(default 30 covers any graph that fits on disk).")
+    val e = graft.Iterate(canon, maxRounds, done = starFixpoint,
+      exhausted = Some(s"LinkGraph.connectedComponents: not converged after $maxRounds " +
+        "rounds - the alternating algorithm needs O(log^2 n) rounds; raise maxRounds " +
+        "(default 30 covers any graph that fits on disk).")) { r =>
+      // each star pass is consumed twice (its own min-agg + join), so pin
+      // both — otherwise the per-round plan executes the pass twice.
+      // Optimization round 18 note: a window-based one-pass star variant
+      // (no ls pin, 2 jobs/round) A/B-measured 25-40% SLOWER in one JVM
+      // (1.63 s vs 2.02-2.27 s) — WindowExec's per-round sort costs more
+      // than the hash-agg + broadcast join it replaced. Round 19: a fused
+      // smallStar(largeStar(e)) single-checkpoint round also lost
+      // (exchange reuse never fired, largeStar ran twice —
+      // OPTIMIZATION_r19.md §2).
+      smallStar(r.pin(largeStar(r.state)))
+    }
     // at the fixed point each component is a star (root = component min)
     // and every hi maps to exactly ONE lo (the isStarSet condition), so
     // component_size = the root's star degree + 1: one aggregation over e
@@ -693,7 +640,9 @@ object LinkGraph {
     *
     * `priorLabels` is a previous output of this or [[connectedComponents]]
     * (`(idCol, rep, …)` — extra columns ignored); `nodes` is the FULL
-    * node set the output should cover (old ∪ new).
+    * node set the output should cover (old ∪ new). `maxRounds` counts the
+    * rounds run, as in [[connectedComponents]]: at least one round runs
+    * even when the prior stars plus the new edges already form stars.
     */
   def connectedComponentsIncremental(nodes: DataFrame, idCol: String,
       priorLabels: DataFrame, newEdges: DataFrame, maxRounds: Int = 30): DataFrame = {
@@ -724,46 +673,42 @@ object LinkGraph {
       maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"LinkGraph.kCore: k $k < 1")
     require(maxRounds >= 1, s"LinkGraph.kCore: maxRounds $maxRounds < 1")
-    var active = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
     // round-19 note: a one-query peel round ("keep edges whose BOTH
     // endpoints have degree ≥ k" via two degree joins) was tried and
     // REVERTED — the degree aggregate is consumed by both join sides and
     // exchange reuse did not fire, so the lane went from 34 to 44 AQE
-    // jobs (LaneStats). The weak-node pin below computes degrees once.
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < maxRounds) {
-      val deg = active.select(col("a").as("id")).unionAll(active.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("__d"))
-      val weak = deg.where(col("__d") < k).select(col("id")).localCheckpoint(true)
-      if (weak.isEmpty) { graft.Pins.release(weak); stable = true }
-      else {
-        val next = active
-          .join(weak.select(col("id").as("a")), Seq("a"), "left_anti")
-          .join(weak.select(col("id").as("b")), Seq("b"), "left_anti")
-          .localCheckpoint(true)
-        graft.Pins.release(weak)
-        graft.Pins.release(active)
-        active = next
-        rounds += 1
-      }
+    // jobs (OPTIMIZATION_r19.md §3). The weak-node pin computes degrees
+    // once; a round that finds no weak node is the fixed point.
+    val active = graft.Iterate(undirectedEdges(edges).localCheckpoint(true), maxRounds,
+      exhausted = Some(s"LinkGraph.kCore: peel did not stabilize within $maxRounds " +
+        "rounds - raise maxRounds (the peel depth is bounded by the node count).")) { r =>
+      val weak = r.pin(degrees(r.state, "__d").where(col("__d") < k).select(col("id")))
+      if (weak.isEmpty) r.state
+      else r.state
+        .join(weak.select(col("id").as("a")), Seq("a"), "left_anti")
+        .join(weak.select(col("id").as("b")), Seq("b"), "left_anti")
     }
-    if (!stable) throw new IllegalStateException(
-      s"LinkGraph.kCore: peel did not stabilize within $maxRounds rounds - " +
-        "raise maxRounds (the peel depth is bounded by the node count).")
-    val coreDeg = active.select(col("a").as("id")).unionAll(active.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("core_degree"))
     nodes.select(col(idCol))
-      .join(coreDeg.select(col("id").as(idCol), col("core_degree")), Seq(idCol), "left")
+      .join(degrees(active, "core_degree").withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol),
         col("core_degree").isNotNull.as("in_core"),
         coalesce(col("core_degree"), lit(0L)).as("core_degree"))
   }
+
+  /** Canonical undirected edge set `(a, b)` with a < b: direction and
+    * duplicates collapsed, self-loops dropped.
+    */
+  private def undirectedEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
+  /** `(id, <name>)`: each node's degree over an [[undirectedEdges]] set. */
+  private def degrees(und: DataFrame, name: String): DataFrame =
+    und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as(name))
 
   /** Label-propagation community detection — SYNCHRONOUS rounds with a
     * deterministic tie-break (Raghavan/Albert/Kumara 2007, made
@@ -787,16 +732,12 @@ object LinkGraph {
   def labelPropagation(nodes: DataFrame, idCol: String, edges: DataFrame,
       iters: Int): DataFrame = {
     require(iters >= 1, s"LinkGraph.labelPropagation: iters $iters < 1")
-    import org.apache.spark.sql.expressions.Window
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
-    val ids = nodes.select(col(idCol).as("id"))
-    var labels = ids.withColumn("lbl", col("id")).localCheckpoint(true)
-    var prevPinned = labels // see pageRank's superseded-checkpoint note
-    var i = 0
-    while (i < iters) {
+    val init = nodes.select(col(idCol).as("id")).withColumn("lbl", col("id")).localCheckpoint(true)
+    val labels = try graft.Iterate(init, iters) { r =>
       val counts = e
-        .join(labels.select(col("id").as("dst"), col("lbl").as("nlbl")), Seq("dst"))
+        .join(r.state.select(col("id").as("dst"), col("lbl").as("nlbl")), Seq("dst"))
         .groupBy(col("src"), col("nlbl")).agg(count(lit(1)).as("__c"))
       // argmax as min_by over (−count, label) instead of the r17
       // row_number window (optimization round 18): same deterministic
@@ -808,14 +749,9 @@ object LinkGraph {
       val picked = counts
         .groupBy(col("src").as("id"))
         .agg(min_by(col("nlbl"), struct(-col("__c"), col("nlbl"))).as("__new"))
-      labels = labels.join(picked, Seq("id"), "left")
+      r.state.join(picked, Seq("id"), "left")
         .select(col("id"), coalesce(col("__new"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      graft.Pins.release(prevPinned)
-      prevPinned = labels
-      i += 1
-    }
-    e.unpersist()
+    } finally e.unpersist()
     val sized = labels.join(
       labels.groupBy(col("lbl")).agg(count(lit(1)).as("community_size")), Seq("lbl"))
     sized.select(col("id").as(idCol), col("lbl").as("community"), col("community_size"))
@@ -827,19 +763,11 @@ object LinkGraph {
     * earliest warning that pair joins downstream need tighter df caps).
     * Exact integers end to end; two map-side-combined aggregations.
     */
-  def degreeDistribution(nodes: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val deg = und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("__d"))
+  def degreeDistribution(nodes: DataFrame, idCol: String, edges: DataFrame): DataFrame =
     nodes.select(col(idCol).as("id"))
-      .join(deg, Seq("id"), "left")
+      .join(degrees(undirectedEdges(edges), "__d"), Seq("id"), "left")
       .select(coalesce(col("__d"), lit(0L)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
-  }
 
   /** Degree assortativity (Newman 2002, public): the Pearson correlation
     * of degrees across edge ends — positive for social-style graphs
@@ -854,13 +782,8 @@ object LinkGraph {
     * `(n_edges, r)`.
     */
   def degreeAssortativity(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val deg = und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+    val und = undirectedEdges(edges)
+    val deg = degrees(und, "d")
     val withD = und
       .join(deg.select(col("id").as("a"), col("d").as("__da")), Seq("a"))
       .join(deg.select(col("id").as("b"), col("d").as("__db")), Seq("b"))
@@ -889,12 +812,20 @@ object LinkGraph {
         }).as("r"))
   }
 
+  /** Canonical `(hi, lo)` edge set with hi > lo: the components input. */
+  private[graft] def canonicalEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst"))
+      .select(greatest(col("src"), col("dst")).as("hi"),
+        least(col("src"), col("dst")).as("lo"))
+      .distinct()
+
   /** One large-star pass over canonical (hi > lo) edges: for each node u
     * (both endpoints act as centers), every strictly-larger neighbor v
     * is re-pointed at m(u) = min(Γ(u) ∪ {u}). Output is canonical again
     * (v > u ≥ m), self-loop-free by construction.
     */
-  private def largeStar(e: DataFrame): DataFrame = {
+  private[graft] def largeStar(e: DataFrame): DataFrame = {
     val sym = e.select(col("hi").as("u"), col("lo").as("v"))
       .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
     val m = sym.groupBy(col("u"))
@@ -933,9 +864,12 @@ object LinkGraph {
     * semi-join would cost).
     */
   private def isStarSet(e: DataFrame): Boolean = {
-    // `e` is always a DISTINCT (hi, lo) set (canonicalization and every
-    // star pass end with .distinct()), so "hi maps to >1 distinct lo" ≡
-    // "hi appears in >1 rows" — a plain row count per hi. The r17 form
+    // `e` is always a DISTINCT (hi, lo) set: canonicalization and
+    // smallStar both end with .distinct(), and those are the only inputs
+    // this probe sees. largeStar output has NOT been distinct since round
+    // 19 (it dropped its own distinct), so it must never be probed
+    // directly. Distinctness makes "hi maps to >1 distinct lo" ≡ "hi
+    // appears in >1 rows" — a plain row count per hi. The r17 form
     // counted DISTINCT lo per hi, which planned an Expand + two-phase
     // aggregation over the 2|E| union every round; sum/min/max is one
     // codegen hash aggregate (optimization round 18, guide §2.3 — the
@@ -984,14 +918,8 @@ object LinkGraph {
       s"LinkGraph.triangleStats: maxEstimatedWedges $maxEstimatedWedges < 1")
     // canonical undirected edge set, pinned: consumed by the degree agg,
     // the orientation join, and the wedge-closing join
-    val und = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+    val und = undirectedEdges(edges).localCheckpoint(true)
+    val deg = degrees(und, "deg")
     val oriented = und
       .join(deg.select(col("id").as("a"), col("deg").as("__da")), Seq("a"))
       .join(deg.select(col("id").as("b"), col("deg").as("__db")), Seq("b"))

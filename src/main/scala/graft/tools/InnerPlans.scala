@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.GraftSession
-import graft.text.LinkGraph
+import graft.text.{HyperBall, LinkGraph}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -10,7 +11,10 @@ import java.nio.file.{Files, Paths}
   * every round with localCheckpoint, so their `.explain` shows only the
   * final readout over an ExistingRDD. This probe explains the INNER
   * shapes the loops execute — the edge build and one loop round — which
-  * is where the per-iteration Exchange counts live.
+  * is where the per-iteration Exchange counts live. The round bodies are
+  * the operators' own (`LinkGraph.pageRankStep`, `LinkGraph.largeStar`,
+  * `HyperBall.registerRound`), so a dump cannot drift from the shipped
+  * loop.
   *
   * usage: InnerPlans <outDir> <suffix>
   */
@@ -24,11 +28,13 @@ object InnerPlans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    def dump(name: String, df: DataFrame): Unit = {
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
-      val nEx = txt.linesIterator.count(_.trim.startsWith("Exchange"))
-      System.err.println(s"[innerplans] $name -> ${name}_$suffix.txt ($nEx Exchange)")
+      // formatted explain draws nodes as "+- Exchange (9)" and details
+      // them as "(9) Exchange", so count mentions, the plans/ convention
+      val nEx = txt.linesIterator.count(_.contains("Exchange"))
+      System.err.println(s"[innerplans] $name -> ${name}_$suffix.txt ($nEx Exchange mentions)")
     }
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -37,66 +43,32 @@ object InnerPlans {
     val edges = LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 5, maxDf = 32)
     dump("inner_sharedSpanEdges", edges)
 
-    // 2. one pageRank iteration body, the SHIPPED r18/r19 shape (union-
-    //    into-aggregate; since r19 iterations chain with no per-iteration
-    //    checkpoint, so the body below is what each chained step adds).
-    //    Kept in sync with LinkGraph.pageRank by hand (ADVICE r18: the
-    //    old dump showed the r17 left-join body, not the shipped one).
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-    val ewd = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"))
-      .cache()
+    // 2. one pageRank iteration body, LinkGraph.pageRankStep itself (the
+    //    iterations chain with no per-iteration checkpoint, so the body
+    //    below is what each chained step adds)
+    val ewd = LinkGraph.degreeEdges(edges).cache()
     val ids = docs.select(col("doc_id").as("id"))
-    val ranks0 = ids.withColumn("r", lit(1000000L)).localCheckpoint(true)
-    val contrib = ranks0.join(ewd, col("id") === col("src"))
-      .select(col("dst").as("id"), expr("r div __deg").as("__c"))
-    val iter = ids.withColumn("__c", lit(0L)).unionAll(contrib)
-      .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
-      .select(col("id"), (lit(7L) + expr("(85L * __s) div 100L")).as("r"))
-    dump("inner_pagerank_round", iter)
-    // 2b. three chained iterations — the r19 whole-loop plan the declared
+    def prStep(ranks: DataFrame) = LinkGraph.pageRankStep(ranks, ids, ewd, "r div __deg",
+      teleport = 7L, dampNum = 85, dampDen = 100)
+    dump("inner_pagerank_round",
+      prStep(ids.withColumn("r", lit(1000000L)).localCheckpoint(true)))
+    // 2b. three chained iterations — the whole-loop plan the declared
     //     3-iter lanes execute as ONE job
-    var ranksC = ids.withColumn("r", lit(1000000L))
-    for (_ <- 1 to 3) {
-      val c = ranksC.join(ewd, col("id") === col("src"))
-        .select(col("dst").as("id"), expr("r div __deg").as("__c"))
-      ranksC = ids.withColumn("__c", lit(0L)).unionAll(c)
-        .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
-        .select(col("id"), (lit(7L) + expr("(85L * __s) div 100L")).as("r"))
-    }
-    dump("inner_pagerank_chained3", ranksC)
+    dump("inner_pagerank_chained3",
+      (1 to 3).foldLeft(ids.withColumn("r", lit(1000000L)))((r, _) => prStep(r)))
     ewd.unpersist()
 
-    // 3. one connected-components round (largeStar then smallStar) over
-    //    the canonicalized edge set — largeStar in its r19 lean shape
-    //    (e joined directly, no per-round distinct; kept in sync with
-    //    LinkGraph.largeStar by hand)
-    val canon = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .distinct().localCheckpoint(true)
-    val sym = canon.select(col("hi").as("u"), col("lo").as("v"))
-      .unionAll(canon.select(col("lo").as("u"), col("hi").as("v")))
-    val m = sym.groupBy(col("u")).agg(min(col("v")).as("__mn"))
-      .select(col("u"), least(col("u"), col("__mn")).as("__m"))
-    val ls = canon.join(m, col("lo") === col("u"))
-      .select(col("hi"), col("__m").as("lo"))
-    dump("inner_components_largestar", ls)
+    // 3. one connected-components largeStar pass over the canonicalized
+    //    edge set
+    dump("inner_components_largestar",
+      LinkGraph.largeStar(LinkGraph.canonicalEdges(edges).localCheckpoint(true)))
 
-    // 4. one HyperBall round (register pull + max-merge) — the SHIPPED
-    //    RegisterMaxAgg TypedImperativeAggregate (ADVICE r18: the old
-    //    dump ran the superseded udaf RegisterMaxAggregator)
-    val regs0 = ids.select(col("id"),
-        graft.text.HyperBall.initRegisters(col("id")).as("reg"))
+    // 4. one HyperBall round (register pull + max-merge)
+    val e = edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")).distinct()
+    val regs0 = ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg"))
       .localCheckpoint(true)
-    val nb = e.join(regs0, col("dst") === col("id"))
-      .select(col("src").as("id"), col("reg"))
-    val round = regs0.unionAll(nb)
-      .groupBy(col("id"))
-      .agg(graft.functions.RegisterMaxAgg
-        .registerMax(col("reg"), graft.text.HyperBall.M).as("reg"))
-    dump("inner_hyperball_round", round)
+    dump("inner_hyperball_round", HyperBall.registerRound(e, regs0))
 
     spark.stop()
   }

@@ -487,51 +487,36 @@ object PlanCheck {
       mustContain = Seq("partial_min"),
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
     // one PageRank iteration un-pinned (the gate plan hides the loop
-    // behind localCheckpoint): contributions are an equi join on src with
-    // a map-side-combined sum — |E| rows shuffle, nothing quadratic
+    // behind localCheckpoint), LinkGraph's own round body: contributions
+    // are an equi join on src with a map-side-combined sum — |E| rows
+    // shuffle, nothing quadratic
     BuildCheck(
       "pagerank_iteration",
       (s, dir) => {
         import org.apache.spark.sql.functions._
+        import graft.text.LinkGraph
         val docs = s.read.parquet(s"$dir/documents.parquet")
-        val edges = graft.text.LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 5, maxDf = 32)
-          .where(col("src") =!= col("dst")).distinct()
-        val ewd = edges.join(
-          edges.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"))
-        val ranks = docs.select(col("doc_id").as("id")).withColumn("r", lit(1000000L))
-        // r18 iteration body: the node set rides the aggregation as
-        // zero-contribution rows instead of a post-agg left join
-        val contrib = ranks.join(ewd, col("id") === col("src"))
-          .select(col("dst").as("id"), expr("r div __deg").as("__c"))
-        ranks.select(col("id")).withColumn("__c", lit(0L)).unionAll(contrib)
-          .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
+        val edges = LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 5, maxDf = 32)
+        val ids = docs.select(col("doc_id").as("id"))
+        LinkGraph.pageRankStep(ids.withColumn("r", lit(1000000L)), ids,
+          LinkGraph.degreeEdges(edges), "r div __deg", teleport = 7L, dampNum = 85, dampDen = 100)
       },
       mustContain = Seq("partial_sum"),
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
-    // one large-star round un-pinned (connectedComponents pins each round
+    // one large-star pass un-pinned (connectedComponents pins each round
     // behind localCheckpoint): neighborhood minimum is a map-side-combined
     // min over the symmetric view, re-pointing is an equi join on the
     // center — |E| rows per round, nothing quadratic
     BuildCheck(
       "components_large_star",
       (s, dir) => {
-        import org.apache.spark.sql.functions._
+        import graft.text.LinkGraph
         val docs = s.read.parquet(s"$dir/documents.parquet")
-        val e = graft.text.LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 5, maxDf = 32)
-          .where(col("src") =!= col("dst"))
-          .select(greatest(col("src"), col("dst")).as("hi"),
-            least(col("src"), col("dst")).as("lo"))
-          .distinct()
-        val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-          .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-        val m = sym.groupBy(col("u")).agg(min(col("v")).as("__mn"))
-          .select(col("u"), least(col("u"), col("__mn")).as("__m"))
-        sym.join(m, Seq("u")).where(col("v") > col("u"))
-          .select(col("v").as("hi"), col("__m").as("lo")).distinct()
+        LinkGraph.largeStar(LinkGraph.canonicalEdges(
+          LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 5, maxDf = 32)))
       },
       mustContain = Seq("partial_min"),
-      mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin"))
-    ,
+      mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
     // round 15 — HeavyHitters broadcast guard: when the candidate count
     // crosses the limit (forced to 0 here) the exact-recount semi-join
     // must take the hinted shuffle-hash route — never a broadcast of a

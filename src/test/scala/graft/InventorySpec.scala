@@ -1,0 +1,28 @@
+package graft
+
+import graft.queries._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The declared query inventory is six maps merged with `++`, which
+  * silently keeps the LAST of two equal keys: a duplicate name would
+  * shadow a query, and an oracle entry without a query would never run.
+  */
+class InventorySpec extends AnyFunSuite {
+
+  private val maps = Seq(
+    "Core" -> CoreQueries.queries.keySet, "Relational" -> RelationalQueries.queries.keySet,
+    "Function" -> FunctionQueries.queries.keySet, "Llm" -> LlmQueries.queries.keySet,
+    "Extra" -> ExtraQueries.queries.keySet, "Stat" -> StatQueries.queries.keySet)
+
+  test("query keys are unique across the six inventory maps") {
+    val dups = maps.flatMap { case (m, ks) => ks.toSeq.map(_ -> m) }
+      .groupBy(_._1).collect { case (k, owners) if owners.size > 1 => k -> owners.map(_._2) }
+    assert(dups.isEmpty, s"query keys declared in more than one map: $dups")
+    assert(SparkEntry.queries.size == maps.map(_._2.size).sum)
+  }
+
+  test("every oracle key names a query") {
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
+  }
+}

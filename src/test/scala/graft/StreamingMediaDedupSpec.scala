@@ -68,8 +68,12 @@ class StreamingMediaDedupSpec extends SparkSpec {
     // replay of a committed batch overwrites its own output
     val batch1 = Seq((4L, footage(0, 5)), (5L, footage(77, 0)), (6L, "junk".getBytes("UTF-8")))
       .toDF("vid_id", "payload")
+    val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
     StreamingMediaDedup.applyBatch(batch1, 1L, "payload", "vid_id", survDir, fpDir,
       n = 4, minMatches = 3)
+    // a micro-batch releases every pin it made (survivors, batchGroups' members)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinsBefore
+    assert(leaked.isEmpty, s"applyBatch left pinned RDDs $leaked")
     val replayed = StreamingMediaDedup.readSurvivors(spark, survDir)
       .select($"vid_id").as[Long].collect().sorted.toSeq
     assert(replayed == Seq(1L, 2L, 5L, 6L), s"replay changed survivors: $replayed")

@@ -46,4 +46,17 @@ class TopKAggSpec extends SparkSpec {
     // score ties break to ascending id
     assert(out == Seq(("a", 7L, 2.0, 1L), ("a", 10L, 2.0, 2L), ("b", 1L, 1.0, 1L)), out)
   }
+
+  test("TopKAgg: a NaN score fails with a typed error naming the id; nulls are skipped") {
+    val nan = Seq(("a", 2.0, 1L), ("a", Double.NaN, 4L), ("a", 1.0, 2L)).toDF("key", "score", "id")
+    val ex = intercept[Exception](TopKPerKey.topK(nan, "key", "score", "id", 2).collect())
+    val cause = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalArgumentException => e }
+    assert(cause.exists(_.getMessage.contains("NaN score for id 4")), ex)
+    val withNull = Seq(("a", Some(2.0), 1L), ("a", None, 4L), ("a", Some(1.0), 2L))
+      .toDF("key", "score", "id")
+    val out = TopKPerKey.topK(withNull, "key", "score", "id", 5)
+      .collect().map(r => (r.getLong(1), r.getLong(3))).toSeq
+    assert(out.sortBy(_._2) == Seq((1L, 1L), (2L, 2L)), out)
+  }
 }
