@@ -13,8 +13,10 @@ import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field,
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.util.DictionaryUtility
 import org.apache.commons.compress.compressors.lz4.BlockLZ4CompressorInputStream
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.SerializableWritable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
@@ -62,8 +64,8 @@ import scala.jdk.CollectionConverters._
   * Each batch converts Arrow vectors DIRECTLY to
   * `InternalRow` (single conversion; `UTF8String`/`ArrayData` values, no
   * external-Row detour — measured 1.27× the r6 double-conversion read,
-  * 1.44 M rows/s on sf0.1 lineitem; `graft.tools.ArrowReadBench`, numbers
-  * in BASELINE.md). COLUMN pruning DOES reach IPC files: `read(spark,
+  * 1.44 M rows/s on sf0.1 lineitem; numbers in BASELINE.md). COLUMN
+  * pruning DOES reach IPC files: `read(spark,
   * path, columns)` reads only the selected fields' buffer byte ranges
   * (the record-batch flatbuffer metadata carries every buffer's
   * offset/length, so unselected columns cost zero body IO, zero
@@ -78,6 +80,9 @@ import scala.jdk.CollectionConverters._
   * over a migrated store, the one-time `read → write parquet` (or
   * re-write through [[write]], which adds stats) remains the intended
   * path.
+  *
+  * Every `read`, `readFiltered` and `readPartial` overload is a front for
+  * the `arrowipc` DataSourceV2 table ([[ArrowIpcDataSource]]).
   */
 object ArrowIpc {
 
@@ -100,8 +105,8 @@ object ArrowIpc {
   private val LegacyBlockKey = "KNIME:basic:usingLz4Block"
 
   /** Local-mode IO diagnostic: total bytes read through
-    * [[HadoopSeekableChannel]] in this JVM. Specs and
-    * [[graft.tools.ArrowReadBench]] use it to PROVE column pruning skips
+    * [[HadoopSeekableChannel]] in this JVM. Specs and the benchmark's
+    * `sources.body_bytes_read` use it to PROVE column pruning skips
     * unselected buffer bytes (meaningful in local mode only, where every
     * task shares the JVM; on a cluster each executor counts its own).
     */
@@ -112,7 +117,7 @@ object ArrowIpc {
     *
     * SINGLE-QUERY assumption: the counter is JVM-global, so the delta
     * attributes every concurrent channel read to `f`. Callers (specs,
-    * ScaleProbe, ArrowReadBench) run one query at a time with no
+    * ScaleProbe, perfbench) run one query at a time with no
     * background Spark jobs; a parallel test runner would make byte
     * assertions flaky — keep suites that assert on this sequential.
     */
@@ -194,7 +199,7 @@ object ArrowIpc {
     * Every file must share one schema (the reference's store invariant).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    readImpl(spark, path, selected = None, filters = Nil)
+    readTable(spark, path, partial = false, columns = None, filters = Nil)
 
   /** Column-pruned read: only `columns` (project/permute/duplicate —
     * [[graft.table.KTable.selectColumns]] semantics) are materialized,
@@ -211,7 +216,7 @@ object ArrowIpc {
     * without a format conversion.
     */
   def read(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    readImpl(spark, path, selected = Some(columns.toArray), filters = Nil)
+    readTable(spark, path, partial = false, Some(columns), filters = Nil)
 
   /** Column-pruned AND filter-skipped read: on top of the `columns`
     * contract above, record batches whose [[BatchStatsKey]] statistics
@@ -226,12 +231,12 @@ object ArrowIpc {
     */
   def read(spark: SparkSession, path: String, columns: Seq[String],
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
-    readImpl(spark, path, selected = Some(columns.toArray), filters = filters)
+    readTable(spark, path, partial = false, Some(columns), filters)
 
   /** Full-width filter-skipped read (all columns, batch skipping). */
   def readFiltered(spark: SparkSession, path: String,
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
-    readImpl(spark, path, selected = None, filters = filters)
+    readTable(spark, path, partial = false, columns = None, filters)
 
   /** PARTIAL / in-flight read — the reference's consume-while-producing
     * capability (reference org.knime.core.columnar.arrow/…/offheap/
@@ -266,7 +271,7 @@ object ArrowIpc {
     * arrow_partial_split`).
     */
   def readPartial(spark: SparkSession, path: String): DataFrame =
-    readPartialImpl(spark, path, selected = None)
+    readTable(spark, path, partial = true, columns = None, filters = Nil)
 
   /** Column-pruned partial read: [[readPartial]] semantics (every
     * complete batch, torn tails stop cleanly) with [[read]]'s `columns`
@@ -275,7 +280,34 @@ object ArrowIpc {
     * metadata-only row counts).
     */
   def readPartial(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    readPartialImpl(spark, path, selected = Some(columns.toArray))
+    readTable(spark, path, partial = true, Some(columns), filters = Nil)
+
+  /** The one read path behind every overload above: the `arrowipc` table
+    * with the filters ANDed into one `where` and the columns as one
+    * `select`, which Catalyst pushes into the scan. With no column list
+    * the table is [[ArrowIpcAllColumnsSource]]. The schema is read here,
+    * once: a missing or empty store, one with no schema, and an unknown
+    * column fail on the driver with the path or the schema named.
+    */
+  private def readTable(spark: SparkSession, path: String, partial: Boolean,
+      columns: Option[Seq[String]],
+      filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val schema = ArrowIpcDataSource.storeSchema(spark, Seq(path), partial)
+      .getOrElse(throw new IllegalArgumentException(s"no Arrow IPC files under $path"))
+    // a filter on a nested leaf ("meta.page") resolves to its root column
+    val names = schema.fieldNames.toSet
+    val refs = filters.flatMap(_.references).map(r => if (names(r)) r else r.takeWhile(_ != '.'))
+    (columns.getOrElse(Nil) ++ refs).find(!names(_)).foreach(n => throw new IllegalArgumentException(
+      s"column $n not in Arrow IPC schema ${schema.fieldNames.mkString(", ")} ($path)"))
+    val source = if (columns.isEmpty) classOf[ArrowIpcAllColumnsSource].getName else "arrowipc"
+    val table = spark.read.format(source).schema(schema).option("partial", partial).load(path)
+    val filtered =
+      if (filters.isEmpty) table else table.where(filters.map(filterToColumn).reduce(_ && _))
+    // quoted: a top-level name with a dot must not parse as a nested field
+    columns.fold(filtered)(cs =>
+      filtered.select(cs.map(c => col("`" + c.replace("`", "``") + "`")): _*))
+  }
 
   /** One serving task's share of a big in-flight file: a contiguous range
     * of its complete record batches, plus the MINIMAL dictionary messages
@@ -377,8 +409,7 @@ object ArrowIpc {
     val bigPlans: Map[String, ((Long, Int), IndexedSeq[DictMsg], IndexedSeq[(Long, Int, Long)])] =
       if (bigFiles.isEmpty) Map.empty
       else {
-        val confB = spark.sparkContext.broadcast(
-          new SerializableWritable(spark.sparkContext.hadoopConfiguration))
+        val confB = broadcastConf(spark)
         spark.sparkContext.parallelize(bigFiles, bigFiles.size)
           .map { f =>
             val c = confB.value.value
@@ -408,9 +439,9 @@ object ArrowIpc {
     }
   }
 
-  /** Open the serving source for one partial-read task (executor-side;
-    * shared by [[readPartialImpl]]'s closure and the DataSourceV2
-    * partial reader). Left = whole small file, planned here in-task;
+  /** Open the serving source for one partial-read task (executor-side,
+    * in the DataSourceV2 partial reader). Left = whole small file,
+    * planned here in-task;
     * Right = a planned slice of a big file. None = the file tore before
     * its schema (zero rows).
     */
@@ -436,50 +467,6 @@ object ArrowIpc {
           new ArrowFooter(sch, toArrowBlocks(sl.dicts), toArrowBlocks(sl.recs),
             new java.util.HashMap[String, String]()), selected))
     } catch { case t: Throwable => ch.close(); throw t }
-  }
-
-  private def readPartialImpl(spark: SparkSession, path: String,
-      selected: Option[Array[String]]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val statuses = listStoreFiles(fs, p, path)
-    require(statuses.nonEmpty, s"no Arrow IPC files under $path")
-    val schema: StructType = planPartialSchema(spark, statuses)
-      .getOrElse(throw new IllegalArgumentException(
-        s"Arrow IPC partial read: no file under $path carries a complete schema message"))
-    // pruned output schema: requested order, duplicates allowed; unknown
-    // names fail here on the driver, not mid-scan
-    val outSchema = selected match {
-      case None => schema
-      case Some(names) => StructType(names.map(n =>
-        schema.fields.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-          s"column $n not in Arrow IPC schema ${schema.fieldNames.mkString(", ")} ($path)"))))
-    }
-    val confB = spark.sparkContext.broadcast(new SerializableWritable(conf))
-    val tasks = planPartialTasks(spark, statuses, arrowSplitBytes(spark))
-    if (tasks.isEmpty) // schema found, zero complete batches anywhere
-      return GraftSqlInternals.internalCreateDataFrame(spark,
-        spark.sparkContext.emptyRDD[InternalRow], outSchema)
-    val rows = spark.sparkContext
-      .parallelize(tasks, tasks.size)
-      .flatMap { task =>
-        openPartialSourceAt(confB.value.value, task, selected) match {
-          case None => Iterator.empty // pre-schema tear: zero rows
-          case Some(src) =>
-            Option(org.apache.spark.TaskContext.get())
-              .foreach(_.addTaskCompletionListener[Unit](_ => src.close()))
-            if (src.sparkSchema.map(f => (f.name, f.dataType)) != schema.map(f => (f.name, f.dataType))) {
-              src.close()
-              throw new IllegalArgumentException(
-                s"Arrow IPC file ${task.fold(identity, _.file)} schema " +
-                  s"${src.sparkSchema.simpleString} differs from " +
-                  s"the directory schema ${schema.simpleString}")
-            }
-            src.rows
-        }
-      }
-    GraftSqlInternals.internalCreateDataFrame(spark, rows, outSchema)
   }
 
   /** FILE-footer custom metadata of one IPC file (where [[BatchStatsKey]]
@@ -523,95 +510,6 @@ object ArrowIpc {
     FbMessage.getRootAsMessage(slice.order(ByteOrder.LITTLE_ENDIAN))
   }
 
-  private def readImpl(spark: SparkSession, path: String, selected: Option[Array[String]],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val statuses = listStoreFiles(fs, p, path)
-    val files = statuses.map(_._1)
-    require(files.nonEmpty, s"no Arrow IPC files under $path")
-    val schema = schemaOf(spark, files.head)
-    def fieldOf(n: String): StructField =
-      schema.fields.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"column $n not in Arrow IPC schema ${schema.fieldNames.mkString(", ")} ($path)"))
-    // filter references resolve to TOP-LEVEL columns for the scan's
-    // column set: an exact top-level name, or — for a dotted nested-leaf
-    // path ("meta.page") — its root struct. The root joins the scan's
-    // columns (pruned reads still skip everything else) and drops from
-    // the output below; the residual predicate evaluates the nested
-    // access exactly on the loaded rows
-    val filterRefs = filters.flatMap(_.references).distinct
-      .map(r => if (schema.fieldNames.contains(r)) r else r.takeWhile(_ != '.'))
-      .distinct
-    filterRefs.foreach(fieldOf)
-    // pruned output schema: requested order, duplicates allowed (selectColumns
-    // semantics); unknown names fail here on the driver, not mid-scan
-    val outSchema = selected match {
-      case None => schema
-      case Some(names) => StructType(names.map(fieldOf))
-    }
-    // no filters: the source itself materializes dups/permutations
-    // (outPerm); with filters the scan reads DISTINCT names (a duplicated
-    // name would make the residual predicate ambiguous) and the final
-    // select re-expands the requested order/duplicates
-    val readNames = selected.map { names =>
-      if (filters.isEmpty) names
-      else (names ++ filterRefs.filterNot(names.contains)).distinct
-    }
-    val readSchema = readNames match {
-      case None => schema
-      case Some(names) => StructType(names.map(fieldOf))
-    }
-    val confB = spark.sparkContext.broadcast(new SerializableWritable(conf))
-    // files above the split threshold fan out WITHIN the file: the
-    // footer IS the plan, so byte-bounded record-batch ranges serve in
-    // parallel via FooterSource's serveRange (footer-GLOBAL indices, so
-    // per-batch statistics skipping stays aligned) — a single huge
-    // complete file no longer reads serially, same as readPartial's
-    // planned splits. Many big files plan their footers in ONE executor
-    // job, not a serial driver loop (see [[planCompleteTasks]]).
-    val tasks: Seq[(String, Option[(Int, Int)])] =
-      planCompleteTasks(spark, statuses, arrowSplitBytes(spark))
-    val rows = spark.sparkContext
-      .parallelize(tasks, tasks.size)
-      .flatMap { case (file, range) =>
-        val c = confB.value.value
-        val hp = new HPath(file)
-        val hfs = hp.getFileSystem(c)
-        val src = openBatchSource(hfs, hp, readNames, filters, range)
-        // cleanup listener FIRST so a partially-drained iterator
-        // (limit/take/kill) cannot leak off-heap Arrow buffers, the
-        // allocator, or the file handle — and so the invariant check
-        // below cannot leak on throw either.
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => src.close()))
-        // store invariant: a file whose schema diverges from the
-        // directory's fails with the offending PATH, not a downstream
-        // cast error. names + types only: nullability/metadata deltas
-        // are representable in the directory schema.
-        if (src.sparkSchema.map(f => (f.name, f.dataType)) != schema.map(f => (f.name, f.dataType))) {
-          src.close()
-          throw new IllegalArgumentException(
-            s"Arrow IPC file $file schema ${src.sparkSchema.simpleString} differs from " +
-              s"the directory schema ${schema.simpleString}")
-        }
-        src.rows
-      }
-    val scan = GraftSqlInternals.internalCreateDataFrame(spark, rows, readSchema)
-    // residual: surviving batches re-filter EXACTLY; then drop the
-    // filter-only columns so `columns` is the output contract
-    val filtered =
-      if (filters.isEmpty) scan
-      else scan.where(filters.map(filterToColumn).reduce(_ && _))
-    selected match {
-      case Some(names) if filters.nonEmpty =>
-        import org.apache.spark.sql.functions.col
-        filtered.select(names.toIndexedSeq.map(col): _*)
-      case _ => filtered
-    }
-  }
-
   /** The within-file fan-out threshold shared by the footer-driven and
     * partial readers (bytes; default 128 MB, the maxPartitionBytes
     * neighborhood). Malformed or non-positive values fail with the knob
@@ -651,8 +549,7 @@ object ArrowIpc {
       else if (bigFiles.size == 1)
         Map(bigFiles.head -> recordBatchBlocks(spark, bigFiles.head).toIndexedSeq)
       else {
-        val confB = spark.sparkContext.broadcast(
-          new SerializableWritable(spark.sparkContext.hadoopConfiguration))
+        val confB = broadcastConf(spark)
         spark.sparkContext.parallelize(bigFiles, bigFiles.size)
           .map { f =>
             val c = confB.value.value
@@ -683,38 +580,27 @@ object ArrowIpc {
     }
   }
 
-  /** List the data files of an IPC store path (single file or directory;
-    * hidden/underscore names skipped), with lengths, name-sorted.
+  /** The Hadoop conf as one broadcast: how every reader and writer here
+    * ships it to tasks, once per job. A conf inside a task closure or a
+    * DSv2 factory is deserialized again in every task.
     */
-  private[graft] def listStoreFiles(fs: FileSystem, p: HPath,
-      path: String): Seq[(String, Long)] =
-    if (fs.getFileStatus(p).isDirectory)
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_"))
-        .map(s => (s.getPath.toString, s.getLen)).sortBy(_._1)
-    else Seq((path, fs.getFileStatus(p).getLen))
+  private[sources] def broadcastConf(spark: SparkSession): Broadcast[SerializableWritable[Configuration]] =
+    spark.sparkContext.broadcast(new SerializableWritable(spark.sparkContext.hadoopConfiguration))
 
   /** Open a [[FooterSource]] over one file with an explicit Hadoop conf —
-    * the executor-side entry the DataSourceV2 reader
-    * ([[ArrowIpcDataSource]]) shares with [[readImpl]]'s task closure.
+    * the executor-side entry of the DataSourceV2 reader
+    * ([[ArrowIpcDataSource]]).
     */
   private[sources] def openSourceAt(conf: org.apache.hadoop.conf.Configuration,
       file: String, selected: Option[Array[String]],
       filters: Seq[org.apache.spark.sql.sources.Filter],
       range: Option[(Int, Int)]): FooterSource = {
     val hp = new HPath(file)
-    openBatchSource(hp.getFileSystem(conf), hp, selected, filters, range)
-  }
-
-  private def openBatchSource(fs: FileSystem, p: HPath,
-      selected: Option[Array[String]] = None,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-      serveRange: Option[(Int, Int)] = None): FooterSource = {
-    val ch = new HadoopSeekableChannel(fs, p)
+    val ch = new HadoopSeekableChannel(hp.getFileSystem(conf), hp)
     val footer =
       try readFooter(ch)
       catch { case t: Throwable => ch.close(); throw t }
-    new FooterSource(ch, footer, selected, filters, serveRange)
+    new FooterSource(ch, footer, selected, filters, range)
   }
 
   /** Footer-driven batch reader — deliberately NOT [[ArrowFileReader]],
@@ -1790,7 +1676,7 @@ object ArrowIpc {
     val out = new HPath(path)
     val fs = out.getFileSystem(conf)
     fs.mkdirs(out)
-    val confB = spark.sparkContext.broadcast(new SerializableWritable(conf))
+    val confB = broadcastConf(spark)
     val pathStr = out.toString
     // a zero-partition RDD (empty LocalRelation) would write no files at
     // all, making the store unreadable; pad to one empty partition so the

@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.SerializableWritable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -16,20 +18,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
 /** Arrow IPC as a Catalyst-integrated DataSourceV2 table —
-  * `spark.read.format("arrowipc").load(path)`.
-  *
-  * [[ArrowIpc]]'s native `read(path, columns, filters)` API prunes
-  * columns to their buffer byte ranges and skips record batches via the
-  * footer's per-batch statistics — but as a SIDE-CHANNEL: a user
-  * composing ordinary DataFrame ops over `ArrowIpc.read(path)` got a
-  * full-width scan, because Catalyst cannot push projections or
-  * predicates INTO an RDD-backed plan. The reference wires its pushdown
-  * into the consumer API itself (org.knime.core.data.columnar/…/filter/
-  * TableFilterUtils.java:84-103 — every cursor flows through a
-  * `Selection`), so any consumer benefits without opting in; this
-  * provider is the Spark-idiomatic equivalent. `df.select(...).where(...)`
-  * over the loaded table reaches the SAME selective-IO engine
-  * ([[ArrowIpc.FooterSource]]):
+  * `spark.read.format("arrowipc").load(path)` — and the ONE read driver
+  * over the selective-IO engine ([[ArrowIpc.FooterSource]]): every
+  * `ArrowIpc.read`, `readFiltered` and `readPartial` overload is a front
+  * that loads this table and adds a `select` and a `where`. The
+  * reference wires its pushdown into the consumer API itself
+  * (org.knime.core.data.columnar/…/filter/TableFilterUtils.java:84-103 —
+  * every cursor flows through a `Selection`), so any consumer benefits
+  * without opting in; Catalyst pushdown into this table is the
+  * Spark-idiomatic equivalent:
   *
   *  - `SupportsPushDownRequiredColumns`: Catalyst's required schema maps
   *    to the native column selection — unselected columns cost zero body
@@ -47,9 +44,9 @@ import scala.jdk.CollectionConverters._
   *    (`spark.graft.arrow.splitBytes`, served through FooterSource's
   *    serveRange with footer-global indices) for big files, whose
   *    footers plan in one executor job — the 1000-file / single-huge-file
-  *    store fans out across the cluster identically to the native path.
+  *    store fans out across the cluster.
   *  - `option("partial", "true")` routes to the PARTIAL/in-flight
-  *    engine ([[ArrowIpc.readPartial]]'s planner): every COMPLETE batch
+  *    engine ([[ArrowIpc.planPartialTasks]]): every COMPLETE batch
   *    of a torn or still-being-written store, no footer required, with
   *    the same within-file slice fan-out and minimal dictionary replay —
   *    so the crashed-writer migration read is an ordinary `spark.read`
@@ -57,31 +54,30 @@ import scala.jdk.CollectionConverters._
   *    buffer layout); filter pushdown does not (statistics live in the
   *    footer, which is exactly what a torn file lacks) — filters stay
   *    whole as Catalyst post-scan predicates, so semantics are identical.
+  *  - The Hadoop conf reaches tasks as one broadcast per scan, write job
+  *    or streaming epoch: held in a factory, its ~109 KB were
+  *    deserialized again in every task (~30 ms each).
   *
-  * Writes stay on [[ArrowIpc.write]] (distributed, dictionary-encoding,
-  * stats-collecting); this table is the migration READ surface.
+  * Writes: [[ArrowIpcWriteBuilder]] (batch and streaming) over the same
+  * per-task writer as [[ArrowIpc.write]].
   */
-final class ArrowIpcDataSource extends TableProvider with DataSourceRegister {
+class ArrowIpcDataSource private[sources] (pruneColumns: Boolean)
+    extends TableProvider with DataSourceRegister {
+
+  def this() = this(pruneColumns = true)
 
   override def shortName(): String = "arrowipc"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = ArrowIpcDataSource.pathsOf(options)
-    val spark = SparkSession.active
     // a missing or empty path infers an EMPTY schema instead of failing:
     // the WRITE path reaches here too (DataFrameWriter resolves the table
     // before newWriteBuilder sees the query schema), and a fresh store
     // has nothing to infer from. Reads over such a store still fail with
     // the path named — at scan planning.
-    val statuses =
-      try ArrowIpcDataSource.listAll(spark, paths)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    if (statuses.isEmpty) new StructType()
-    else if (ArrowIpcDataSource.isPartial(options))
-      ArrowIpc.planPartialSchema(spark, statuses).getOrElse(
-        throw new IllegalArgumentException("arrowipc: no file under " +
-          s"${paths.mkString(", ")} carries a complete schema message"))
-    else ArrowIpc.schemaOf(spark, statuses.head._1)
+    try ArrowIpcDataSource.storeSchema(SparkSession.active,
+      ArrowIpcDataSource.pathsOf(options), ArrowIpcDataSource.isPartial(options))
+      .getOrElse(new StructType())
+    catch { case _: java.io.FileNotFoundException => new StructType() }
   }
 
   // writes hand the QUERY schema to getTable (a fresh store has nothing
@@ -94,9 +90,17 @@ final class ArrowIpcDataSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     new ArrowIpcTable(ArrowIpcDataSource.pathsOf(opts), schema,
-      ArrowIpcDataSource.isPartial(opts))
+      ArrowIpcDataSource.isPartial(opts), pruneColumns)
   }
 }
+
+/** The `arrowipc` table without column pruning, loaded by class name by
+  * the `ArrowIpc` overloads that take no column list: those read every
+  * column whatever a later projection uses (the specs' full-read byte
+  * baselines); the `columns` overloads are the pruning surface.
+  */
+private[sources] final class ArrowIpcAllColumnsSource
+    extends ArrowIpcDataSource(pruneColumns = false)
 
 private[sources] object ArrowIpcDataSource {
   /** The store path(s) from reader options: `load(p)` → "path",
@@ -118,19 +122,37 @@ private[sources] object ArrowIpcDataSource {
   def isPartial(options: CaseInsensitiveStringMap): Boolean =
     options.getBoolean("partial", false)
 
-  /** Data files across all paths, name-sorted per path (the store's
-    * file order — q_provenance's contract rides it on the native path).
+  /** The store's schema: the first data file's footer schema, or in
+    * partial mode the first complete schema message. None when the paths
+    * hold no data file; a missing path throws FileNotFoundException.
+    */
+  def storeSchema(spark: SparkSession, paths: Seq[String], partial: Boolean): Option[StructType] = {
+    val statuses = listAll(spark, paths)
+    if (statuses.isEmpty) None
+    else if (!partial) Some(ArrowIpc.schemaOf(spark, statuses.head._1))
+    else Some(ArrowIpc.planPartialSchema(spark, statuses).getOrElse(
+      throw new IllegalArgumentException("arrowipc: no file under " +
+        s"${paths.mkString(", ")} carries a complete schema message")))
+  }
+
+  /** Data files across all paths (a path is a file or a directory;
+    * hidden and underscore names are skipped), with lengths, name-sorted
+    * per path (the store's file order — q_provenance's contract rides it).
     */
   def listAll(spark: SparkSession, paths: Seq[String]): Seq[(String, Long)] =
     paths.flatMap { path =>
       val p = new HPath(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      ArrowIpc.listStoreFiles(fs, p, path)
+      if (fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).toSeq
+          .filter(s => s.isFile && !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_"))
+          .map(s => (s.getPath.toString, s.getLen)).sortBy(_._1)
+      else Seq((path, fs.getFileStatus(p).getLen))
     }
 }
 
 private[sources] final class ArrowIpcTable(paths: Seq[String], tableSchema: StructType,
-    partial: Boolean) extends Table with SupportsRead with SupportsWrite {
+    partial: Boolean, pruneColumns: Boolean) extends Table with SupportsRead with SupportsWrite {
   override def name(): String =
     s"arrowipc${if (partial) "(partial)" else ""} ${paths.mkString(",")}"
   override def schema(): StructType = tableSchema
@@ -139,7 +161,7 @@ private[sources] final class ArrowIpcTable(paths: Seq[String], tableSchema: Stru
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ArrowIpcScanBuilder(paths, tableSchema, partial)
+    new ArrowIpcScanBuilder(paths, tableSchema, partial, pruneColumns)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(paths.size == 1,
       s"arrowipc: write needs exactly one path, got ${paths.size}")
@@ -188,10 +210,9 @@ private[sources] final class ArrowIpcWriteBuilder(path: String, info: LogicalWri
     // would poison every subsequent read
     if (!overwrite) {
       val existing =
-        try ArrowIpcDataSource.listAll(spark, Seq(path))
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      existing.headOption.foreach { case (f, _) =>
-        val stored = ArrowIpc.schemaOf(spark, f)
+        try ArrowIpcDataSource.storeSchema(spark, Seq(path), partial = false)
+        catch { case _: java.io.FileNotFoundException => None }
+      existing.foreach { stored =>
         require(stored.map(x => (x.name, x.dataType)) ==
             info.schema().map(x => (x.name, x.dataType)),
           s"arrowipc: append schema ${info.schema().simpleString} does not match " +
@@ -206,7 +227,7 @@ private[sources] final class ArrowIpcWriteBuilder(path: String, info: LogicalWri
 
 private[graft] final class ArrowIpcWrite(path: String, schema: StructType,
     dictCols: Set[String], batchRows: Int, level: Int, overwrite: Boolean,
-    queryId: String, conf: SerializableWritable[org.apache.hadoop.conf.Configuration])
+    queryId: String, conf: SerializableWritable[Configuration])
     extends Write with BatchWrite {
 
   override def toBatch: BatchWrite = this
@@ -234,7 +255,7 @@ private[graft] final class ArrowIpcWrite(path: String, schema: StructType,
         phys: PhysicalWriteInfo): StreamingDataWriterFactory = {
       val p = new HPath(path)
       p.getFileSystem(conf.value).mkdirs(p)
-      new ArrowIpcStreamingWriterFactory(conf, path, schema.json, dictCols,
+      new ArrowIpcStreamingWriterFactory(broadcastConf(), path, schema.json, dictCols,
         batchRows, level)
     }
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -278,8 +299,13 @@ private[graft] final class ArrowIpcWrite(path: String, schema: StructType,
     // job tag for file names: queryId is unique per write query, so
     // parallel/append jobs can never collide on a part name
     val tag = queryId.replaceAll("[^a-zA-Z0-9]", "").takeRight(12)
-    new ArrowIpcWriterFactory(conf, path, schema.json, dictCols, batchRows, level, tag)
+    new ArrowIpcWriterFactory(broadcastConf(), path, schema.json, dictCols, batchRows, level, tag)
   }
+
+  // tasks get the conf once per job (per epoch when streaming); commit
+  // and abort run on the driver and use `conf` directly
+  private def broadcastConf(): Broadcast[SerializableWritable[Configuration]] =
+    SparkSession.active.sparkContext.broadcast(conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val written = messages.collect { case ArrowIpcFileCommitted(n) => n }.toSet
@@ -310,7 +336,7 @@ private[graft] final case class ArrowIpcFileCommitted(file: String)
     extends WriterCommitMessage
 
 private[sources] final class ArrowIpcStreamingWriterFactory(
-    conf: SerializableWritable[org.apache.hadoop.conf.Configuration],
+    conf: Broadcast[SerializableWritable[Configuration]],
     path: String, schemaJson: String, dictCols: Set[String], batchRows: Int,
     level: Int) extends StreamingDataWriterFactory {
 
@@ -320,7 +346,7 @@ private[sources] final class ArrowIpcStreamingWriterFactory(
       .asInstanceOf[StructType]
     // deterministic (pid, epoch) name + replacePrior: an epoch replayed
     // from the checkpoint rewrites the same file - idempotent, no dupes
-    val w = new ArrowIpc.IpcPartWriter(conf.value, path, schema, dictCols,
+    val w = new ArrowIpc.IpcPartWriter(conf.value.value, path, schema, dictCols,
       batchRows, level, f"part-$partitionId%05d-e$epochId.arrow",
       f".part-$partitionId%05d-$taskId-e$epochId.arrow.tmp", replacePrior = true)
     new DataWriter[InternalRow] {
@@ -333,14 +359,14 @@ private[sources] final class ArrowIpcStreamingWriterFactory(
 }
 
 private[sources] final class ArrowIpcWriterFactory(
-    conf: SerializableWritable[org.apache.hadoop.conf.Configuration],
+    conf: Broadcast[SerializableWritable[Configuration]],
     path: String, schemaJson: String, dictCols: Set[String], batchRows: Int,
     level: Int, tag: String) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[StructType]
-    val w = new ArrowIpc.IpcPartWriter(conf.value, path, schema, dictCols,
+    val w = new ArrowIpc.IpcPartWriter(conf.value.value, path, schema, dictCols,
       batchRows, level, f"part-$partitionId%05d-$tag.arrow",
       f".part-$partitionId%05d-$taskId-$tag.arrow.tmp", replacePrior = false)
     new DataWriter[InternalRow] {
@@ -353,7 +379,7 @@ private[sources] final class ArrowIpcWriterFactory(
 }
 
 private[sources] final class ArrowIpcScanBuilder(paths: Seq[String],
-    fileSchema: StructType, partial: Boolean)
+    fileSchema: StructType, partial: Boolean, prune: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
   // Catalyst's required schema, top-level: nested pruning requests (a
@@ -365,7 +391,7 @@ private[sources] final class ArrowIpcScanBuilder(paths: Seq[String],
   private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    requiredNames = requiredSchema.fieldNames
+    if (prune) requiredNames = requiredSchema.fieldNames
 
   /** Accept every filter whose references resolve into the schema (a
     * top-level name, or a dotted nested-leaf path rooted at one — the
@@ -400,6 +426,11 @@ private[sources] final class ArrowIpcScan(paths: Seq[String], fileSchema: Struct
 
   override def toBatch: Batch = this
 
+  // rows only, declared up front: the default asks a fresh reader factory
+  // (one conf broadcast each) about every partition while planning
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
+
   // rendered inside the BatchScan node by explain — the PlanCheck /
   // .explain surface proving pushdown reached the scan
   override def description(): String =
@@ -428,9 +459,7 @@ private[sources] final class ArrowIpcScan(paths: Seq[String], fileSchema: Struct
     val selected =
       if (requiredNames.toSeq == fileSchema.fieldNames.toSeq) None
       else Some(requiredNames)
-    new ArrowIpcReaderFactory(
-      new SerializableWritable(spark.sparkContext.hadoopConfiguration),
-      fileSchema.json, selected, pushed)
+    new ArrowIpcReaderFactory(ArrowIpc.broadcastConf(spark), fileSchema.json, selected, pushed)
   }
 }
 
@@ -441,7 +470,7 @@ private[sources] final case class ArrowIpcPartialPartition(
     task: Either[String, ArrowIpc.PartialSlice]) extends InputPartition
 
 private[sources] final class ArrowIpcReaderFactory(
-    conf: SerializableWritable[org.apache.hadoop.conf.Configuration],
+    conf: Broadcast[SerializableWritable[Configuration]],
     fileSchemaJson: String, selected: Option[Array[String]],
     filters: Array[Filter]) extends PartitionReaderFactory {
 
@@ -456,10 +485,10 @@ private[sources] final class ArrowIpcReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val (srcOpt, file) = partition match {
       case ArrowIpcInputPartition(f, range) =>
-        (Some(ArrowIpc.openSourceAt(conf.value, f, selected,
+        (Some(ArrowIpc.openSourceAt(conf.value.value, f, selected,
           filters.toIndexedSeq, range)), f)
       case ArrowIpcPartialPartition(task) =>
-        (ArrowIpc.openPartialSourceAt(conf.value, task, selected),
+        (ArrowIpc.openPartialSourceAt(conf.value.value, task, selected),
           task.fold(identity, _.file))
       case other => throw new IllegalArgumentException(
         s"arrowipc: unexpected partition type ${other.getClass.getName}")

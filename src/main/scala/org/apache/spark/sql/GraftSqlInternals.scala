@@ -1,28 +1,16 @@
 package org.apache.spark.sql
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{Metadata, StructType}
+import org.apache.spark.sql.types.Metadata
 
-/** Narrow bridge to two `private[sql]` seams that have no public
-  * equivalent (both stable across Spark 3.x→4.x):
-  *
-  *  - `SparkSession.internalCreateDataFrame` — builds a DataFrame over an
-  *    `RDD[InternalRow]` without the external-Row round-trip. The public
-  *    `createDataFrame(RDD[Row], schema)` forces every value through
-  *    `CatalystTypeConverters` twice (source → Row here, Row → InternalRow
-  *    inside Spark); a source that already produces Catalyst values (see
-  *    [[graft.sources.ArrowIpc]]) skips both.
-  *  - `Metadata.map` — enumerate a [[Metadata]]'s keys. The public surface
-  *    is get-by-key only, but propagating field metadata into Arrow IPC
-  *    field metadata requires iteration.
+/** Narrow bridge to a `private[sql]` seam that has no public equivalent
+  * (stable across Spark 3.x→4.x): `Metadata.map` — enumerate a
+  * [[Metadata]]'s keys. The public surface is get-by-key only, but
+  * propagating field metadata into Arrow IPC field metadata requires
+  * iteration.
   *
   * Kept deliberately tiny: no behavior, just visibility.
   */
 object GraftSqlInternals {
-
-  def internalCreateDataFrame(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
   def metadataMap(m: Metadata): Map[String, Any] = types.GraftMetadataAccess.map(m)
 }

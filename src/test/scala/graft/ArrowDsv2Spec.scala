@@ -248,4 +248,31 @@ class ArrowDsv2Spec extends SparkSpec {
     val got = spark.read.format("arrowipc").load(a, b).orderBy($"id").collect()
     assert(got.length == 100 && got.head.getLong(0) == 0L && got.last.getLong(0) == 99L)
   }
+
+  test("reader and writer factories stay small: the Hadoop conf rides a " +
+      "broadcast, not every task") {
+    import org.apache.spark.sql.connector.write.PhysicalWriteInfo
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def serializedBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(o) finally out.close()
+      bytes.size()
+    }
+    def readerFactory(df: org.apache.spark.sql.DataFrame): AnyRef =
+      df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b.readerFactory }
+        .getOrElse(fail(s"no BatchScan in\n${df.queryExecution.executedPlan}"))
+    val write = new graft.sources.ArrowIpcWrite(tmp("dsv2_factory_write"), schema,
+      Set.empty, 4096, 0, overwrite = false, "qid",
+      new org.apache.spark.SerializableWritable(spark.sparkContext.hadoopConfiguration))
+    val phys: PhysicalWriteInfo = () => 1
+    val factories = Seq(
+      "complete-mode reader" -> readerFactory(spark.read.format("arrowipc").load(store)),
+      "partial-mode reader" ->
+        readerFactory(spark.read.format("arrowipc").option("partial", "true").load(store)),
+      "batch writer" -> write.createBatchWriterFactory(phys),
+      "streaming writer" -> write.toStreaming.createStreamingWriterFactory(phys))
+    val sizes = factories.map { case (what, f) => what -> serializedBytes(f) }
+    assert(sizes.forall(_._2 < 16 * 1024), s"serialized factory bytes: ${sizes.mkString(", ")}")
+  }
 }
