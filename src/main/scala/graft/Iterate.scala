@@ -12,8 +12,8 @@ import org.apache.spark.sql.DataFrame
   *  - round `i` pins its new state (eager `localCheckpoint`) when
   *    `i % pinEvery == 0` or `i == maxRounds`; rounds in between chain
   *    into one plan (the pageRank bodies, where nothing is read twice);
-  *  - once a new state is pinned, the scoped pins ([[Round.pin]]) it read
-  *    and the superseded state pin are released ([[Pins.release]]);
+  *  - once a new state is pinned, the round scopes ([[Round]], a
+  *    [[Pins.Scope]]) it read and the superseded state pin are released;
   *    `retain` keeps every state pin instead, for callers whose result
   *    reads them all;
   *  - the returned state and the pins its lineage reads are the caller's;
@@ -25,19 +25,11 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Iterate {
 
-  /** One round: the state it starts from and the intermediates it pins. */
-  final class Round private[Iterate] (val state: DataFrame) {
-    private[Iterate] var scoped: List[DataFrame] = Nil
-
-    /** Eagerly pin an intermediate the round reads more than once; it is
-      * released once a state that reads it is pinned.
-      */
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint(true)
-      scoped ::= p
-      p
-    }
-  }
+  /** One round: the state it starts from, and the [[Pins.Scope]] of the
+    * intermediates it pins (`pin`), released once a state that reads them
+    * is pinned.
+    */
+  final class Round private[Iterate] (val state: DataFrame) extends Pins.Scope
 
   /** Run `step` from `init` for at most `maxRounds` rounds (none, and
     * `init` returned, when `maxRounds` ≤ 0).
@@ -53,8 +45,9 @@ private[graft] object Iterate {
       done: (DataFrame, Int) => Boolean = (_, _) => false,
       exhausted: Option[String] = None)(step: Round => DataFrame): DataFrame = {
     require(pinEvery >= 1, s"Iterate: pinEvery $pinEvery < 1")
-    var held = List(init) // state pins
-    var scoped = List.empty[DataFrame] // scoped pins the unpinned state still reads
+    val held = new Pins.Scope // state pins
+    held.adopt(init)
+    var pending = List.empty[Round] // rounds whose pins the unpinned state still reads
     var round: Round = null
     var state = init
     var i = 0
@@ -65,16 +58,15 @@ private[graft] object Iterate {
         i += 1
         round = new Round(state)
         val next = step(round)
-        if (next eq state) converged = true
+        if (next eq state) { converged = true; round.release() }
         else {
-          scoped = round.scoped ++ scoped
-          round.scoped = Nil
+          pending ::= round
           if (i % pinEvery == 0 || i == maxRounds) {
-            state = next.localCheckpoint(true)
-            scoped.foreach(Pins.release)
-            scoped = Nil
-            if (!retain) { held.foreach(Pins.release); held = Nil }
-            held ::= state
+            val pinned = next.localCheckpoint(true)
+            pending.foreach(_.release())
+            pending = Nil
+            if (!retain) held.release()
+            state = held.adopt(pinned)
           } else state = next
           converged = done(state, i)
         }
@@ -83,8 +75,7 @@ private[graft] object Iterate {
       ok = true
       state
     } finally {
-      if (round != null) round.scoped.foreach(Pins.release)
-      if (!ok) (scoped ++ held).foreach(Pins.release)
+      if (!ok) { (round :: pending).foreach(r => if (r != null) r.release()); held.release() }
     }
   }
 }

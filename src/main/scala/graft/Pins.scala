@@ -2,7 +2,16 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Release the executor storage behind an EAGER `localCheckpoint` pin.
+/** Pins — eager `localCheckpoint(true)` snapshots — and the one rule that
+  * frees them.
+  *
+  * Ownership rule: a pin taken through a [[Scope]] ([[scoped]], or an
+  * [[Iterate]] round) is released when its scope ends, on return or
+  * throw; a pin a function returns inside its lazy result is the
+  * caller's, and stays a plain `localCheckpoint(true)` (releasing it
+  * before the returned plan materializes breaks that plan). The reference
+  * decides a batch's lifetime in one place the same way, through its
+  * reference-counted batches.
   *
   * `Dataset.unpersist` only uncaches CacheManager-registered plans (the
   * `cache()`/`persist()` path); a localCheckpoint persists its RDD
@@ -13,13 +22,31 @@ import org.apache.spark.sql.DataFrame
   * `LogicalRDD.rdd` frees it). Round-12 review finding: the iterative
   * operators' per-round "unpersist the superseded checkpoint" calls were
   * therefore not bounding state to one live snapshot as documented.
-  *
-  * Use [[release]] wherever a checkpoint pin is superseded — per-round
-  * loop state especially, where the leak compounds ([[Iterate]] does it
-  * for the iterative operators). For `cache()`d frames keep plain
-  * `unpersist()` (that path works).
+  * For `cache()`d frames keep plain `unpersist()` (that path works).
   */
 object Pins {
+
+  /** The pins one scope owns; all of them are released together. */
+  class Scope private[graft] () {
+    private var pins = List.empty[DataFrame]
+
+    /** Eagerly pin `df` (`localCheckpoint(true)`) until the scope ends. */
+    def pin(df: DataFrame): DataFrame = adopt(df.localCheckpoint(true))
+
+    /** Take an already-pinned frame (an [[Iterate]] result) into the scope. */
+    def adopt(df: DataFrame): DataFrame = { pins ::= df; df }
+
+    private[graft] def release(): Unit = { pins.foreach(Pins.release); pins = Nil }
+  }
+
+  /** Run `body` with a fresh [[Scope]]; every pin it took is released when
+    * `body` returns or throws, so a returned value must not read them
+    * lazily (collect or write it inside `body`).
+    */
+  def scoped[A](body: Scope => A): A = {
+    val scope = new Scope
+    try body(scope) finally scope.release()
+  }
 
   /** Free a checkpointed DataFrame's storage (non-blocking). Falls back
     * to plain `unpersist` for non-checkpoint plans, so it is always safe

@@ -183,30 +183,26 @@ object Decontaminate {
       idCol: String,
       w: Int,
       probeDocs: Int,
-      densityCutoff: Double): DecontPolicy = {
+      densityCutoff: Double): DecontPolicy = graft.Pins.scoped { scope =>
     val spark = train.sparkSession
-    val evalSpans = eval
-      .select(explode(T.shingleHashes(col(textCol), w)).as("span_hash"))
-      .distinct().localCheckpoint(true) // consumed twice: count + probe join
+    val evalSpans = scope.pin(eval // consumed twice: count + probe join
+      .select(explode(T.shingleHashes(col(textCol), w)).as("span_hash")).distinct())
     val nEvalSpans = evalSpans.count()
     val bcastBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-    val path =
-      if (bcastBytes >= 0 && nEvalSpans * 8L > bcastBytes)
-        // past broadcast range: the Bloom prefilter is the only shape
-        DecontPolicy("bloom", nEvalSpans, -1.0)
-      else {
-        val probe = train.limit(probeDocs)
-          .select(explode(T.shingleHashes(col(textCol), w)).as("span_hash"))
-          .join(broadcast(evalSpans.withColumn("__hit", lit(1L))), Seq("span_hash"), "left")
-          .agg(count(lit(1)).as("n"), sum(coalesce(col("__hit"), lit(0L))).as("h"))
-          .head()
-        val n = probe.getLong(0)
-        val density = if (n == 0) 0.0 else probe.getLong(1).toDouble / n
-        DecontPolicy(if (density > densityCutoff) "exact" else "bloom", nEvalSpans, density)
-      }
-    graft.Pins.release(evalSpans) // checkpoint pin: plain unpersist is a no-op
-    path
+    if (bcastBytes >= 0 && nEvalSpans * 8L > bcastBytes)
+      // past broadcast range: the Bloom prefilter is the only shape
+      DecontPolicy("bloom", nEvalSpans, -1.0)
+    else {
+      val probe = train.limit(probeDocs)
+        .select(explode(T.shingleHashes(col(textCol), w)).as("span_hash"))
+        .join(broadcast(evalSpans.withColumn("__hit", lit(1L))), Seq("span_hash"), "left")
+        .agg(count(lit(1)).as("n"), sum(coalesce(col("__hit"), lit(0L))).as("h"))
+        .head()
+      val n = probe.getLong(0)
+      val density = if (n == 0) 0.0 else probe.getLong(1).toDouble / n
+      DecontPolicy(if (density > densityCutoff) "exact" else "bloom", nEvalSpans, density)
+    }
   }
 
   /** [[overlapStats]] with the Bloom-vs-exact choice made FROM DATA — the

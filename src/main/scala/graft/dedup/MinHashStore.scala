@@ -100,9 +100,8 @@ object MinHashStore extends graft.sources.SegmentedStore {
     val segsRoot = new org.apache.hadoop.fs.Path(s"$dir/segs")
     if (fs.exists(segsRoot)) fs.delete(segsRoot, true)
     writeRootManifest(spark, dir, nBuckets, shingleSize, numHashes, bands)
-    val pinned = sigs.localCheckpoint(true)
-    try writeSegment(pinned, dir, segmentId = 0L, bands, numHashes / bands, nBuckets)
-    finally graft.Pins.release(pinned)
+    graft.Pins.scoped(scope => writeSegment(scope.pin(sigs), dir, segmentId = 0L, bands,
+      numHashes / bands, nBuckets))
   }
 
   /** Fold a batch of NEW documents (typically [[dedupBatch]] survivors)
@@ -120,11 +119,8 @@ object MinHashStore extends graft.sources.SegmentedStore {
     // the roll-forward its own error message promises
     graft.sources.SegmentCompaction.recover(spark, dir)
     val m = loadManifest(spark, dir)
-    val sigs = Dedup.minHashSignatureTable(newDocs, textCol, idCol,
-        m.shingleSize, m.numHashes)
-      .localCheckpoint(true)
-    try appendSigs(sigs, dir, segmentId, m)
-    finally graft.Pins.release(sigs)
+    graft.Pins.scoped(scope => appendSigs(scope.pin(Dedup.minHashSignatureTable(newDocs,
+      textCol, idCol, m.shingleSize, m.numHashes)), dir, segmentId, m))
   }
 
   /** [[append]] from a precomputed signature table (see [[buildFromSigs]]
@@ -132,9 +128,8 @@ object MinHashStore extends graft.sources.SegmentedStore {
     */
   def appendFromSigs(sigs: DataFrame, dir: String, segmentId: Long = -1L): Unit = {
     graft.sources.SegmentCompaction.recover(sigs.sparkSession, dir) // before loadManifest
-    val pinned = sigs.localCheckpoint(true)
-    try appendSigs(pinned, dir, segmentId, loadManifest(sigs.sparkSession, dir))
-    finally graft.Pins.release(pinned)
+    graft.Pins.scoped(scope => appendSigs(scope.pin(sigs), dir, segmentId,
+      loadManifest(sigs.sparkSession, dir)))
   }
 
   private def appendSigs(sigs: DataFrame, dir: String, segmentIdArg: Long,
@@ -193,45 +188,37 @@ object MinHashStore extends graft.sources.SegmentedStore {
     * bucket-pruned cost (see class doc).
     */
   def dedupBatch(spark: SparkSession, dir: String, batch: DataFrame,
-      textCol: String, idCol: String, threshold: Double = 0.7): DataFrame = {
-    val m = loadManifest(spark, dir)
-    val segs = committedSegments(spark, dir)
-    val rows = m.numHashes / m.bands
-    val batchSigs = Dedup.minHashSignatureTable(batch, textCol, idCol,
-        m.shingleSize, m.numHashes)
-      .localCheckpoint(true)
-    try {
+      textCol: String, idCol: String, threshold: Double = 0.7): DataFrame =
+    graft.Pins.scoped { scope =>
+      val m = loadManifest(spark, dir)
+      val segs = committedSegments(spark, dir)
+      val rows = m.numHashes / m.bands
+      val batchSigs = scope.pin(Dedup.minHashSignatureTable(batch, textCol, idCol,
+        m.shingleSize, m.numHashes))
       // batch band keys (empty shingle sets never band — the sentinel
       // collision rule shared with the in-memory path's collapse)
-      val bandKeys = batchSigs.where(size(col("shset")) > 0)
+      val bandKeys = scope.pin(batchSigs.where(size(col("shset")) > 0)
         .select(posexplode(H.bandHashes(col("sig"), m.bands, rows)).as(Seq("band", "bucket")))
-        .distinct()
-        .localCheckpoint(true)
-      try {
-        val tb = bandKeys.select(postingBucket(m.nBuckets).as("b")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        val candIds =
-          if (tb.isEmpty || segs.isEmpty) emptyIds(spark)
-          else readSurface(spark, dir, segs, "postings", postingsSchema)
-            .where(col("pb").isInCollection(tb))
-            .join(bandKeys, Seq("band", "bucket"))
-            .select(col("id")).distinct()
-        val pinned = candIds.localCheckpoint(true)
-        try {
-          val sb = pinned.select(sigBucket(m.nBuckets).as("b")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          val candSigs =
-            if (sb.isEmpty || segs.isEmpty) emptySigs(spark)
-            else readSurface(spark, dir, segs, "sigs", sigsSchema)
-              .where(col("pb").isInCollection(sb))
-              .join(pinned, Seq("id"))
-              .select(col("id"), col("sig"), col("shset"))
-          Dedup.minHashIncrementalSigs(candSigs, batchSigs, batch, idCol,
-            m.numHashes, m.bands, threshold)
-        } finally graft.Pins.release(pinned)
-      } finally graft.Pins.release(bandKeys)
-    } finally graft.Pins.release(batchSigs)
-  }
+        .distinct())
+      val tb = bandKeys.select(postingBucket(m.nBuckets).as("b")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      val candIds = scope.pin(
+        if (tb.isEmpty || segs.isEmpty) emptyIds(spark)
+        else readSurface(spark, dir, segs, "postings", postingsSchema)
+          .where(col("pb").isInCollection(tb))
+          .join(bandKeys, Seq("band", "bucket"))
+          .select(col("id")).distinct())
+      val sb = candIds.select(sigBucket(m.nBuckets).as("b")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      val candSigs =
+        if (sb.isEmpty || segs.isEmpty) emptySigs(spark)
+        else readSurface(spark, dir, segs, "sigs", sigsSchema)
+          .where(col("pb").isInCollection(sb))
+          .join(candIds, Seq("id"))
+          .select(col("id"), col("sig"), col("shset"))
+      Dedup.minHashIncrementalSigs(candSigs, batchSigs, batch, idCol,
+        m.numHashes, m.bands, threshold)
+    }
 
   /** Root manifest + folded committed-segment metas — callers see the
     * committed totals (nDocs, maxId) exactly as before the segment split.

@@ -99,9 +99,7 @@ object SemDedupStore extends graft.sources.SegmentedStore {
     graft.sources.ArtifactJson.writeFile(spark, s"$dir/_manifest.json",
       s"""{"version":1,"nBuckets":$nBuckets,"k":${centroids.length},""" +
         s""""d":${centroids.head.length}}""")
-    val pinned = state.localCheckpoint(true)
-    try writeSegment(pinned, dir, segmentId = 0L, nBuckets)
-    finally graft.Pins.release(pinned)
+    graft.Pins.scoped(scope => writeSegment(scope.pin(state), dir, segmentId = 0L, nBuckets))
   }
 
   /** Fold a batch of NEW vectors (typically [[dedupBatch]] survivors)
@@ -119,17 +117,17 @@ object SemDedupStore extends graft.sources.SegmentedStore {
     val segId = resolveSegmentId(committed, segmentId)
     if (segmentId >= 0L && segmentCommitted(spark, dir, segId))
       return // committed: replay no-op
-    val state = SemDedup.assignClusters(newDocs, vecCol, loadCentroids(spark, dir))
-      .select(col(idCol).cast("long").as("id"),
-        col("cluster"), col(vecCol).cast("array<double>").as("vec"))
-      .localCheckpoint(true)
-    try {
+    graft.Pins.scoped { scope =>
+      val state = scope.pin(SemDedup.assignClusters(newDocs, vecCol, loadCentroids(spark, dir))
+        .select(col(idCol).cast("long").as("id"),
+          col("cluster"), col(vecCol).cast("array<double>").as("vec")))
       val stats = state.agg(count(lit(1)).as("n"), min(col("id")).as("lo"),
         count_distinct(col("id")).as("nd")).head()
-      if (stats.getLong(0) == 0L) return // empty batch: store untouched
-      requireMonotonicIds(stats.getLong(0), stats.getLong(2), stats.getLong(1), m.maxId)
-      writeSegment(state, dir, segId, m.nBuckets)
-    } finally graft.Pins.release(state)
+      if (stats.getLong(0) > 0L) { // an empty batch leaves the store untouched
+        requireMonotonicIds(stats.getLong(0), stats.getLong(2), stats.getLong(1), m.maxId)
+        writeSegment(state, dir, segId, m.nBuckets)
+      }
+    }
   }
 
   /** Fold every committed segment into a fresh single-segment store at

@@ -88,9 +88,8 @@ object MediaFingerprintStore extends graft.sources.SegmentedStore {
     if (fs.exists(segsRoot)) fs.delete(segsRoot, true)
     graft.sources.ArtifactJson.writeFile(spark, s"$dir/_manifest.json",
       s"""{"version":1,"nBuckets":$nBuckets,"n":$n,"bands":$bands}""")
-    val pinned = fps.localCheckpoint(true)
-    try writeSegment(pinned, ids, dir, segmentId = 0L, bands, nBuckets)
-    finally graft.Pins.release(pinned)
+    graft.Pins.scoped(scope => writeSegment(scope.pin(fps), ids, dir, segmentId = 0L, bands,
+      nBuckets))
   }
 
   /** Fold a batch of NEW media (typically [[dedupBatch]] survivors) into
@@ -111,13 +110,11 @@ object MediaFingerprintStore extends graft.sources.SegmentedStore {
     val m = loadManifest(spark, dir)
     if (segmentId > 0L && segmentCommitted(spark, dir, segmentId))
       return
-    val fps = Multimodal.videoFrameHashes(newDocs, idCol, payloadCol, m.n)
-      .select(col(idCol).cast("long").as("id"), col("sample_idx").as("slot"),
-        col("frame_hash").as("fp"))
-      .localCheckpoint(true)
-    try appendFps(fps, newDocs.select(col(idCol).cast("long").as("id")),
-      dir, segmentId, m)
-    finally graft.Pins.release(fps)
+    graft.Pins.scoped(scope => appendFps(
+      scope.pin(Multimodal.videoFrameHashes(newDocs, idCol, payloadCol, m.n)
+        .select(col(idCol).cast("long").as("id"), col("sample_idx").as("slot"),
+          col("frame_hash").as("fp"))),
+      newDocs.select(col(idCol).cast("long").as("id")), dir, segmentId, m))
   }
 
   /** [[append]] from precomputed fingerprints (see [[buildFromFps]] for
@@ -126,9 +123,8 @@ object MediaFingerprintStore extends graft.sources.SegmentedStore {
   def appendFromFps(fps: DataFrame, ids: DataFrame, dir: String,
       segmentId: Long = -1L): Unit = {
     graft.sources.SegmentCompaction.recover(fps.sparkSession, dir) // before loadManifest
-    val pinned = fps.localCheckpoint(true)
-    try appendFps(pinned, ids, dir, segmentId, loadManifest(fps.sparkSession, dir))
-    finally graft.Pins.release(pinned)
+    graft.Pins.scoped(scope => appendFps(scope.pin(fps), ids, dir, segmentId,
+      loadManifest(fps.sparkSession, dir)))
   }
 
   private def appendFps(fps: DataFrame, ids: DataFrame, dir: String,

@@ -162,21 +162,16 @@ object Similarity {
     * exceed nlist-1 — and [[rebalanceIvfIndex]]).
     */
   def saveIvfIndexRefined(corpus: DataFrame, dir: String, vecCol: String,
-      idCol: String, nlist: Int, iters: Int = 1): Unit = {
-    val cents = refinedCentroids(corpus, vecCol, idCol, nlist, iters)
-      .localCheckpoint(true)
-    try {
-      val indexed = assignCells(corpus, vecCol, idCol, cents).localCheckpoint(true)
-      try {
-        graft.table.WriteModes.staticPartitionOverwrite(indexed, dir, "cell")
-        val counts = indexed.groupBy(col("cell").cast("long").as("cell"))
-          .agg(count(lit(1)).as("n_rows"))
-        writeIvfSidecar(
-          cents.join(counts, Seq("cell"), "left")
-            .withColumn("n_rows", coalesce(col("n_rows"), lit(0L))),
-          dir)
-      } finally graft.Pins.release(indexed)
-    } finally graft.Pins.release(cents)
+      idCol: String, nlist: Int, iters: Int = 1): Unit = graft.Pins.scoped { scope =>
+    val cents = scope.pin(refinedCentroids(corpus, vecCol, idCol, nlist, iters))
+    val indexed = scope.pin(assignCells(corpus, vecCol, idCol, cents))
+    graft.table.WriteModes.staticPartitionOverwrite(indexed, dir, "cell")
+    val counts = indexed.groupBy(col("cell").cast("long").as("cell"))
+      .agg(count(lit(1)).as("n_rows"))
+    writeIvfSidecar(
+      cents.join(counts, Seq("cell"), "left")
+        .withColumn("n_rows", coalesce(col("n_rows"), lit(0L))),
+      dir)
   }
 
   /** Persist an IVF index as the on-disk artifact probes reuse across
@@ -260,18 +255,18 @@ object Similarity {
   /** Assign a batch of new vectors to the EXISTING centroids of a
     * persisted appendable index ([[assignCells]] — the build's own
     * kernel), enforcing the append contract (every new id above every
-    * centroid cell id). Returns null for an empty batch. The pinned
-    * sidecar rides back for callers that update counts; callers own
-    * unpersisting both returned frames. Shared by the batch
+    * centroid cell id). Returns `(assigned, sidecar)`, both pinned in the
+    * caller's `scope`; `assigned` is null for an empty batch. The sidecar
+    * rides back for callers that update counts. Shared by the batch
     * [[appendToIvfIndex]] and the streaming twin
     * ([[graft.streaming.StreamingAnnIndex]]).
     */
-  private[graft] def assignAgainstSidecar(newVectors: DataFrame, vecCol: String,
-      idCol: String, dir: String): (DataFrame, DataFrame) = {
+  private[graft] def assignAgainstSidecar(scope: graft.Pins.Scope, newVectors: DataFrame,
+      vecCol: String, idCol: String, dir: String): (DataFrame, DataFrame) = {
     val spark = newVectors.sparkSession
     // pin the sidecar BEFORE any write: a refreshed sidecar overwrites
     // the very files this plan would otherwise lazily re-read
-    val sidecar = loadIvfCentroids(spark, dir).localCheckpoint(true)
+    val sidecar = scope.pin(loadIvfCentroids(spark, dir))
     require(sidecar.count() > 0, s"ivf append: no _centroids sidecar under " +
       s"$dir - build with saveIvfIndexAppendable")
     val maxCell = sidecar.agg(max(col("cell"))).head().getLong(0)
@@ -282,33 +277,30 @@ object Similarity {
       s"ivf append: new ids start at ${bounds.getLong(0)} but the centroid set " +
         s"reaches cell $maxCell - appended ids must sort above every centroid id so " +
         "the probe-time centroid recovery (nlist lowest-id rows) stays the build's")
-    (assignCells(newVectors, vecCol, idCol,
-      sidecar.select(col("cell"), col("centroid"))).localCheckpoint(true), sidecar)
+    (scope.pin(assignCells(newVectors, vecCol, idCol,
+      sidecar.select(col("cell"), col("centroid")))), sidecar)
   }
 
   def appendToIvfIndex(newVectors: DataFrame, vecCol: String, idCol: String,
-      dir: String): Unit = {
+      dir: String): Unit = graft.Pins.scoped { scope =>
     val spark = newVectors.sparkSession
-    val (assigned, sidecar) = assignAgainstSidecar(newVectors, vecCol, idCol, dir)
-    try {
-      if (assigned == null) return // empty batch: nothing to append
-      try {
-        // schema discipline: the appended files must carry the index's columns
-        val want = spark.read.parquet(dir).columns.toSet
-        val have = assigned.columns.toSet
-        require(have == want, s"appendToIvfIndex: batch columns $have != index columns $want")
-        assigned.write.mode("append").partitionBy("cell").parquet(dir)
-        // sidecar last: centroids unchanged by construction (appended ids
-        // sort above them); counts = old sidecar + batch — a crash before
-        // this line leaves counts stale-low, never over-certified
-        val batchCounts = assigned.groupBy(col("cell").cast("long").as("cell"))
-          .agg(count(lit(1)).as("__add"))
-        writeIvfSidecar(
-          sidecar.join(batchCounts, Seq("cell"), "left")
-            .withColumn("n_rows", col("n_rows") + coalesce(col("__add"), lit(0L))),
-          dir)
-      } finally graft.Pins.release(assigned)
-    } finally graft.Pins.release(sidecar)
+    val (assigned, sidecar) = assignAgainstSidecar(scope, newVectors, vecCol, idCol, dir)
+    if (assigned != null) { // null for an empty batch: nothing to append
+      // schema discipline: the appended files must carry the index's columns
+      val want = spark.read.parquet(dir).columns.toSet
+      val have = assigned.columns.toSet
+      require(have == want, s"appendToIvfIndex: batch columns $have != index columns $want")
+      assigned.write.mode("append").partitionBy("cell").parquet(dir)
+      // sidecar last: centroids unchanged by construction (appended ids
+      // sort above them); counts = old sidecar + batch — a crash before
+      // this line leaves counts stale-low, never over-certified
+      val batchCounts = assigned.groupBy(col("cell").cast("long").as("cell"))
+        .agg(count(lit(1)).as("__add"))
+      writeIvfSidecar(
+        sidecar.join(batchCounts, Seq("cell"), "left")
+          .withColumn("n_rows", col("n_rows") + coalesce(col("__add"), lit(0L))),
+        dir)
+    }
   }
 
   /** Read a [[saveIvfIndex]] artifact back. The partition column comes
@@ -346,15 +338,15 @@ object Similarity {
     * require enforces exactly that from the refreshed sidecar.
     */
   def rebalanceIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      vecCol: String, idCol: String, maxCellRows: Long): Unit = {
+      vecCol: String, idCol: String, maxCellRows: Long): Unit = graft.Pins.scoped { scope =>
     require(maxCellRows >= 2, s"rebalanceIvfIndex: maxCellRows $maxCellRows < 2 " +
       "- a 1-row cell cannot split")
     // pin the sidecar BEFORE any write (it will be overwritten below)
-    val sidecar = loadIvfCentroids(spark, dir).localCheckpoint(true)
-    try {
-      val hot = sidecar.where(col("n_rows") > maxCellRows)
-        .select(col("cell")).collect().map(_.getLong(0)).sorted
-      if (hot.isEmpty) return // nothing over budget: no-op, artifact untouched
+    val sidecar = scope.pin(loadIvfCentroids(spark, dir))
+    val hot = sidecar.where(col("n_rows") > maxCellRows)
+      .select(col("cell")).collect().map(_.getLong(0)).sorted
+    // nothing over budget: no-op, artifact untouched
+    if (hot.nonEmpty) {
       // static partition pruning: only the hot cells' files are read
       val members = loadIvfIndex(spark, dir).where(col("cell").isInCollection(hot))
       val dataCols = members.columns.filterNot(_ == "cell").toSeq
@@ -374,11 +366,10 @@ object Similarity {
       // pinned: the candidate set (2 rows per hot cell) is re-read when
       // the sidecar refreshes BELOW the data overwrite — left lazy it
       // would re-scan the very files the overwrite just replaced
-      val cands = hotCents
+      val cands = scope.pin(hotCents
         .select(col("cell").as("old_cell"), col("cell").as("cand_cell"), col("centroid"))
         .unionByName(newCents
-          .select(col("old_cell"), col("new_cell").as("cand_cell"), col("centroid")))
-        .localCheckpoint(true)
+          .select(col("old_cell"), col("new_cell").as("cand_cell"), col("centroid"))))
       // fail fast BEFORE any write: a split id that collides with an
       // existing cell would smash that cell's partition in the dynamic
       // overwrite below. Possible whenever the id space overlaps the
@@ -398,36 +389,33 @@ object Similarity {
       // re-assign hot members between their cell's two candidates — the
       // assignCells kernel constrained to the member's own old cell
       // (join on old_cell, not a cross), map-side-combined argmax
-      val reassigned = members
+      val reassigned = scope.pin(members
         .join(broadcast(cands), col("cell") === col("old_cell"))
         .withColumn("__sim", round(V.cosine(col(vecCol), col("centroid")), 6))
         .groupBy(col(idCol).as("__gid"))
         .agg(max_by(
           struct(dataCols.map(col) :+ col("cand_cell").as("cell"): _*),
           struct(col("__sim"), (-col("cand_cell")).cast("long").as("tb"))).as("s"))
-        .select(col("s.*"))
         // pin before the overwrite: the write replaces the very
         // partitions this plan reads
-        .localCheckpoint(true)
-      try {
-        // per-write option, never a session-conf mutation (the WriteModes
-        // race argument: a concurrent static writer must not flip this
-        // touched-cells-only overwrite into a whole-index delete)
-        reassigned.write.option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").partitionBy("cell").parquet(dir)
-        // sidecar last: untouched cells keep their rows; hot cells and
-        // their splits get recounted from the rewritten data
-        val counts = reassigned.groupBy(col("cell").cast("long").as("cell"))
-          .agg(count(lit(1)).as("n_rows"))
-        val refreshed = sidecar.where(!col("cell").isInCollection(hot))
-          .select(col("cell"), col("centroid"), col("n_rows"))
-          .unionByName(cands
-            .select(col("cand_cell").as("cell"), col("centroid"))
-            .join(counts, Seq("cell"), "left")
-            .withColumn("n_rows", coalesce(col("n_rows"), lit(0L))))
-        writeIvfSidecar(refreshed, dir)
-      } finally { graft.Pins.release(reassigned); graft.Pins.release(cands) }
-    } finally graft.Pins.release(sidecar)
+        .select(col("s.*")))
+      // per-write option, never a session-conf mutation (the WriteModes
+      // race argument: a concurrent static writer must not flip this
+      // touched-cells-only overwrite into a whole-index delete)
+      reassigned.write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").partitionBy("cell").parquet(dir)
+      // sidecar last: untouched cells keep their rows; hot cells and
+      // their splits get recounted from the rewritten data
+      val counts = reassigned.groupBy(col("cell").cast("long").as("cell"))
+        .agg(count(lit(1)).as("n_rows"))
+      val refreshed = sidecar.where(!col("cell").isInCollection(hot))
+        .select(col("cell"), col("centroid"), col("n_rows"))
+        .unionByName(cands
+          .select(col("cand_cell").as("cell"), col("centroid"))
+          .join(counts, Seq("cell"), "left")
+          .withColumn("n_rows", coalesce(col("n_rows"), lit(0L))))
+      writeIvfSidecar(refreshed, dir)
+    }
   }
 
   /** Probe a persisted appendable index with its SIDECAR centroids —
@@ -458,25 +446,23 @@ object Similarity {
     * under-certified, never wrong).
     */
   def saveIvfPqIndex(corpus: DataFrame, dir: String, vecCol: String, idCol: String,
-      nlist: Int, m: Int, k: Int): Unit = {
-    val indexed = ivfBuild(corpus, vecCol, idCol, nlist).localCheckpoint(true)
-    try {
-      val model = pqTrain(corpus, vecCol, idCol, m, k)
-      graft.table.WriteModes.staticPartitionOverwrite(
-        pqEncode(indexed, vecCol, model), dir, "cell")
-      writeIvfSidecarFor(indexed, dir, vecCol, idCol, nlist)
-      val spark = corpus.sparkSession
-      val rows = for (j <- 0 until model.m; c <- 0 until model.k)
-        yield Row(j, c, model.centroids(j)(c).toSeq)
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.IntegerType, false),
-            org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.IntegerType, false),
-            org.apache.spark.sql.types.StructField("centroid",
-              org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType), false))))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/_codebooks")
-    } finally graft.Pins.release(indexed)
+      nlist: Int, m: Int, k: Int): Unit = graft.Pins.scoped { scope =>
+    val indexed = scope.pin(ivfBuild(corpus, vecCol, idCol, nlist))
+    val model = pqTrain(corpus, vecCol, idCol, m, k)
+    graft.table.WriteModes.staticPartitionOverwrite(
+      pqEncode(indexed, vecCol, model), dir, "cell")
+    writeIvfSidecarFor(indexed, dir, vecCol, idCol, nlist)
+    val spark = corpus.sparkSession
+    val rows = for (j <- 0 until model.m; c <- 0 until model.k)
+      yield Row(j, c, model.centroids(j)(c).toSeq)
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.IntegerType, false),
+          org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.IntegerType, false),
+          org.apache.spark.sql.types.StructField("centroid",
+            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType), false))))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_codebooks")
   }
 
   /** The `_codebooks` sidecar of a [[saveIvfPqIndex]] artifact, as the

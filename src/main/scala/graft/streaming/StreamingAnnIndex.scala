@@ -44,13 +44,11 @@ object StreamingAnnIndex {
     * (data first, sidecar last).
     */
   def initialize(corpus: DataFrame, vecCol: String, idCol: String, nlist: Int,
-      dir: String): Unit = {
-    val indexed = Similarity.ivfBuild(corpus, vecCol, idCol, nlist).localCheckpoint(true)
-    try {
-      graft.table.WriteModes.staticPartitionOverwrite(indexed, s"$dir/batch=0", "cell")
-      // sidecar last, at the ROOT (one certification point for all batches)
-      Similarity.writeIvfSidecarFor(indexed, dir, vecCol, idCol, nlist)
-    } finally graft.Pins.release(indexed)
+      dir: String): Unit = graft.Pins.scoped { scope =>
+    val indexed = scope.pin(Similarity.ivfBuild(corpus, vecCol, idCol, nlist))
+    graft.table.WriteModes.staticPartitionOverwrite(indexed, s"$dir/batch=0", "cell")
+    // sidecar last, at the ROOT (one certification point for all batches)
+    Similarity.writeIvfSidecarFor(indexed, dir, vecCol, idCol, nlist)
   }
 
   /** Wire a vector stream into continuous index maintenance. Caller sets
@@ -75,11 +73,10 @@ object StreamingAnnIndex {
       idCol: String,
       indexDir: String,
       statsDir: String
-  ): Unit = {
-    val (assigned, sidecar) =
-      Similarity.assignAgainstSidecar(batch.drop("batch"), vecCol, idCol, indexDir)
-    try {
-      if (assigned == null) return // empty batch
+  ): Unit = graft.Pins.scoped { scope =>
+    val (assigned, _) =
+      Similarity.assignAgainstSidecar(scope, batch.drop("batch"), vecCol, idCol, indexDir)
+    if (assigned != null) { // null for an empty batch: nothing to write
       graft.table.WriteModes.staticPartitionOverwrite(
         assigned, s"$indexDir/batch=${batchId + 1}", "cell")
       // manifest last, per batch: replay overwrites both data and line
@@ -87,8 +84,7 @@ object StreamingAnnIndex {
         .agg(count(lit(1)).as("n_rows"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$statsDir/batch=${batchId + 1}")
-      graft.Pins.release(assigned)
-    } finally graft.Pins.release(sidecar)
+    }
   }
 
   /** The unified index: base build + every committed batch, `cell`
@@ -175,8 +171,8 @@ object StreamingAnnIndex {
     }
     // recount the new base into the root sidecar (centroids unchanged);
     // pinned first — the write overwrites the files the plan reads
-    val sidecar = Similarity.loadIvfCentroids(spark, indexDir).localCheckpoint(true)
-    try {
+    graft.Pins.scoped { scope =>
+      val sidecar = scope.pin(Similarity.loadIvfCentroids(spark, indexDir))
       val counts = spark.read.parquet(s"$indexDir/batch=0")
         .groupBy(col("cell").cast("long").as("cell")).agg(count(lit(1)).as("n_rows"))
       Similarity.writeIvfSidecar(
@@ -184,7 +180,7 @@ object StreamingAnnIndex {
           .join(counts, Seq("cell"), "left")
           .withColumn("n_rows", coalesce(col("n_rows"), lit(0L))),
         indexDir)
-    } finally graft.Pins.release(sidecar)
+    }
   }
 
   /** Per-cell row counts across base + batches: the base `_centroids`

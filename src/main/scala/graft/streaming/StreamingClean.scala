@@ -50,17 +50,16 @@ object StreamingClean {
       terms: Seq[String],
       maxHits: Int,
       outDir: String
-  ): Unit = {
+  ): Unit = graft.Pins.scoped { scope =>
     // pin: the data write and the audit agg are two actions over the same
     // plan — micro-batch sources don't like multiple passes (the
     // StreamingComponents rule), and an unpinned plan re-runs the
     // blocklist/PII kernels twice per batch.
-    val tagged = batch.select(
+    val tagged = scope.pin(batch.select(
       col(idCol).as("id"),
       col(textCol).as("__text"),
       Blocklist.totalHits(col(textCol), terms).as("__bl"),
-      T.piiCounts(col(textCol)).as("__pii"))
-      .localCheckpoint(true)
+      T.piiCounts(col(textCol)).as("__pii")))
     tagged.where(col("__bl") <= maxHits)
       .select(col("id").as(idCol), T.piiRedact(col("__text")).as(textCol))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
@@ -80,7 +79,6 @@ object StreamingClean {
       .withColumn("batch_id", lit(batchId))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/_audit/batch=$batchId")
-    graft.Pins.release(tagged)
   }
 
   /** All cleaned batches written so far. */

@@ -71,16 +71,16 @@ object StreamingComponents {
     val prior = spark.read.parquet(priorPath)
     // pin: the batch DataFrame is re-read twice for the node union and
     // once as edges; micro-batch sources don't like multiple passes
-    val e = batch.select(col("src"), col("dst")).localCheckpoint(true)
-    try {
+    // (a per-batch pin, released once the snapshot is on disk)
+    graft.Pins.scoped { scope =>
+      val e = scope.pin(batch.select(col("src"), col("dst")))
       val nodes = prior.select(col(idCol))
         .unionAll(e.select(col("src").as(idCol)))
         .unionAll(e.select(col("dst").as(idCol)))
         .distinct()
       LinkGraph.connectedComponentsIncremental(nodes, idCol, prior, e)
         .write.mode("overwrite").parquet(s"$dir/batch=${batchId + 1}")
-    } finally graft.Pins.release(e) // per-batch pin, write done (plain
-    // unpersist is a checkpoint no-op - the snapshot is on disk now)
+    }
   }
 
   /** The highest committed snapshot — the labels a reader serves. */

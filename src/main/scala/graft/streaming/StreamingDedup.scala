@@ -71,20 +71,17 @@ object StreamingDedup {
     // one time
     val batchSigs = Dedup.minHashSignatureTable(batch, textCol, idCol, shingleSize, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    try graft.Pins.scoped { scope =>
       // prior state: every batch directory except our own (a replay must
       // not dedup the batch against its own signatures)
       val corpusSigs = readSignatures(spark, sigDir, excludeBatch = Some(batchId))
         .getOrElse(emptySignatures(spark))
-      val survivors = Dedup
-        .minHashIncrementalSigs(corpusSigs, batchSigs, batch, idCol, numHashes, bands, threshold)
-        .localCheckpoint(true)
-      try {
-        survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-        batchSigs
-          .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .write.mode("overwrite").parquet(s"$sigDir/batch=$batchId")
-      } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
+      val survivors = scope.pin(Dedup
+        .minHashIncrementalSigs(corpusSigs, batchSigs, batch, idCol, numHashes, bands, threshold))
+      survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
+      batchSigs
+        .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$sigDir/batch=$batchId")
     } finally batchSigs.unpersist()
   }
 

@@ -133,10 +133,9 @@ object StreamingLinkGraph {
       s"StreamingLinkGraph: batch ids start at ${bounds.getLong(1)} but the graph " +
         s"already contains ids up to $priorMax - appended ids must sort above every " +
         "existing id")
-    val batchSpans = batch.select(col(idCol).cast("long").as("id"),
-        explode(T.shingleHashes(col(textCol), m.w)).as("h"))
-      .localCheckpoint(true)
-    try {
+    graft.Pins.scoped { scope =>
+      val batchSpans = scope.pin(batch.select(col(idCol).cast("long").as("id"),
+        explode(T.shingleHashes(col(textCol), m.w)).as("h")))
       val batchDf = batchSpans.groupBy(col("h")).agg(count(lit(1)).as("__add"))
       val tb = batchDf.select(LinkGraphStore.spanBucketCol(m.nBuckets).as("b"))
         .distinct().collect().map(_.getInt(0)).sorted
@@ -145,39 +144,34 @@ object StreamingLinkGraph {
       val baseDfs = LinkGraphStore.readDfsSurface(spark, baseDir)
         .where(col("bucket").isInCollection(tb)).select(col("h"), col("df"))
       val effDf = effectiveDfs(spark, baseDfs, deltaRoot, prior)
-      val touched = batchDf.join(effDf, Seq("h"), "left")
+      val touched = scope.pin(batchDf.join(effDf, Seq("h"), "left")
         .select(col("h"), coalesce(col("df"), lit(0L)).as("old_df"),
-          (coalesce(col("df"), lit(0L)) + col("__add")).as("new_df"))
-        .localCheckpoint(true)
-      try {
-        val basePosts = LinkGraphStore.readPostingsSurface(spark, baseDir)
-          .where(col("bucket").isInCollection(tb)).select(col("h"), col("id"))
-        val effPosts = effectivePostings(spark, basePosts, deltaRoot, prior)
-        val delta = LinkGraphStore.edgeDeltas(batchSpans, touched, effPosts, m.maxDf)
-        try {
-          // delta surfaces (all plain overwrites — torn attempts rewrite)
-          delta.select(col("id_a"), col("id_b"), col("__d").as("d"))
-            .write.mode("overwrite").parquet(s"$dDir/edges")
-          touched.select(col("h"), col("new_df").as("df"))
-            .write.mode("overwrite").parquet(s"$dDir/dfs")
-          batchSpans.join(touched.where(col("new_df") <= m.maxDf).select(col("h")), Seq("h"))
-            .select(col("h"), col("id"))
-            .write.mode("overwrite").parquet(s"$dDir/post_add")
-          touched.where(col("new_df") > m.maxDf).select(col("h"))
-            .write.mode("overwrite").parquet(s"$dDir/blown")
-          // the batch's doc ids: [[newEdges]] emits them as self-loops so
-          // isolated documents still register as nodes downstream (the
-          // StreamingComponents node-universe convention)
-          batch.select(col(idCol).cast("long").as("id")).distinct()
-            .write.mode("overwrite").parquet(s"$dDir/docids")
-          val nRetr = delta.where(col("__d") < 0).count()
-          graft.sources.ArtifactJson.writeFile(spark, s"$dDir/_meta.json",
-            s"""{"batchId":$batchId,"nDocs":${bounds.getLong(0)},""" +
-              s""""maxId":${bounds.getLong(2)},"nRetractions":$nRetr}""")
-          graft.sources.ArtifactJson.writeFile(spark, s"$dDir/_done", "") // marker LAST
-        } finally graft.Pins.release(delta)
-      } finally graft.Pins.release(touched)
-    } finally graft.Pins.release(batchSpans)
+          (coalesce(col("df"), lit(0L)) + col("__add")).as("new_df")))
+      val basePosts = LinkGraphStore.readPostingsSurface(spark, baseDir)
+        .where(col("bucket").isInCollection(tb)).select(col("h"), col("id"))
+      val effPosts = effectivePostings(spark, basePosts, deltaRoot, prior)
+      val delta = LinkGraphStore.edgeDeltas(scope, batchSpans, touched, effPosts, m.maxDf)
+      // delta surfaces (all plain overwrites — torn attempts rewrite)
+      delta.select(col("id_a"), col("id_b"), col("__d").as("d"))
+        .write.mode("overwrite").parquet(s"$dDir/edges")
+      touched.select(col("h"), col("new_df").as("df"))
+        .write.mode("overwrite").parquet(s"$dDir/dfs")
+      batchSpans.join(touched.where(col("new_df") <= m.maxDf).select(col("h")), Seq("h"))
+        .select(col("h"), col("id"))
+        .write.mode("overwrite").parquet(s"$dDir/post_add")
+      touched.where(col("new_df") > m.maxDf).select(col("h"))
+        .write.mode("overwrite").parquet(s"$dDir/blown")
+      // the batch's doc ids: [[newEdges]] emits them as self-loops so
+      // isolated documents still register as nodes downstream (the
+      // StreamingComponents node-universe convention)
+      batch.select(col(idCol).cast("long").as("id")).distinct()
+        .write.mode("overwrite").parquet(s"$dDir/docids")
+      val nRetr = delta.where(col("__d") < 0).count()
+      graft.sources.ArtifactJson.writeFile(spark, s"$dDir/_meta.json",
+        s"""{"batchId":$batchId,"nDocs":${bounds.getLong(0)},""" +
+          s""""maxId":${bounds.getLong(2)},"nRetractions":$nRetr}""")
+      graft.sources.ArtifactJson.writeFile(spark, s"$dDir/_done", "") // marker LAST
+    }
   }
 
   /** Canonical (id_a, id_b, support) edges = base merged with every
@@ -293,8 +287,8 @@ object StreamingLinkGraph {
     val m = LinkGraphStore.loadManifest(spark, s"$dir/base")
     val committed = committedBatches(spark, dir)
     val nB = m.nBuckets
-    val edges = readEdgesCanonical(spark, dir).localCheckpoint(true)
-    try {
+    graft.Pins.scoped { scope =>
+      val edges = scope.pin(readEdgesCanonical(spark, dir))
       val posts = effectivePostings(spark,
         LinkGraphStore.readPostingsSurface(spark, s"$dir/base")
           .select(col("h"), col("id")),
@@ -326,7 +320,7 @@ object StreamingLinkGraph {
         epoch = newEpoch)
       // manifest last, via the store's own writer (same JSON shape)
       LinkGraphStore.writeManifestFor(spark, outDir, manifest)
-    } finally graft.Pins.release(edges)
+    }
   }
 
   final case class DeltaMeta(batchId: Long, nDocs: Long, maxId: Long, nRetractions: Long)

@@ -70,20 +70,17 @@ object StreamingMediaDedup {
     val batchFps = Multimodal.videoFrameHashes(batch, idCol, payloadCol, n)
       .select(col(idCol).as("id"), col("sample_idx").as("slot"), col("frame_hash").as("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    try graft.Pins.scoped { scope =>
       val corpusFps = readFingerprints(spark, fpDir, excludeBatch = Some(batchId))
         .getOrElse(emptyFingerprints(spark))
       val (verdict, members) = verdictAndMembers(corpusFps, batchFps, batch, idCol,
         maxHamming, bands, minMatches)
-      try {
-        val survivors = verdict.localCheckpoint(true)
-        try {
-          survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-          batchFps
-            .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$fpDir/batch=$batchId")
-        } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
-      } finally graft.Pins.release(members) // batchGroups' pin, read by the verdict
+      scope.adopt(members) // batchGroups' pin, read by the verdict
+      val survivors = scope.pin(verdict)
+      survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
+      batchFps
+        .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$fpDir/batch=$batchId")
     } finally batchFps.unpersist()
   }
 

@@ -70,23 +70,19 @@ object StreamingSemDedup {
     val assigned = SemDedup.assignClusters(batch, vecCol, centroids)
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"), col("cluster"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    try graft.Pins.scoped { scope =>
       val prior = readState(spark, stateDir, excludeBatch = Some(batchId))
         .getOrElse(emptyState(spark))
       val dropped = droppedIds(prior, assigned, tau).withColumnRenamed("drop_id", idCol)
       // survivors = the ORIGINAL batch rows (all payload columns, caller's
       // column names) — the twins' contract
-      val survivors = batch
-        .join(dropped, Seq(idCol), "left_anti")
-        .localCheckpoint(true)
-      try {
-        survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-        // state = the survivors' (id, cluster, vec) rows only
-        assigned
-          .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .select(col("id"), col("cluster"), col("vec"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-      } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
+      val survivors = scope.pin(batch.join(dropped, Seq(idCol), "left_anti"))
+      survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
+      // state = the survivors' (id, cluster, vec) rows only
+      assigned
+        .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .select(col("id"), col("cluster"), col("vec"))
+        .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
     } finally assigned.unpersist()
   }
 

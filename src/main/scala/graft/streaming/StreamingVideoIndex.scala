@@ -62,38 +62,32 @@ object StreamingVideoIndex {
       indexDir: String,
       quarantineDir: String,
       statsDir: String
-  ): Unit = {
+  ): Unit = graft.Pins.scoped { scope =>
     // payloads parse ONCE; the index is both the output and the basis of
-    // the quarantine anti-join and the stats line
-    val index = Multimodal.indexVideoAuto(batch, idCol, payloadCol)
-      .localCheckpoint(true)
-    try {
-      index.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      val quarantined = batch
-        .join(index.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-        .select(col(idCol),
-          coalesce(length(col(payloadCol)).cast("long"), lit(0L)).as("n_bytes"),
-          when(col(payloadCol).isNull, lit("null_payload"))
-            .otherwise(lit("unparseable_container")).as("reason"))
-        .localCheckpoint(true)
-      try {
-        quarantined.write.mode("overwrite").parquet(s"$quarantineDir/batch=$batchId")
-        val counts = index.agg(
-          countDistinct(col(idCol)).as("n_indexed"),
-          count(lit(1)).as("n_samples"),
-          coalesce(sum(when(col("keyframe"), 1L).otherwise(0L)), lit(0L)).as("n_keyframes"))
-        val nQuarantined = quarantined.count()
-        counts
-          .select(lit(batchId).as("batch_id"),
-            (col("n_indexed") + lit(nQuarantined)).as("n_videos"),
-            col("n_indexed"), lit(nQuarantined).as("n_quarantined"),
-            col("n_samples"), col("n_keyframes"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$statsDir/batch=$batchId")
-      } finally graft.Pins.release(quarantined) // per-batch pin: a long
-      // stream would otherwise hold one batch-sized block per micro-batch
-      // until ContextCleaner GC (plain unpersist is a checkpoint no-op)
-    } finally graft.Pins.release(index)
+    // the quarantine anti-join and the stats line. Both pins are per
+    // batch: a long stream would otherwise hold batch-sized blocks per
+    // micro-batch until ContextCleaner GC
+    val index = scope.pin(Multimodal.indexVideoAuto(batch, idCol, payloadCol))
+    index.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+    val quarantined = scope.pin(batch
+      .join(index.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+      .select(col(idCol),
+        coalesce(length(col(payloadCol)).cast("long"), lit(0L)).as("n_bytes"),
+        when(col(payloadCol).isNull, lit("null_payload"))
+          .otherwise(lit("unparseable_container")).as("reason")))
+    quarantined.write.mode("overwrite").parquet(s"$quarantineDir/batch=$batchId")
+    val counts = index.agg(
+      countDistinct(col(idCol)).as("n_indexed"),
+      count(lit(1)).as("n_samples"),
+      coalesce(sum(when(col("keyframe"), 1L).otherwise(0L)), lit(0L)).as("n_keyframes"))
+    val nQuarantined = quarantined.count()
+    counts
+      .select(lit(batchId).as("batch_id"),
+        (col("n_indexed") + lit(nQuarantined)).as("n_videos"),
+        col("n_indexed"), lit(nQuarantined).as("n_quarantined"),
+        col("n_samples"), col("n_keyframes"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$statsDir/batch=$batchId")
   }
 
   /** All index rows committed so far. Fails with a clear message before

@@ -80,8 +80,11 @@ object Bm25Store extends graft.sources.SegmentedStore {
 
   /** Build from a corpus and persist — [[Bm25.buildIndex]] + [[save]]. */
   def build(corpus: DataFrame, textCol: String, idCol: String, dir: String,
-      nBuckets: Int = 64): Unit =
-    save(Bm25.buildIndex(corpus, textCol, idCol), dir, nBuckets)
+      nBuckets: Int = 64): Unit = graft.Pins.scoped { scope =>
+    val index = Bm25.buildIndex(corpus, textCol, idCol)
+    scope.adopt(index.postings) // buildIndex's pin: the index ends with the save
+    save(index, dir, nBuckets)
+  }
 
   /** Fold a new segment (disjoint doc ids, built with
     * [[Bm25.buildIndex]] over the NEW documents only) into the artifact
@@ -218,26 +221,24 @@ object Bm25Store extends graft.sources.SegmentedStore {
   // ---- internals ----
 
   private def writeSegment(index: Bm25.Index, dir: String, segmentId: Long,
-      nBuckets: Int): Unit = {
+      nBuckets: Int): Unit = graft.Pins.scoped { scope =>
     val spark = index.postings.sparkSession
-    val seg = index.postings.localCheckpoint(true)
-    try {
-      val sDir = s"$dir/segs/seg=$segmentId"
-      seg.withColumn("bucket", termBucket(nBuckets))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$sDir/postings")
-      index.dfTab.withColumn("bucket", termBucket(nBuckets))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$sDir/dfs")
-      val mx = seg.agg(max(col("doc_id").cast("long"))).head() match {
-        case r if r.isNullAt(0) => Long.MinValue
-        case r => r.getLong(0)
-      }
-      graft.sources.ArtifactJson.writeFile(spark, s"$sDir/_meta.json",
-        s"""{"segId":$segmentId,"nDocs":${index.nDocs},"sumLen":${index.sumLen},""" +
-          s""""maxDocId":$mx}""")
-      graft.sources.ArtifactJson.writeFile(spark, s"$sDir/_done", "") // commit LAST
-    } finally graft.Pins.release(seg)
+    val seg = scope.pin(index.postings)
+    val sDir = s"$dir/segs/seg=$segmentId"
+    seg.withColumn("bucket", termBucket(nBuckets))
+      .repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$sDir/postings")
+    index.dfTab.withColumn("bucket", termBucket(nBuckets))
+      .repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$sDir/dfs")
+    val mx = seg.agg(max(col("doc_id").cast("long"))).head() match {
+      case r if r.isNullAt(0) => Long.MinValue
+      case r => r.getLong(0)
+    }
+    graft.sources.ArtifactJson.writeFile(spark, s"$sDir/_meta.json",
+      s"""{"segId":$segmentId,"nDocs":${index.nDocs},"sumLen":${index.sumLen},""" +
+        s""""maxDocId":$mx}""")
+    graft.sources.ArtifactJson.writeFile(spark, s"$sDir/_done", "") // commit LAST
   }
 
   private def writeRootManifest(spark: SparkSession, dir: String, nBuckets: Int): Unit =

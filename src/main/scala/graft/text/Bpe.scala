@@ -62,18 +62,16 @@ object Bpe {
     * Stops early (shorter result) if the corpus runs out of pairs.
     * Driver-side cost: one 1-row collect per round.
     */
-  def train(docs: DataFrame, textCol: Column, merges: Int): Seq[Merge] = {
+  def train(docs: DataFrame, textCol: Column, merges: Int): Seq[Merge] = graft.Pins.scoped { scope =>
     require(merges >= 1, s"merges must be >= 1, got $merges")
     // pin the dict: each round's collect re-executes lineage, which must
     // not re-scan the corpus. The pin is released after the loop — the
-    // result is a driver-side Seq, nothing lazy survives it (plain
-    // unpersist would be a checkpoint no-op and leak the dict until GC)
-    val dictPinned = wordDict(docs, textCol).localCheckpoint(true)
-    var words: DataFrame = dictPinned
+    // result is a driver-side Seq, nothing lazy survives it
+    var words = scope.pin(wordDict(docs, textCol))
     val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var step = 1
     var exhausted = false
-    try while (step <= merges && !exhausted) {
+    while (step <= merges && !exhausted) {
       val top = words
         .select(col("cnt"), explode(pairsOf(col("s"))).as("p"))
         .groupBy("p").agg(sum("cnt").as("c"))
@@ -92,7 +90,7 @@ object Bpe {
             lit(" " + pair.replace(" ", "  ") + " "), lit(s" $merged ")))
         step += 1
       }
-    } finally graft.Pins.release(dictPinned)
+    }
     out.toSeq
   }
 

@@ -108,9 +108,10 @@ object HeavyHitters {
     }
     // the summary is tiny (≤ partitions·m rows) and consumed twice (n +
     // candidate set) — eager localCheckpoint so pass 1 runs once; the
-    // summary-sized pin is left for GC per the family discipline
-    // (releasing before the returned plan materializes breaks it), and a
-    // checkpoint never pollutes the session CacheManager
+    // summary-sized pin rides the returned plan, so per the ownership rule
+    // in [[graft.Pins]] it is the caller's, not scoped (releasing it before
+    // that plan materializes breaks it), and a checkpoint never pollutes
+    // the session CacheManager
     val sdf = summary.toDF("item", "w").localCheckpoint(true)
     // one summary-sized aggregate yields BOTH n and the candidate count
     // (the broadcast-guard route input) — no extra job vs the unguarded

@@ -89,12 +89,11 @@ object HyperBallStore {
     val ids = nodes.select(col(idCol).cast("long").as("id"))
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
-    try {
-      val init = ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg"))
-        .localCheckpoint(true)
+    try graft.Pins.scoped { scope =>
+      val init = scope.pin(ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg")))
       val nNodes = init.count()
       writeHop(init, dir, 0, nBuckets)
-      graft.Pins.release(graft.Iterate(init, maxHops, done = (regs, d) => {
+      scope.adopt(graft.Iterate(init, maxHops, done = (regs, d) => {
         writeHop(regs, dir, d, nBuckets); false
       })(r => HyperBall.registerRound(e, r.state)))
       writeManifest(spark, dir,
@@ -187,8 +186,8 @@ object HyperBallStore {
         s"horizon ${m.maxHops} (shallower readouts just read the stored hops)")
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
-    try {
-      graft.Pins.release(graft.Iterate(readHop(spark, dir, m.maxHops).localCheckpoint(true),
+    try graft.Pins.scoped { scope =>
+      scope.adopt(graft.Iterate(scope.pin(readHop(spark, dir, m.maxHops)),
         newMaxHops - m.maxHops, done = (regs, i) => {
           writeHop(regs, dir, m.maxHops + i, m.nBuckets); false
         })(r => HyperBall.registerRound(e, r.state)))

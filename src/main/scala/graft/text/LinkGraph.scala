@@ -355,14 +355,13 @@ object LinkGraph {
     require(scale >= 1 && scale <= Long.MaxValue / dampDen,
       s"LinkGraph.pageRankPersonalized: scale $scale would overflow the damping multiply")
     val ewd = degreeEdges(edges).cache()
-    // (id, __seed) pinned once: consumed by the seed count, the initial
-    // distribution, and every iteration's teleport lane
-    val idsFlag = nodes.select(col(idCol).as("id"))
-      .join(seeds.select(col(idCol).as("id")).distinct().withColumn("__s", lit(true)),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(false)).as("__seed"))
-      .localCheckpoint(true)
-    try {
+    try graft.Pins.scoped { scope =>
+      // (id, __seed) pinned once: consumed by the seed count, the initial
+      // distribution, and every iteration's teleport lane
+      val idsFlag = scope.pin(nodes.select(col(idCol).as("id"))
+        .join(seeds.select(col(idCol).as("id")).distinct().withColumn("__s", lit(true)),
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("__s"), lit(false)).as("__seed")))
       val nSeeds = idsFlag.where(col("__seed")).count()
       if (nSeeds == 0) throw new IllegalArgumentException(
         "LinkGraph.pageRankPersonalized: no seed is in the node set")
@@ -384,7 +383,7 @@ object LinkGraph {
             (when(col("__sd"), lit(teleport)).otherwise(lit(0L)) +
               expr(s"(${dampNum}L * __s) div ${dampDen}L")).as("r"))
       }, idCol, scale)
-    } finally { ewd.unpersist(); graft.Pins.release(idsFlag) }
+    } finally ewd.unpersist()
   }
 
   /** [[pageRank]] with per-edge Long weights (`edges: (src, dst,

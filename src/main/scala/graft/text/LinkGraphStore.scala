@@ -98,39 +98,32 @@ object LinkGraphStore {
     val deltaRoot = new org.apache.hadoop.fs.Path(s"$dir/deltas")
     val dfsys = deltaRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (dfsys.exists(deltaRoot)) dfsys.delete(deltaRoot, true)
-    // pinned: consumed by the df agg, the postings write, and the pair join
-    val spans = docs.select(col(idCol).cast("long").as("id"),
-        explode(T.shingleHashes(col(textCol), w)).as("h"))
-      .localCheckpoint(true)
-    try {
-      val dfs = spans.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .localCheckpoint(true)
-      try {
-        val inPost = dfs.where(col("df") <= maxDf).select(col("h"))
-        val postings = spans.join(inPost, Seq("h"))
-        val band = dfs.where(col("df") >= 2 && col("df") <= maxDf).select(col("h"))
-        val sp = spans.join(band, Seq("h"))
-        val edges = sp.select(col("h"), col("id").as("id_a"))
-          .join(sp.select(col("h"), col("id").as("id_b")), Seq("h"))
-          .where(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("support"))
-          .localCheckpoint(true)
-        try {
-          writeBucketed(edges.withColumn("bucket", edgeBucket(nBuckets)),
-            s"$dir/edges")
-          writeBucketed(postings.withColumn("bucket", spanBucket(nBuckets)),
-            s"$dir/postings")
-          writeBucketed(dfs.withColumn("bucket", spanBucket(nBuckets)),
-            s"$dir/dfs")
-          val stats = docs.agg(count(lit(1)).as("n"),
-            max(col(idCol).cast("long")).as("mx")).head()
-          writeManifest(spark, dir, Manifest(1, w, maxDf, nBuckets,
-            nDocs = stats.getLong(0), nEdges = edges.count(),
-            maxId = if (stats.isNullAt(1)) Long.MinValue else stats.getLong(1),
-            lastBatchId = -1L, epoch = newEpoch))
-        } finally graft.Pins.release(edges)
-      } finally graft.Pins.release(dfs)
-    } finally graft.Pins.release(spans)
+    graft.Pins.scoped { scope =>
+      // pinned: consumed by the df agg, the postings write, and the pair join
+      val spans = scope.pin(docs.select(col(idCol).cast("long").as("id"),
+        explode(T.shingleHashes(col(textCol), w)).as("h")))
+      val dfs = scope.pin(spans.groupBy(col("h")).agg(count(lit(1)).as("df")))
+      val inPost = dfs.where(col("df") <= maxDf).select(col("h"))
+      val postings = spans.join(inPost, Seq("h"))
+      val band = dfs.where(col("df") >= 2 && col("df") <= maxDf).select(col("h"))
+      val sp = spans.join(band, Seq("h"))
+      val edges = scope.pin(sp.select(col("h"), col("id").as("id_a"))
+        .join(sp.select(col("h"), col("id").as("id_b")), Seq("h"))
+        .where(col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("support")))
+      writeBucketed(edges.withColumn("bucket", edgeBucket(nBuckets)),
+        s"$dir/edges")
+      writeBucketed(postings.withColumn("bucket", spanBucket(nBuckets)),
+        s"$dir/postings")
+      writeBucketed(dfs.withColumn("bucket", spanBucket(nBuckets)),
+        s"$dir/dfs")
+      val stats = docs.agg(count(lit(1)).as("n"),
+        max(col(idCol).cast("long")).as("mx")).head()
+      writeManifest(spark, dir, Manifest(1, w, maxDf, nBuckets,
+        nDocs = stats.getLong(0), nEdges = edges.count(),
+        maxId = if (stats.isNullAt(1)) Long.MinValue else stats.getLong(1),
+        lastBatchId = -1L, epoch = newEpoch))
+    }
   }
 
   /** Fold a batch of NEW documents into the artifact: extract spans from
@@ -187,10 +180,9 @@ object LinkGraphStore {
     // detected at the next loadManifest (stamps ahead of manifest)
     val newEpoch = m.epoch + 1L
     stampEpochs(spark, dir, newEpoch)
-    val batchSpans = newDocs.select(col(idCol).cast("long").as("id"),
-        explode(T.shingleHashes(col(textCol), m.w)).as("h"))
-      .localCheckpoint(true)
-    try {
+    graft.Pins.scoped { scope =>
+      val batchSpans = scope.pin(newDocs.select(col(idCol).cast("long").as("id"),
+        explode(T.shingleHashes(col(textCol), m.w)).as("h")))
       val batchDf = batchSpans.groupBy(col("h")).agg(count(lit(1)).as("__add"))
       // touched span buckets — the only df/postings partitions read or written
       val tb = batchDf.select(spanBucket(nB).as("b")).distinct()
@@ -199,79 +191,66 @@ object LinkGraphStore {
         .where(col("bucket").isInCollection(tb))
         .select(col("h"), col("df"))
       // (h, old_df, new_df) for every span the batch mentions
-      val touched = batchDf.join(oldDfs, Seq("h"), "left")
+      val touched = scope.pin(batchDf.join(oldDfs, Seq("h"), "left")
         .select(col("h"), coalesce(col("df"), lit(0L)).as("old_df"),
-          (coalesce(col("df"), lit(0L)) + col("__add")).as("new_df"))
-        .localCheckpoint(true)
-      try {
-        val oldPostings = readSurface(spark, s"$dir/postings", postingsSchema)
-          .where(col("bucket").isInCollection(tb))
-          .select(col("h"), col("id"))
-        val delta = edgeDeltas(batchSpans, touched, oldPostings, m.maxDf);
-        {
-          try {
-            // ---- edges: merge deltas into the touched edge buckets ----
-            val eb = delta.select(edgeBucket(nB).as("b")).distinct()
-              .collect().map(_.getInt(0)).sorted
-            var edgeCountDelta = 0L
-            if (eb.nonEmpty) {
-              // distinct intermediate name (__olds): aliasing the merged
-              // value AS "support" in the same select would SHADOW the
-              // input column for later expressions (the Spark 4
-              // lateral-alias trap in the verify notes)
-              val oldEdges = readSurface(spark, s"$dir/edges", edgesSchema)
-                .where(col("bucket").isInCollection(eb))
-                .select(col("id_a"), col("id_b"), col("support").as("__olds"))
-              val merged = oldEdges.join(delta, Seq("id_a", "id_b"), "full_outer")
-                .select(col("id_a"), col("id_b"),
-                  (coalesce(col("__olds"), lit(0L)) + coalesce(col("__d"), lit(0L)))
-                    .as("support"),
-                  col("__olds").isNotNull.as("__was"))
-                .localCheckpoint(true) // pinned: the write replaces the files it reads
-              try {
-                val counts = merged.agg(
-                  sum(when(col("support") > 0 && !col("__was"), 1L).otherwise(0L)),
-                  sum(when(col("support") <= 0 && col("__was"), 1L).otherwise(0L))).head()
-                edgeCountDelta = counts.getLong(0) - counts.getLong(1)
-                overwriteBuckets(merged.where(col("support") > 0)
-                    .select(col("id_a"), col("id_b"), col("support"))
-                    .withColumn("bucket", edgeBucket(nB)),
-                  s"$dir/edges", eb)
-              } finally graft.Pins.release(merged)
-            }
-            // ---- postings: touched buckets rewritten ----
-            // keep: untouched spans + touched spans still ≤ maxDf (old
-            // members); add: batch members of spans ending ≤ maxDf;
-            // drop: every row of spans crossing above maxDf
-            val blown = touched.where(col("new_df") > m.maxDf).select(col("h"))
-            val newPostings = oldPostings.join(blown, Seq("h"), "left_anti")
-              .unionByName(batchSpans
-                .join(touched.where(col("new_df") <= m.maxDf).select(col("h")), Seq("h"))
-                .select(col("h"), col("id")))
-              .localCheckpoint(true)
-            try overwriteBuckets(newPostings.withColumn("bucket", spanBucket(nB)),
-              s"$dir/postings", tb)
-            finally graft.Pins.release(newPostings)
-            // ---- dfs: touched buckets rewritten with refreshed counts ----
-            val newDfs = oldDfs.join(touched.select(col("h")), Seq("h"), "left_anti")
-              .unionByName(touched.select(col("h"), col("new_df").as("df")))
-              .localCheckpoint(true)
-            try overwriteBuckets(newDfs.withColumn("bucket", spanBucket(nB)),
-              s"$dir/dfs", tb)
-            finally graft.Pins.release(newDfs)
-            // manifest last: never over-certifies. lastBatchId only ever
-            // ADVANCES (it is the folded-through watermark liveDeltaIds
-            // filters on - regressing it would resurrect folded deltas)
-            writeManifest(spark, dir, m.copy(
-              nDocs = m.nDocs + bounds.getLong(0),
-              nEdges = m.nEdges + edgeCountDelta,
-              maxId = bounds.getLong(2),
-              lastBatchId = math.max(m.lastBatchId, batchId),
-              epoch = newEpoch))
-          } finally graft.Pins.release(delta)
-        }
-      } finally graft.Pins.release(touched)
-    } finally graft.Pins.release(batchSpans)
+          (coalesce(col("df"), lit(0L)) + col("__add")).as("new_df")))
+      val oldPostings = readSurface(spark, s"$dir/postings", postingsSchema)
+        .where(col("bucket").isInCollection(tb))
+        .select(col("h"), col("id"))
+      val delta = edgeDeltas(scope, batchSpans, touched, oldPostings, m.maxDf)
+      // ---- edges: merge deltas into the touched edge buckets ----
+      val eb = delta.select(edgeBucket(nB).as("b")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      var edgeCountDelta = 0L
+      if (eb.nonEmpty) {
+        // distinct intermediate name (__olds): aliasing the merged
+        // value AS "support" in the same select would SHADOW the
+        // input column for later expressions (the Spark 4
+        // lateral-alias trap in the verify notes)
+        val oldEdges = readSurface(spark, s"$dir/edges", edgesSchema)
+          .where(col("bucket").isInCollection(eb))
+          .select(col("id_a"), col("id_b"), col("support").as("__olds"))
+        // pinned: the write replaces the files it reads
+        val merged = scope.pin(oldEdges.join(delta, Seq("id_a", "id_b"), "full_outer")
+          .select(col("id_a"), col("id_b"),
+            (coalesce(col("__olds"), lit(0L)) + coalesce(col("__d"), lit(0L)))
+              .as("support"),
+            col("__olds").isNotNull.as("__was")))
+        val counts = merged.agg(
+          sum(when(col("support") > 0 && !col("__was"), 1L).otherwise(0L)),
+          sum(when(col("support") <= 0 && col("__was"), 1L).otherwise(0L))).head()
+        edgeCountDelta = counts.getLong(0) - counts.getLong(1)
+        overwriteBuckets(merged.where(col("support") > 0)
+            .select(col("id_a"), col("id_b"), col("support"))
+            .withColumn("bucket", edgeBucket(nB)),
+          s"$dir/edges", eb)
+      }
+      // ---- postings: touched buckets rewritten ----
+      // keep: untouched spans + touched spans still ≤ maxDf (old
+      // members); add: batch members of spans ending ≤ maxDf;
+      // drop: every row of spans crossing above maxDf
+      val blown = touched.where(col("new_df") > m.maxDf).select(col("h"))
+      val newPostings = scope.pin(oldPostings.join(blown, Seq("h"), "left_anti")
+        .unionByName(batchSpans
+          .join(touched.where(col("new_df") <= m.maxDf).select(col("h")), Seq("h"))
+          .select(col("h"), col("id"))))
+      overwriteBuckets(newPostings.withColumn("bucket", spanBucket(nB)),
+        s"$dir/postings", tb)
+      // ---- dfs: touched buckets rewritten with refreshed counts ----
+      val newDfs = scope.pin(oldDfs.join(touched.select(col("h")), Seq("h"), "left_anti")
+        .unionByName(touched.select(col("h"), col("new_df").as("df"))))
+      overwriteBuckets(newDfs.withColumn("bucket", spanBucket(nB)),
+        s"$dir/dfs", tb)
+      // manifest last: never over-certifies. lastBatchId only ever
+      // ADVANCES (it is the folded-through watermark liveDeltaIds
+      // filters on - regressing it would resurrect folded deltas)
+      writeManifest(spark, dir, m.copy(
+        nDocs = m.nDocs + bounds.getLong(0),
+        nEdges = m.nEdges + edgeCountDelta,
+        maxId = bounds.getLong(2),
+        lastBatchId = math.max(m.lastBatchId, batchId),
+        epoch = newEpoch))
+    }
   }
 
   /** Route an append to the cheaper maintenance path — the answer to the
@@ -376,46 +355,38 @@ object LinkGraphStore {
     if (live.isEmpty) return
     import graft.streaming.{StreamingLinkGraph => S}
     val deltaRoot = s"$dir/deltas"
-    val edges = S.mergedEdgesCanonical(spark,
+    graft.Pins.scoped { scope =>
+      val edges = scope.pin(S.mergedEdgesCanonical(spark,
         readSurface(spark, s"$dir/edges", edgesSchema)
           .select(col("id_a"), col("id_b"), col("support")),
-        deltaRoot, live)
-      .localCheckpoint(true)
-    try {
-      val posts = S.effectivePostings(spark,
-          readSurface(spark, s"$dir/postings", postingsSchema)
-            .select(col("h"), col("id")),
-          deltaRoot, live)
-        .localCheckpoint(true)
-      try {
-        val dfs = S.effectiveDfs(spark,
-            readSurface(spark, s"$dir/dfs", dfsSchema).select(col("h"), col("df")),
-            deltaRoot, live)
-          .localCheckpoint(true)
-        try {
-          val newEpoch = m.epoch + 1L
-          stampEpochs(spark, dir, newEpoch)
-          writeBucketed(edges.withColumn("bucket", edgeBucket(m.nBuckets)),
-            s"$dir/edges")
-          writeBucketed(posts.withColumn("bucket", spanBucket(m.nBuckets)),
-            s"$dir/postings")
-          writeBucketed(dfs.withColumn("bucket", spanBucket(m.nBuckets)),
-            s"$dir/dfs")
-          val metas = live.map(b => S.readMetaAt(spark, deltaRoot, b))
-          writeManifest(spark, dir, m.copy(
-            nDocs = m.nDocs + metas.map(_.nDocs).sum,
-            nEdges = edges.count(),
-            maxId = (m.maxId +: metas.map(_.maxId)).max,
-            lastBatchId = live.max,
-            epoch = newEpoch))
-          // retired by the watermark above; delete best-effort
-          val fs = new org.apache.hadoop.fs.Path(dir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          live.foreach(b =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$b"), true))
-        } finally graft.Pins.release(dfs)
-      } finally graft.Pins.release(posts)
-    } finally graft.Pins.release(edges)
+        deltaRoot, live))
+      val posts = scope.pin(S.effectivePostings(spark,
+        readSurface(spark, s"$dir/postings", postingsSchema).select(col("h"), col("id")),
+        deltaRoot, live))
+      val dfs = scope.pin(S.effectiveDfs(spark,
+        readSurface(spark, s"$dir/dfs", dfsSchema).select(col("h"), col("df")),
+        deltaRoot, live))
+      val newEpoch = m.epoch + 1L
+      stampEpochs(spark, dir, newEpoch)
+      writeBucketed(edges.withColumn("bucket", edgeBucket(m.nBuckets)),
+        s"$dir/edges")
+      writeBucketed(posts.withColumn("bucket", spanBucket(m.nBuckets)),
+        s"$dir/postings")
+      writeBucketed(dfs.withColumn("bucket", spanBucket(m.nBuckets)),
+        s"$dir/dfs")
+      val metas = live.map(b => S.readMetaAt(spark, deltaRoot, b))
+      writeManifest(spark, dir, m.copy(
+        nDocs = m.nDocs + metas.map(_.nDocs).sum,
+        nEdges = edges.count(),
+        maxId = (m.maxId +: metas.map(_.maxId)).max,
+        lastBatchId = live.max,
+        epoch = newEpoch))
+      // retired by the watermark above; delete best-effort
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      live.foreach(b =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$deltaRoot/batch=$b"), true))
+    }
   }
 
   /** Committed delta entries not yet folded into the surfaces (ids above
@@ -437,45 +408,41 @@ object LinkGraphStore {
     *                   mentions (pinned)
     * @param oldPostings (h, id) existing members — only touched spans'
     *                   rows are consumed
-    * @return pinned (id_a, id_b, __d) with nonzero net deltas; caller
-    *         unpersists
+    * @return (id_a, id_b, __d) with nonzero net deltas, pinned in the
+    *         caller's `scope` (with the tagged members it reads)
     */
-  private[graft] def edgeDeltas(batchSpans: DataFrame, touched: DataFrame,
-      oldPostings: DataFrame, maxDf: Int): DataFrame = {
+  private[graft] def edgeDeltas(scope: graft.Pins.Scope, batchSpans: DataFrame,
+      touched: DataFrame, oldPostings: DataFrame, maxDf: Int): DataFrame = {
     // members of each touched span, old and new, tagged — per-span
     // fan-out is ≤ maxDf + batch members by the band conditions below
-    val members = oldPostings.join(touched, Seq("h"))
+    val members = scope.pin(oldPostings.join(touched, Seq("h"))
       .select(col("h"), col("id"), lit(false).as("__new"),
         col("old_df"), col("new_df"))
       .unionByName(batchSpans.join(touched, Seq("h"))
         .select(col("h"), col("id"), lit(true).as("__new"),
-          col("old_df"), col("new_df")))
-      .localCheckpoint(true)
-    try {
-      // +1 deltas: spans landing in band. If the span was ALREADY in
-      // band its old×old pairs exist — only pairs touching a new
-      // member are added; a span entering the band adds ALL pairs.
-      val inBand = members.where(col("new_df") >= 2 && col("new_df") <= maxDf)
-      val added = inBand.select(col("h"), col("id").as("id_a"),
-          col("__new").as("__na"), col("old_df"))
-        .join(inBand.select(col("h"), col("id").as("id_b"), col("__new").as("__nb")),
-          Seq("h"))
-        .where(col("id_a") < col("id_b") &&
-          (col("old_df") < 2 || col("__na") || col("__nb")))
-        .select(col("id_a"), col("id_b"), lit(1L).as("__d"))
-      // −1 deltas: spans crossing ABOVE the band retract the pairs
-      // they supported — old members only (new ones never contributed)
-      val leaving = members.where(!col("__new") &&
-        col("old_df") >= 2 && col("old_df") <= maxDf && col("new_df") > maxDf)
-      val removed = leaving.select(col("h"), col("id").as("id_a"))
-        .join(leaving.select(col("h"), col("id").as("id_b")), Seq("h"))
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(-1L).as("__d"))
-      added.unionAll(removed)
-        .groupBy(col("id_a"), col("id_b")).agg(sum(col("__d")).as("__d"))
-        .where(col("__d") =!= 0)
-        .localCheckpoint(true)
-    } finally graft.Pins.release(members)
+          col("old_df"), col("new_df"))))
+    // +1 deltas: spans landing in band. If the span was ALREADY in
+    // band its old×old pairs exist — only pairs touching a new
+    // member are added; a span entering the band adds ALL pairs.
+    val inBand = members.where(col("new_df") >= 2 && col("new_df") <= maxDf)
+    val added = inBand.select(col("h"), col("id").as("id_a"),
+        col("__new").as("__na"), col("old_df"))
+      .join(inBand.select(col("h"), col("id").as("id_b"), col("__new").as("__nb")),
+        Seq("h"))
+      .where(col("id_a") < col("id_b") &&
+        (col("old_df") < 2 || col("__na") || col("__nb")))
+      .select(col("id_a"), col("id_b"), lit(1L).as("__d"))
+    // −1 deltas: spans crossing ABOVE the band retract the pairs
+    // they supported — old members only (new ones never contributed)
+    val leaving = members.where(!col("__new") &&
+      col("old_df") >= 2 && col("old_df") <= maxDf && col("new_df") > maxDf)
+    val removed = leaving.select(col("h"), col("id").as("id_a"))
+      .join(leaving.select(col("h"), col("id").as("id_b")), Seq("h"))
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), lit(-1L).as("__d"))
+    scope.pin(added.unionAll(removed)
+      .groupBy(col("id_a"), col("id_b")).agg(sum(col("__d")).as("__d"))
+      .where(col("__d") =!= 0))
   }
 
   /** The edge table in [[LinkGraph.sharedSpanEdges]]'s symmetric
@@ -531,45 +498,43 @@ object LinkGraphStore {
     * pass wants BEFORE deciding to ingest.
     */
   def spanNoveltyAgainst(docs: DataFrame, idCol: String, textCol: String,
-      dir: String): DataFrame = {
+      dir: String): DataFrame = graft.Pins.scoped { scope =>
     val spark = docs.sparkSession
     val m = loadManifest(spark, dir)
-    val spans = docs.select(col(idCol).as("__id"),
-        explode(T.shingleHashes(col(textCol), m.w)).as("h"))
-      .localCheckpoint(true) // consumed by the bucket probe and the join
-    try {
-      val tb = spans.select(spanBucket(m.nBuckets).as("b")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      // live appendAuto deltas carry the freshest df for their spans —
-      // merged latest-wins (delta entries are batch-sized, no pruning
-      // needed; extra spans outside tb drop out of the left join below)
-      val dfs = graft.streaming.StreamingLinkGraph.effectiveDfs(spark,
-        readSurface(spark, s"$dir/dfs", dfsSchema)
-          .where(col("bucket").isInCollection(tb)).select(col("h"), col("df")),
-        s"$dir/deltas", liveDeltaIds(spark, dir))
-      // MATERIALIZED (batch-sized) before the spans pin is released below:
-      // returning this plan lazily would read checkpoint blocks the
-      // finally has already freed — the bug class Pins.release made real
-      // (the old no-op unpersist silently masked it)
-      val counts = spans.join(dfs, Seq("h"), "left")
-        .select(col("__id"), coalesce(col("df"), lit(1L)).as("__df"))
-        .groupBy(col("__id").as(idCol))
-        .agg(
-          count(lit(1)).as("n_spans"),
-          sum(when(col("__df") === 1, 1L).otherwise(0L)).as("n_unique"),
-          sum(when(col("__df") >= 2 && col("__df") <= m.maxDf, 1L).otherwise(0L)).as("n_shared"),
-          sum(when(col("__df") > m.maxDf, 1L).otherwise(0L)).as("n_boilerplate"))
-        .localCheckpoint(true)
-      docs.select(col(idCol)).join(counts, Seq(idCol), "left")
-        .select(col(idCol),
-          coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-          coalesce(col("n_unique"), lit(0L)).as("n_unique"),
-          coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-          coalesce(col("n_boilerplate"), lit(0L)).as("n_boilerplate"),
-          when(coalesce(col("n_spans"), lit(0L)) === 0, lit(0.0))
-            .otherwise(col("n_unique").cast("double") / col("n_spans").cast("double"))
-            .as("novelty"))
-    } finally graft.Pins.release(spans)
+    // pinned: consumed by the bucket probe and the join
+    val spans = scope.pin(docs.select(col(idCol).as("__id"),
+      explode(T.shingleHashes(col(textCol), m.w)).as("h")))
+    val tb = spans.select(spanBucket(m.nBuckets).as("b")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    // live appendAuto deltas carry the freshest df for their spans —
+    // merged latest-wins (delta entries are batch-sized, no pruning
+    // needed; extra spans outside tb drop out of the left join below)
+    val dfs = graft.streaming.StreamingLinkGraph.effectiveDfs(spark,
+      readSurface(spark, s"$dir/dfs", dfsSchema)
+        .where(col("bucket").isInCollection(tb)).select(col("h"), col("df")),
+      s"$dir/deltas", liveDeltaIds(spark, dir))
+    // MATERIALIZED (batch-sized) before the scope releases the spans pin:
+    // returning this plan lazily would read checkpoint blocks already
+    // freed — the bug class Pins.release made real (the old no-op
+    // unpersist silently masked it); the pin is the caller's
+    val counts = spans.join(dfs, Seq("h"), "left")
+      .select(col("__id"), coalesce(col("df"), lit(1L)).as("__df"))
+      .groupBy(col("__id").as(idCol))
+      .agg(
+        count(lit(1)).as("n_spans"),
+        sum(when(col("__df") === 1, 1L).otherwise(0L)).as("n_unique"),
+        sum(when(col("__df") >= 2 && col("__df") <= m.maxDf, 1L).otherwise(0L)).as("n_shared"),
+        sum(when(col("__df") > m.maxDf, 1L).otherwise(0L)).as("n_boilerplate"))
+      .localCheckpoint(true)
+    docs.select(col(idCol)).join(counts, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+        coalesce(col("n_unique"), lit(0L)).as("n_unique"),
+        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
+        coalesce(col("n_boilerplate"), lit(0L)).as("n_boilerplate"),
+        when(coalesce(col("n_spans"), lit(0L)) === 0, lit(0.0))
+          .otherwise(col("n_unique").cast("double") / col("n_spans").cast("double"))
+          .as("novelty"))
   }
 
   /** Manifest read PLUS the torn-write check: every mutation stamps all

@@ -474,9 +474,9 @@ object ScaleProbe {
         // in-memory re-propagation every reach query previously paid.
         // w=6 = the corpus-scale span width the tier graph lanes use.
         val dirH = java.nio.file.Files.createTempDirectory("probe_hbs").toString
-        val edges = LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32)
-          .localCheckpoint(true) // one edge set for all three measurements
-        try {
+        graft.Pins.scoped { scope =>
+          val edges = scope.pin( // one edge set for all three measurements
+            LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32))
           timed("register artifact build (3 hops)") {
             graft.text.HyperBallStore.build(docs.select(col("doc_id")), "doc_id",
               edges, maxHops = 3, dirH, nBuckets = 256)
@@ -503,7 +503,7 @@ object ScaleProbe {
             s"store/in-memory disagree: $served vs $mem (rel $rel)")
           println(s"""{"mode":"hyperball_store","nodes":${served.getLong(0)},""" +
             f""""sum_est":${served.getDouble(1)}%.1f,"serve_s":$tServe%.1f,"mem_s":$tMem%.1f}""")
-        } finally graft.Pins.release(edges)
+        }
       case "media_store" =>
         // round 14: the MediaFingerprintStore at the tier — fingerprint
         // 500k synthetic videos once (payloads decode exactly once, at
@@ -592,9 +592,9 @@ object ScaleProbe {
         // hyperball_store precedent)
         val dirH = java.nio.file.Files.createTempDirectory("probe_hbx").toString
         val rbDir = java.nio.file.Files.createTempDirectory("probe_hbx_rb").toString
-        val edges = LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32)
-          .localCheckpoint(true) // one edge set for all three measurements
-        try {
+        graft.Pins.scoped { scope =>
+          val edges = scope.pin( // one edge set for all three measurements
+            LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32))
           val t0 = System.nanoTime()
           graft.text.HyperBallStore.build(docs.select(col("doc_id")), "doc_id",
             edges, maxHops = 2, dirH, nBuckets = 256)
@@ -619,7 +619,7 @@ object ScaleProbe {
             s"extend/rebuild disagree: $a vs $b (rel $rel)")
           println(s"""{"mode":"hyperball_extend","nodes":${a.getLong(0)},""" +
             f""""build2_s":$tB2%.1f,"extend_s":$tExt%.1f,"rebuild3_s":$tRb%.1f}""")
-        } finally graft.Pins.release(edges)
+        }
       case "pagerank" =>
         // fixed-point PageRank at the tier: per-iteration cost is one
         // |E| contribution shuffle — confirm linear behavior on the

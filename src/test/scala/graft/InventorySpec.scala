@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The declared query inventory is six maps merged with `++`, which
   * silently keeps the LAST of two equal keys: a duplicate name would
   * shadow a query, and an oracle entry without a query would never run.
+  * Plus one source guard: pins are released only through their scope.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -24,5 +25,18 @@ class InventorySpec extends AnyFunSuite {
   test("every oracle key names a query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
+  }
+
+  test("Pins.release is called only by Pins and Iterate: every other pin is scoped") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !Set("Pins.scala", "Iterate.scala")(p.getFileName.toString))
+      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("Pins.release(") => s"$p:${i + 1}"
+      }).toList
+    finally files.close()
+    assert(hits.isEmpty, s"hand-rolled pin releases (use Pins.scoped): ${hits.mkString(", ")}")
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.dedup.Dedup
-import graft.text.{HyperBall, HyperBallStore, LinkGraph}
+import graft.dedup.{Dedup, MinHashStore, SemDedupStore}
+import graft.similarity.Similarity
+import graft.streaming.{StreamingAnnIndex, StreamingClean}
+import graft.text.{Bm25, Bm25Store, HyperBall, HyperBallStore, LinkGraph, LinkGraphStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -10,7 +12,9 @@ import org.apache.spark.sql.functions._
   * its result is collected, the only pins left are the ones the result
   * reads (the `LogicalRDD`s of its analyzed plan), and a fail-fast path
   * leaves none at all. Plus the loop driver's own contract: cadence,
-  * fixed point, round-scoped pins and release on a throw.
+  * fixed point, round-scoped pins and release on a throw; and the same
+  * rule for the one-off pins of the stores and streaming twins
+  * ([[Pins.scoped]]), on success and on a failed write.
   */
 class IterateSpec extends SparkSpec {
   import spark.implicits._
@@ -143,5 +147,58 @@ class IterateSpec extends SparkSpec {
         if (rounds == 2) throw new ArithmeticException("step")
         inc(r.state)
       })
+  }
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private val docs = Seq((1L, "a b c d e"), (2L, "a b c d f"), (3L, "x y z w v"))
+    .toDF("doc_id", "text")
+  private val moreDocs = Seq((4L, "a b c d e"), (5L, "q r s t u")).toDF("doc_id", "text")
+  private def vecs(from: Long, until: Long): DataFrame = (from until until)
+    .map(i => (i, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11).toFloat - 5f)))
+    .toDF("id", "vec")
+
+  test("stores that return Unit leave no pin") {
+    // nothing is returned, so nothing may stay pinned
+    def noPins(name: String)(op: => Unit): Unit =
+      onlyResultPins(name) { op; spark.emptyDataFrame }
+    val lg = tmp("iterate-lgs")
+    noPins("LinkGraphStore.build")(
+      LinkGraphStore.build(docs, "doc_id", "text", w = 2, maxDf = 4, lg, nBuckets = 2))
+    noPins("LinkGraphStore.append")(LinkGraphStore.append(moreDocs, "doc_id", "text", lg))
+    val mh = tmp("iterate-mhs")
+    noPins("MinHashStore.build")(MinHashStore.build(docs, "text", "doc_id", mh,
+      numHashes = 8, bands = 4, nBuckets = 2))
+    noPins("MinHashStore.append")(MinHashStore.append(moreDocs, "text", "doc_id", mh))
+    val sd = tmp("iterate-sds")
+    noPins("SemDedupStore.build")(SemDedupStore.build(vecs(0, 12), "id", "vec", sd, k = 2,
+      nBuckets = 2))
+    noPins("SemDedupStore.append")(SemDedupStore.append(vecs(12, 16), "id", "vec", sd))
+    val bm = tmp("iterate-bm25")
+    noPins("Bm25Store.build")(Bm25Store.build(docs, "text", "doc_id", bm, nBuckets = 2))
+    // the segment's own pin is the caller's (a returned lazy index)
+    val seg = Bm25.buildIndex(moreDocs, "text", "doc_id")
+    noPins("Bm25Store.append")(Bm25Store.append(seg, bm, segmentId = 1L))
+    Pins.release(seg.postings)
+    noPins("Similarity.saveIvfIndexRefined")(Similarity.saveIvfIndexRefined(vecs(0, 20),
+      tmp("iterate-ivf"), "vec", "id", nlist = 4))
+  }
+
+  test("a failed write or append guard leaves no pin") {
+    val file = java.io.File.createTempFile("iterate-file", ".txt").getPath
+    noPinsAfter[Exception]("StreamingClean.applyBatch, outDir under a regular file")(
+      StreamingClean.applyBatch(docs, 0L, "text", "doc_id", Seq("zz"), maxHits = 0,
+        s"$file/out"))
+    val ann = tmp("iterate-ann")
+    StreamingAnnIndex.initialize(vecs(0, 20), "vec", "id", nlist = 4, ann)
+    noPinsAfter[Exception]("StreamingAnnIndex.applyBatch, statsDir under a regular file")(
+      StreamingAnnIndex.applyBatch(vecs(20, 24), 0L, "vec", "id", ann, s"$file/stats"))
+    // the centroids are ids 0..3, so ids from 2 up break the append contract
+    val ivf = tmp("iterate-ivf-append")
+    Similarity.saveIvfIndexAppendable(Similarity.ivfBuild(vecs(0, 20), "vec", "id", 4),
+      ivf, "vec", "id", 4)
+    noPinsAfter[IllegalArgumentException]("appendToIvfIndex, ids at the centroid cells")(
+      Similarity.appendToIvfIndex(vecs(2, 6), "vec", "id", ivf))
   }
 }

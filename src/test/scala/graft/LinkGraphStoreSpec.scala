@@ -1,7 +1,7 @@
 package graft
 
 import graft.text.{LinkGraph, LinkGraphStore}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The persisted appendable link-graph artifact: build ≡ sharedSpanEdges,
@@ -335,5 +335,27 @@ class LinkGraphStoreSpec extends SparkSpec {
         .selectExpr("CAST(1 AS LONG) AS doc_id", "'x' AS text").where(lit(false)),
       "doc_id", "text", dir, smallBatchFraction = 0.9) == "noop")
     fs.delete(lease, false)
+  }
+
+  test("degenerate input: the split-corpus lanes and q_approx_distinct on a zero-row copy") {
+    val dir = tmp("zero_rows")
+    for (t <- Seq("documents", "lineitem"))
+      spark.read.parquet(s"$sf0001/$t.parquet").limit(0).write.parquet(s"$dir/$t.parquet")
+    val edges = "struct<id_a:bigint,id_b:bigint,support:bigint>"
+    val schemas = Map(
+      "q_linkgraph_stream" -> "struct<doc_id:bigint,rep:bigint,component_size:bigint>",
+      "q_linkgraph_append" -> edges, "q_linkgraph_append_auto" -> edges,
+      "q_approx_distinct" -> "struct<exact_parts:bigint,approx_within_5pct:boolean>")
+    for ((q, schema) <- schemas) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      assert(df.schema.simpleString == schema, q)
+      val rows = df.collect().toSeq
+      if (q == "q_approx_distinct") assert(rows == Seq(Row(0L, true)), q) // DuckDB's answer
+      else assert(rows.isEmpty, q)
+    }
+    // BM25 over an empty corpus is refused by its scorer's own guard
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.queries("q_bm25_index_append")(spark, dir).collect())
+    assert(e.getMessage.contains("Bm25.scoreTopK: empty index"))
   }
 }
