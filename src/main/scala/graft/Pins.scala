@@ -48,6 +48,21 @@ object Pins {
     try body(scope) finally scope.release()
   }
 
+  /** True when `df` is itself a pin: its analyzed plan is a `LogicalRDD`
+    * over a checkpoint that a job has already materialized. Pinning such a
+    * frame again only runs one more job and stores a second copy.
+    */
+  def isPinned(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => materialized(lr)
+    case _ => false
+  }
+
+  /** A `LogicalRDD` leaf whose rows are stored checkpoint blocks: every
+    * execution reads the same partitions.
+    */
+  private[graft] def materialized(lr: org.apache.spark.sql.execution.LogicalRDD): Boolean =
+    lr.rdd.isCheckpointed
+
   /** Free a checkpointed DataFrame's storage (non-blocking). Falls back
     * to plain `unpersist` for non-checkpoint plans, so it is always safe
     * to call on anything that was pinned.

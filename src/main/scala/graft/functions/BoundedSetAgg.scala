@@ -72,12 +72,14 @@ case class BoundedSetAgg(
     buf
   }
 
-  private lazy val ordering = TypeUtils.getInterpretedOrdering(child.dataType)
+  // transient: an observed aggregate travels back to the driver inside
+  // its accumulator, after these were built on the executor
+  @transient private lazy val ordering = TypeUtils.getInterpretedOrdering(child.dataType)
 
   override def eval(buf: mutable.HashSet[Any]): Any =
     new GenericArrayData(buf.toArray.sorted(ordering))
 
-  private lazy val projection =
+  @transient private lazy val projection =
     UnsafeProjection.create(Array[DataType](ArrayType(child.dataType, containsNull = false)))
 
   override def serialize(buf: mutable.HashSet[Any]): Array[Byte] =

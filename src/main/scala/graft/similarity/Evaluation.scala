@@ -485,7 +485,8 @@ object Evaluation {
     * per-bin gaps through a fixed ascending-bin driver fold (the NMI
     * discipline — bit-exact across engines); Brier's per-row square is
     * exact arithmetic, rounded at 6 as an aggregate. One tiny-domain
-    * aggregation + one scan; no other exchange.
+    * aggregation + one scan; no other exchange. An empty input gives
+    * `(null, 0.0, null)`, as the SQL fold over zero bins does.
     */
   def calibrationSummary(scored: DataFrame, scoreCol: String, labelCol: String,
       nBins: Int = 10): DataFrame = {
@@ -501,8 +502,9 @@ object Evaluation {
     // plain multiply, not pow(x, 2): Math.pow can differ from x*x in the
     // last ulp, and the oracle squares by multiplication
     val diff = col(scoreCol) - col(labelCol).cast("boolean").cast("int")
-    val brier = scored.agg(round(avg(diff * diff), 6)).head().getDouble(0)
-    Seq((n, round6(ece), brier)).toDF("n", "ece", "brier")
+    val brier = scored.agg(round(avg(diff * diff), 6)).head()
+    Seq((Option.when(bins.nonEmpty)(n), round6(ece), Option.unless(brier.isNullAt(0))(brier.getDouble(0))))
+      .toDF("n", "ece", "brier")
   }
 
   /** MMR-diversified top-k: retrieve `nCandidates` per query by cosine

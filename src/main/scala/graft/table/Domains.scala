@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Per-column domain/statistics computation — the reference's only
-  * aggregation machinery, rebuilt as one Spark aggregation job.
+  * aggregation machinery, rebuilt as one set of Spark aggregate lanes that
+  * run either as their own aggregation or inside the job that writes.
   *
   * Reference semantics (org.knime.core.data.columnar/.../domain/):
   *  - numeric min/max ignoring nulls (ColumnarDoubleDomainCalculator.java:68-96,
@@ -18,17 +19,18 @@ import org.apache.spark.sql.types._
   *  - computed incrementally during write, async per batch
   *    (DomainWritable.java:90-137).
   *
-  * Spark design: the whole per-batch async pipeline collapses into ONE
-  * aggregation with partial (map-side) combine — every statistic below is a
-  * single-pass agg expression, so a domain pass over 100 TB is one scan with
-  * no shuffle beyond the final 1-row reduce. The capped nominal domain uses
-  * a size-bounded collect_set: `slice(sort_array(collect_set), 1, cap+1)`
-  * would lose the drop signal, so we keep cap+1 values and null the domain
-  * out when it overflows — same observable semantics as the reference's
-  * drop-on-overflow, but in a distributed-safe expression. (collect_set's
-  * intermediate state is bounded per group by the true distinct count;
-  * callers with adversarial cardinality should first gate with
-  * approx_count_distinct, which we expose too.)
+  * Spark design: the whole per-batch async pipeline collapses into one set
+  * of aggregate lanes with partial (map-side) combine — every statistic
+  * below is a single-pass agg expression. [[compute]] runs the lanes as a
+  * plain aggregation (one scan, no shuffle beyond the final 1-row reduce);
+  * the writer runs the SAME lanes as an `observe` on the frame it writes
+  * ([[observing]]), so the write job yields the domains too — the
+  * reference's domain decorator on the one stream of written batches.
+  * The capped nominal domain is a bounded distinct-set aggregate
+  * ([[graft.functions.BoundedSetAgg]] with cap+1 slots): it never holds
+  * more than cap+1 values, whatever the column's cardinality, and a full
+  * buffer is the overflow signal — the domain is then dropped, the
+  * reference's drop-on-overflow semantics.
   */
 object Domains {
 
@@ -41,6 +43,9 @@ object Domains {
       max: Option[Any],
       nominal: Option[Seq[Any]],
       nullCount: Long,
+      /** Estimated distinct count: read off [[distinctSketch]] when there
+        * is one, else `approx_count_distinct`; 0 for map-bearing types.
+        */
       approxDistinct: Long,
       /** Mergeable HLL sketch bytes (DataSketches, via `hll_sketch_agg`)
         * for int/long/string/binary columns — the artifact that makes
@@ -126,10 +131,14 @@ object Domains {
   /** Aggregate expressions for one domain target. */
   private def leafExprs(l: Leaf, nominalCap: Int): Seq[Column] = {
     val c = l.c
-    val base = Seq(count(when(c.isNull, 1)).as(s"${l.key}__nulls")) ++
-      (if (hashable(l.dataType)) Seq(approx_count_distinct(c).as(s"${l.key}__approx_distinct"))
-       else Seq.empty) ++
-      (if (sketchable(l.dataType)) Seq(hll_sketch_agg(c).as(s"${l.key}__hll")) else Seq.empty) ++
+    // one distinct-count lane per column: the HLL sketch where there is
+    // one (the estimate is read off it, so a fresh domain and a merged
+    // one agree by construction), approx_count_distinct elsewhere
+    val distinct =
+      if (sketchable(l.dataType)) Seq(hll_sketch_agg(c).as(s"${l.key}__hll"))
+      else if (hashable(l.dataType)) Seq(approx_count_distinct(c).as(s"${l.key}__approx_distinct"))
+      else Seq.empty
+    val base = Seq(count(when(c.isNull, 1)).as(s"${l.key}__nulls")) ++ distinct ++
       (if (l.dataType.isInstanceOf[NumericType])
          Seq(graft.functions.KllQuantileAgg.kllSketch(c).as(s"${l.key}__kll"))
        else Seq.empty)
@@ -143,9 +152,10 @@ object Domains {
       else Seq.empty
     val nominal =
       if (isNominal(l.dataType))
-        // keep cap+1 values so overflow is detectable, then drop (null) the
-        // domain — reference drop-when-exceeded semantics.
-        Seq(slice(sort_array(collect_set(c)), 1, nominalCap + 1).as(s"${l.key}__nominal"))
+        // cap+1 slots so overflow is detectable (a full buffer), then the
+        // domain is dropped — reference drop-when-exceeded semantics
+        Seq(graft.functions.BoundedSetAgg.boundedDistinctSet(c, nominalCap + 1)
+          .as(s"${l.key}__nominal"))
       else Seq.empty
     base ++ bounds ++ nominal
   }
@@ -158,24 +168,55 @@ object Domains {
     computeWithRowCount(df, nominalCap)._1
 
   /** [[compute]] plus the table row count from the SAME single
-    * aggregation — writers need both and must not pay a second scan.
+    * aggregation.
     */
   def computeWithRowCount(df: DataFrame, nominalCap: Int = DefaultNominalCap): (Seq[ColumnDomain], Long) = {
-    val ls = leaves(df.schema)
-    val exprs = ls.flatMap(leafExprs(_, nominalCap)) :+
-      count(lit(1)).as("__graft_rowcount")
+    val (ls, exprs) = lanes(df, nominalCap)
     val row: Row = df.agg(exprs.head, exprs.tail: _*).head()
-    val rowCount = row.getLong(row.fieldIndex("__graft_rowcount"))
-    def get(n: String): Option[Any] = {
+    decode(ls, nominalCap) { n =>
       val i = row.fieldIndex(n)
       if (row.isNullAt(i)) None else Some(row.get(i))
     }
+  }
+
+  /** Run `action` on `df` with the domain lanes and the row count attached
+    * as an observation (a fresh `Observation` per call), so the job that
+    * `action` runs — a write — yields the domains too: one scan of the
+    * source, no separate aggregation. The observation is read only after
+    * `action` returns; an `action` that throws leaves it unread.
+    */
+  private[table] def observing(df: DataFrame, nominalCap: Int)(
+      action: DataFrame => Unit): (Seq[ColumnDomain], Long) = {
+    val (ls, exprs) = lanes(df, nominalCap)
+    val obs = org.apache.spark.sql.Observation()
+    action(df.observe(obs, exprs.head, exprs.tail: _*))
+    val metrics = obs.get
+    decode(ls, nominalCap)(n => Option(metrics(n)))
+  }
+
+  /** The one definition of the lanes: every leaf's aggregate expressions
+    * plus the row count.
+    */
+  private def lanes(df: DataFrame, nominalCap: Int): (Seq[Leaf], Seq[Column]) = {
+    val ls = leaves(df.schema)
+    (ls, ls.flatMap(leafExprs(_, nominalCap)) :+ count(lit(1)).as("__graft_rowcount"))
+  }
+
+  /** Domains and row count from the lanes' values (`get` returns None for
+    * a null lane).
+    */
+  private def decode(ls: Seq[Leaf], nominalCap: Int)(
+      get: String => Option[Any]): (Seq[ColumnDomain], Long) = {
+    val rowCount = get("__graft_rowcount").map(_.asInstanceOf[Long]).getOrElse(0L)
     ls.map { l =>
       val nominal: Option[Seq[Any]] =
         if (isNominal(l.dataType))
           get(s"${l.key}__nominal")
             .map(_.asInstanceOf[scala.collection.Seq[Any]].toSeq)
             .filter(_.length <= nominalCap)
+        else None
+      val sketch =
+        if (sketchable(l.dataType)) get(s"${l.key}__hll").map(_.asInstanceOf[Array[Byte]])
         else None
       ColumnDomain(
         column = l.path,
@@ -184,19 +225,23 @@ object Domains {
         max = if (isBounded(l.dataType) || isNumericArray(l.dataType)) get(s"${l.key}__max") else None,
         nominal = nominal,
         nullCount = get(s"${l.key}__nulls").map(_.asInstanceOf[Long]).getOrElse(0L),
-        approxDistinct =
+        approxDistinct = sketch.map(sketchEstimate).getOrElse(
           if (hashable(l.dataType))
             get(s"${l.key}__approx_distinct").map(_.asInstanceOf[Long]).getOrElse(0L)
-          else 0L,
-        distinctSketch =
-          if (sketchable(l.dataType)) get(s"${l.key}__hll").map(_.asInstanceOf[Array[Byte]])
-          else None,
+          else 0L),
+        distinctSketch = sketch,
         quantileSketch =
           if (l.dataType.isInstanceOf[NumericType]) get(s"${l.key}__kll").map(_.asInstanceOf[Array[Byte]])
           else None
       )
     } -> rowCount
   }
+
+  /** The distinct-count estimate of an HLL sketch, rounded — the one
+    * readout for a fresh sketch and a merged one.
+    */
+  private def sketchEstimate(sketch: Array[Byte]): Long =
+    math.round(org.apache.datasketches.hll.HllSketch.heapify(sketch).getEstimate)
 
   /** Merge two domain snapshots — the incremental-update path (reference
     * calculators are initialized from the prior domain and updated batch
@@ -237,8 +282,7 @@ object Domains {
           Some(u.getResult.toCompactByteArray)
         case _ => None
       }
-      val mergedDistinct = mergedSketch
-        .map(s => math.round(org.apache.datasketches.hll.HllSketch.heapify(s).getEstimate))
+      val mergedDistinct = mergedSketch.map(sketchEstimate)
         .getOrElse(math.max(da.approxDistinct, db.approxDistinct))
       // KLL union preserves rank-error bounds — merged quantiles carry the
       // same guarantee a recompute would (see KllQuantileAgg)

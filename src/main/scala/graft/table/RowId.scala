@@ -1,6 +1,7 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
@@ -18,9 +19,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * Spark's `monotonically_increasing_id()` is NOT contiguous across
   * partitions, so exactness needs a per-partition count job first, then a
   * per-partition offset add (the zipWithIndex strategy, kept in pure SQL so
-  * the data path never leaves Tungsten). At 100 TB this is a metadata pass
-  * (one count row per partition) plus a narrow map — the cheapest exact-index
-  * strategy available on a distributed engine.
+  * the data path never leaves Tungsten). At 100 TB this is one single-stage
+  * count job (one number per partition) plus a narrow map — the cheapest
+  * exact-index strategy available on a distributed engine.
   */
 object RowId {
 
@@ -36,16 +37,16 @@ object RowId {
   /** [[withRowIndex]] plus the total row count — the count-partitions job
     * that exact indexing needs anyway yields the total for free, so
     * callers that must validate sizes (append-by-position's equal-row
-    * check) don't pay a third pass over the data.
+    * check) don't pay another pass over the data.
     *
     * Strategy: stays entirely inside Tungsten/codegen (no `df.rdd`, which
     * would decode every row to external `Row` objects and re-encode them).
     * `monotonically_increasing_id()` is `partitionId * 2^33 + posInPartition`,
     * so the exact contiguous index is `offset(partition) + posInPartition`
-    * where the per-partition offsets come from one tiny aggregation job
-    * (shuffles one row per partition) and rejoin via broadcast-hash-join —
-    * narrow on the data path, O(#partitions) driver memory, scales to any
-    * partition count (no giant literal map in the plan).
+    * where the per-partition offsets come from ONE single-stage job that
+    * counts each partition (no shuffle, O(#partitions) driver memory) and
+    * ride the data path as a dense plan literal (a broadcast join past
+    * 4096 partitions).
     */
   def withRowIndexCounted(df: DataFrame, name: String = "row_index"): (DataFrame, Long) = {
     require(!df.columns.contains(name), s"column $name already exists")
@@ -59,36 +60,35 @@ object RowId {
     // the partitioning must be identical across the two. Scan-only
     // (exchange-free) plans repartition deterministically from the file
     // listing; anything with a shuffle can be replanned by AQE between the
-    // two jobs → pin it with an eager localCheckpoint first (which also
-    // means the heavy upstream plan executes once, not twice). ADVICE r2.
-    val src = if (narrowDeterministic(df)) df else df.localCheckpoint(true)
+    // two jobs → pin it first. The pin is lazy: the count job below
+    // materializes it, so the heavy upstream plan runs once, in the job
+    // that counts it. ADVICE r2.
+    val src = if (narrowDeterministic(df)) df else df.localCheckpoint(false)
+    val counts = src.select()
+      .mapPartitions(it => Iterator.single((TaskContext.getPartitionId(), it.size.toLong)))(
+        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
+      .collect().sortBy(_._1).map(_._2)
+    // offsets(p) = rows before partition p; the last entry is the total
+    val offsets = counts.scanLeft(0L)(_ + _)
+    val total = offsets.last
     val tagged = src
       .withColumn(pid, spark_partition_id())
       .withColumn(mid, monotonically_increasing_id())
-    val counts = tagged.groupBy(col(pid)).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsetByPid = counts.map { case (p, c) => val o = acc; acc += c; (p, o) }.toMap
-    val total = acc
-    val maxPid = counts.lastOption.map(_._1).getOrElse(-1)
     // posInPartition = mid - pid * 2^33 (MonotonicallyIncreasingID layout)
     val pos = col(mid) - col(pid).cast(LongType) * lit(1L << 33)
-    val indexed = if (maxPid < 4096) {
-      // offsets as a dense plan literal indexed by partition id (gaps from
-      // empty partitions carry the running offset; never evaluated): a
-      // narrow projection with NO join stage — the fast path at any
-      // realistic local/executor partition count
-      var run = 0L
-      val dense = (0 to maxPid).map { p => run = offsetByPid.getOrElse(p, run); run }
+    val indexed = if (counts.length <= 4096) {
+      // offsets as a dense plan literal indexed by partition id: a narrow
+      // projection with NO join stage — the fast path at any realistic
+      // local/executor partition count
       tagged
-        .withColumn(name, element_at(typedLit(dense), col(pid) + 1) + pos)
+        .withColumn(name, element_at(typedLit(offsets.init.toSeq), col(pid) + 1) + pos)
         .drop(pid, mid)
     } else {
       // degenerate partition counts: broadcast-join the offsets instead of
       // inlining an enormous literal into the plan/codegen
       val spark = df.sparkSession
       val offsetsDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(counts.map { p => Row(p._1, offsetByPid(p._1)) }.toSeq, 1),
+        spark.sparkContext.parallelize(counts.indices.map(p => Row(p, offsets(p))), 1),
         StructType(Seq(StructField(pid, IntegerType, nullable = false), StructField(off, LongType, nullable = false))))
       tagged
         .join(broadcast(offsetsDf), Seq(pid))
@@ -102,15 +102,19 @@ object RowId {
     * leaf scans — the cases where partitioning is deterministic across
     * re-executions (file listing → fixed splits → narrow maps), so the
     * offsets job and the indexing job are guaranteed to see identical
-    * partitions. Everything else (joins, aggregates, typed group ops,
-    * repartitions, limits — and any operator this allowlist does not
-    * recognize) is pinned with a localCheckpoint first, because AQE or
-    * recomputation may re-plan its partitioning between the two jobs.
+    * partitions. A materialized pin ([[graft.Pins.isPinned]]) is such a
+    * leaf too: its partitions are stored blocks, so a frame over an earlier
+    * row index's pin is not pinned again. Everything else (joins,
+    * aggregates, typed group ops, repartitions, limits — and any operator
+    * this allowlist does not recognize) is pinned with a localCheckpoint
+    * first, because AQE or recomputation may re-plan its partitioning
+    * between the two jobs.
     * Allowlist-inverted per ADVICE r3: unknown operators default to the
     * safe (checkpointed) path instead of the fast one.
     */
   private def narrowDeterministic(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
+    import org.apache.spark.sql.catalyst.expressions.{Literal, MonotonicallyIncreasingID, SparkPartitionID}
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
@@ -121,6 +125,7 @@ object RowId {
              _: DeserializeToObject | _: SerializeFromObject | _: MapElements |
              _: LocalRelation | _: OneRowRelation | _: Range |
              _: LogicalRelation | _: DataSourceV2ScanRelation | _: HiveTableRelation => true
+        case lr: org.apache.spark.sql.execution.LogicalRDD => graft.Pins.materialized(lr)
         case r: Repartition => !r.shuffle // coalesce: narrow, deterministic
         case _ => false
       }
@@ -131,7 +136,12 @@ object RowId {
       // indices. TypedFilter is excluded from the allowlist outright: its
       // predicate is an uninspectable closure (MapElements stays — 1:1 and
       // count-stable regardless of what the closure computes). ADVICE r4.
-      shapeOk && p.expressions.forall(_.deterministic)
+      // spark_partition_id and monotonically_increasing_id are the
+      // exception: they are functions of the partitioning this check
+      // proves stable, so an earlier row index's columns do not force a pin.
+      shapeOk && p.expressions.forall(_.transform {
+        case x @ (_: SparkPartitionID | _: MonotonicallyIncreasingID) => Literal.default(x.dataType)
+      }.deterministic)
     }
   }
 

@@ -14,18 +14,20 @@ import org.apache.spark.sql.functions._
   *  - Parquet provides the columnar layout, dictionary encoding,
   *    compression, and footer statistics (the Arrow-file + LZ4 + batch-offset
   *    footer roles).
-  *  - Per-column domains AND the row count come from one aggregation over
-  *    the source (the DomainWritable analog) — the written output is
-  *    never re-read.
+  *  - Per-column domains AND the row count ride the write job itself, as
+  *    an observation on the frame it writes (the DomainWritable analog,
+  *    a decorator on the one stream of written batches) — the source is
+  *    scanned once and the written output is never re-read.
   *  - RowID uniqueness is checked distributed (the DuplicateCheckWritable
-  *    analog) — one aggregation, fails fast before publishing.
+  *    analog) — one aggregation job before the write, so a duplicate fails
+  *    before anything is published.
   *  - Domains/statistics are persisted as a JSON sidecar next to the data
   *    (the reference attaches domains to the table spec on finish —
   *    ColumnarRowContainer / AbstractColumnarContainerTable).
   *
   * At 100 TB: the write is embarrassingly parallel per partition; the only
-  * coordination is the domain aggregation's final reduce and the optional
-  * dup-check shuffle on the RowID (uniform key).
+  * coordination is the merge of the per-task domain states on the driver
+  * and the optional dup-check shuffle on the RowID (uniform key).
   */
 object TableWriter {
 
@@ -36,8 +38,9 @@ object TableWriter {
   )
 
   /** Write `df` as the canonical store format with write-time statistics.
-    * Two scans of the SOURCE total — the parquet write and the single
-    * domains+row-count aggregation — and none of the written output.
+    * One scan of the SOURCE — the parquet write, which also yields the
+    * domains and the row count — plus the RowID check's scan when asked
+    * for, and none of the written output.
     *
     * @param checkRowIdUnique when true, fails (IllegalArgumentException)
     *   if the RowID column contains duplicates — reference
@@ -57,8 +60,8 @@ object TableWriter {
         s"checkRowIdUnique: no ${RowId.RowIdCol} column to check — add one (RowId.ensureRowId) first")
       RowId.assertUniqueRowIds(df)
     }
-    df.write.mode("overwrite").parquet(path)
-    val (domains, rowCount) = Domains.computeWithRowCount(df, nominalCap)
+    val (domains, rowCount) =
+      Domains.observing(df, nominalCap)(_.write.mode("overwrite").parquet(path))
     persistDomains(df.sparkSession, path, rowCount, domains)
     WriteResult(path, rowCount, domains)
   }
@@ -260,9 +263,10 @@ object TableWriter {
     * incremental domain maintenance (domains updated batch by batch
     * during write, reference
     * org.knime.core.data.columnar/.../domain/DomainWritable.java:90-137)
-    * as an on-disk lifecycle: one batch-sized aggregation +
-    * [[Domains.merge]] (exact min/max/nulls/nominal; HLL/KLL sketch
-    * unions for distinct/quantiles — recompute-grade, see KTableSpec).
+    * as an on-disk lifecycle: the batch's domains ride its append job (one
+    * scan of the batch) + [[Domains.merge]] (exact min/max/nulls/nominal;
+    * HLL/KLL sketch unions for distinct/quantiles — recompute-grade, see
+    * KTableSpec).
     * Falls back to a full recompute when the existing sidecar is absent,
     * schema-incompatible, or STALE — the sidecar records a data-file
     * fingerprint (count + bytes) at persist time, and a mismatch against
@@ -295,8 +299,8 @@ object TableWriter {
     // fingerprint certifies the sidecar describes exactly the data on disk
     val sidecarFresh = recordedFingerprint(spark, path)
       .contains(dataFingerprint(spark, path))
-    df.write.mode("append").parquet(path)
-    val (batchDomains, batchCount) = Domains.computeWithRowCount(df, nominalCap)
+    val (batchDomains, batchCount) =
+      Domains.observing(df, nominalCap)(_.write.mode("append").parquet(path))
     val merged = prior match {
       // simpleString comparison: the sidecar round-trips types through
       // DDL, which forces nullable/containsNull to true — comparing live

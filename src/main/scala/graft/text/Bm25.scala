@@ -62,13 +62,14 @@ object Bm25 {
       .localCheckpoint(true)
     // corpus stats WITHOUT a second tokenize pass over the text: nDocs is
     // a tokenize-free count (empty docs included, matching the oracle's
-    // count(*)), sumLen folds the per-doc len already riding the postings
-    // (empty docs contribute 0 there by construction). The postings are
-    // checkpointed because they feed three consumers (stats, df, scoring)
-    // — without it the tokenize+explode+agg pipeline would run thrice.
+    // count(*)); sumLen is Σ tf over the postings — each posting counts
+    // one term's occurrences in one doc, so Σ tf = Σ doc length (empty
+    // docs contribute 0 by construction), one single-stage aggregate with
+    // no per-doc regroup. The postings are checkpointed because they feed
+    // three consumers (stats, df, scoring) — without it the
+    // tokenize+explode+agg pipeline would run thrice.
     val nDocs = corpus.count()
-    val sumLen = tf.groupBy(col("doc_id")).agg(max(col("len")).as("len"))
-      .agg(coalesce(sum(col("len")), lit(0L))).head().getLong(0)
+    val sumLen = tf.agg(coalesce(sum(col("tf")), lit(0L))).head().getLong(0)
     Index(tf, tf.groupBy(col("term")).agg(count(lit(1)).as("df")), nDocs, sumLen)
   }
 

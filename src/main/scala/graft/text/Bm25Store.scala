@@ -223,7 +223,9 @@ object Bm25Store extends graft.sources.SegmentedStore {
   private def writeSegment(index: Bm25.Index, dir: String, segmentId: Long,
       nBuckets: Int): Unit = graft.Pins.scoped { scope =>
     val spark = index.postings.sparkSession
-    val seg = scope.pin(index.postings)
+    // buildIndex's postings are already a pin: write them as they are
+    val seg =
+      if (graft.Pins.isPinned(index.postings)) index.postings else scope.pin(index.postings)
     val sDir = s"$dir/segs/seg=$segmentId"
     seg.withColumn("bucket", termBucket(nBuckets))
       .repartition(col("bucket"))

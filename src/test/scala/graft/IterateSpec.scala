@@ -3,6 +3,7 @@ package graft
 import graft.dedup.{Dedup, MinHashStore, SemDedupStore}
 import graft.similarity.Similarity
 import graft.streaming.{StreamingAnnIndex, StreamingClean}
+import graft.table.{Combine, RowId}
 import graft.text.{Bm25, Bm25Store, HyperBall, HyperBallStore, LinkGraph, LinkGraphStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -200,5 +201,26 @@ class IterateSpec extends SparkSpec {
       ivf, "vec", "id", 4)
     noPinsAfter[IllegalArgumentException]("appendToIvfIndex, ids at the centroid cells")(
       Similarity.appendToIvfIndex(vecs(2, 6), "vec", "id", ivf))
+  }
+
+  test("an existing pin is not pinned again: BM25 segment writes, positional append") {
+    val index = Bm25.buildIndex(docs, "text", "doc_id")
+    assert(Pins.isPinned(index.postings))
+    // a pin shows up as a persisted RDD in the stages of the job that makes
+    // it, and the segment write releases its own pins before it returns
+    val pinnedBefore = persisted
+    val made = jobsStarted(Bm25Store.save(index, tmp("iterate-bm25-pinned"), nBuckets = 2))
+      .flatMap(_.stageInfos).flatMap(_.rddInfos).filter(_.storageLevel.isValid).map(_.id)
+      .toSet -- pinnedBefore
+    assert(made.isEmpty, s"writing the segment pinned the postings again: $made")
+    Pins.release(index.postings)
+    // a row index over a shuffled frame pins it once; zipping that result
+    // with a projection of itself reads the same pin and makes none
+    val ix = RowId.withRowIndex(spark.range(0, 40, 1, 4).toDF("v").repartition(3), "ri")
+    val before = persisted
+    val zipped = Combine.appendByPosition(ix, ix.select($"v".as("w")))
+    assert(zipped.where($"v" =!= $"w").isEmpty && zipped.count() == 40)
+    assert((persisted -- before).isEmpty, s"appendByPosition pinned ${persisted -- before}")
+    resultPins(ix).foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
   }
 }

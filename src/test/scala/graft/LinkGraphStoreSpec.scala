@@ -353,6 +353,9 @@ class LinkGraphStoreSpec extends SparkSpec {
       if (q == "q_approx_distinct") assert(rows == Seq(Row(0L, true)), q) // DuckDB's answer
       else assert(rows.isEmpty, q)
     }
+    // no bins: the SQL fold gives a null count, ECE 0 and a null Brier
+    assert(SparkEntry.queries("q_calibration_summary")(spark, dir).collect().toSeq ==
+      Seq(Row(null, 0.0, null)))
     // BM25 over an empty corpus is refused by its scorer's own guard
     val e = intercept[IllegalArgumentException](
       SparkEntry.queries("q_bm25_index_append")(spark, dir).collect())

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Sources
-import graft.table.{RowId, TableWriter}
+import graft.table.{Domains, RowId, TableWriter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -230,4 +230,74 @@ class WritePathSpec extends SparkSpec {
     assert(res.domains.find(_.column == "k").get.max.contains(100))
   }
 
+  /** Column-by-column equality of two domain snapshots: bounds, nulls,
+    * nominal, the distinct count and the sketch estimates.
+    */
+  private def assertSameDomains(got: Seq[Domains.ColumnDomain], want: Seq[Domains.ColumnDomain]): Unit = {
+    assert(got.map(d => (d.column, d.dataType.simpleString)) ==
+      want.map(d => (d.column, d.dataType.simpleString)))
+    def hll(b: Array[Byte]) = org.apache.datasketches.hll.HllSketch.heapify(b).getEstimate
+    got.zip(want).foreach { case (g, w) =>
+      val c = g.column
+      assert(g.min == w.min && g.max == w.max, s"$c bounds: ${(g.min, g.max)} vs ${(w.min, w.max)}")
+      assert(g.nullCount == w.nullCount, s"$c nulls")
+      assert(g.nominal == w.nominal, s"$c nominal: ${g.nominal} vs ${w.nominal}")
+      assert(g.approxDistinct == w.approxDistinct, s"$c distinct: ${g.approxDistinct} vs ${w.approxDistinct}")
+      assert(g.distinctSketch.map(hll) == w.distinctSketch.map(hll), s"$c distinct sketch")
+      assert(Seq(0.0, 0.25, 0.5, 0.9, 1.0).map(g.quantile) == Seq(0.0, 0.25, 0.5, 0.9, 1.0).map(w.quantile),
+        s"$c quantiles")
+    }
+  }
+
+  test("write-time domains equal a recompute over the written table, column by column") {
+    // 150 rows: below the KLL sketch's k, so its quantiles are exact on
+    // both sides; "exact" has nominalCap distinct strings, "over" one more
+    val cap = 10
+    val df = spark.range(0, 150, 1, 3).select(
+      $"id",
+      ($"id" % 7 === 0).as("flag"),
+      when($"id" % 5 =!= 0, ($"id" * 3 % 101).cast("int")).as("n"),
+      when($"id" % 4 =!= 0, concat(lit("t"), $"id".cast("string"))).as("text"),
+      when($"id" % 6 =!= 0, concat(lit("e"), ($"id" % cap).cast("string"))).as("exact"),
+      concat(lit("o"), ($"id" % (cap + 1)).cast("string")).as("over"),
+      struct(($"id" % 3).cast("string").as("k"), ($"id" / 2.0).as("x")).as("meta"),
+      when($"id" % 9 =!= 0, array($"id".cast("double"), ($"id" * -1.5).cast("double"))).as("scores"),
+      map(lit("a"), $"id".cast("int")).as("attrs"))
+    val out = tmp("domains_eq")
+    val res = TableWriter.write(df, out, nominalCap = cap)
+    assert(res.rowCount == 150)
+    val recomputed = Domains.compute(spark.read.parquet(out), cap)
+    assertSameDomains(res.domains, recomputed)
+    val byName = res.domains.map(d => d.column -> d).toMap
+    assert(byName("exact").nominal.map(_.length).contains(cap))
+    assert(byName("over").nominal.isEmpty, "one value past the cap drops the domain")
+    assert(byName("text").nominal.isEmpty && byName("text").approxDistinct > 100)
+    assert(byName("flag").nominal.contains(Seq(false, true)))
+    assert(byName("meta.k").nominal.contains(Seq("0", "1", "2")))
+    assert(byName("scores").min.contains(-223.5) && byName("scores").max.contains(149.0))
+    assert(byName("n").nullCount == 30 && byName("attrs").approxDistinct == 0)
+    // the sidecar carries the same snapshot
+    val (rc, back) = TableWriter.readDomains(spark, out).get
+    assert(rc == 150 && back.map(_.approxDistinct) == res.domains.map(_.approxDistinct))
+  }
+
+  test("write of a zero-row frame: row count 0 and the domains of a plain compute") {
+    val df = Seq((1, "a", 1.5)).toDF("k", "s", "v").where($"k" < 0)
+    val res = TableWriter.write(df, tmp("writer_empty"))
+    assert(res.rowCount == 0)
+    assertSameDomains(res.domains, Domains.compute(df))
+  }
+
+  test("job counts: the write yields its domains, a narrow row index counts in one job") {
+    val df = spark.range(0, 2000, 1, 4).select($"id", ($"id" % 13).cast("string").as("s"))
+    val out = tmp("writer_jobs")
+    var res: TableWriter.WriteResult = null
+    val writeJobs = jobsStarted { res = TableWriter.write(df, out) }
+    assert(writeJobs.length == 1, s"write ran ${writeJobs.length} jobs")
+    assert(res.rowCount == 2000 && res.domains.find(_.column == "s").get.nominal.get.length == 13)
+    var indexed: org.apache.spark.sql.DataFrame = null
+    val indexJobs = jobsStarted { indexed = RowId.withRowIndex(df, "ri") }
+    assert(indexJobs.length == 1, s"withRowIndex ran ${indexJobs.length} jobs")
+    assert(indexed.where($"ri" =!= $"id").isEmpty)
+  }
 }
