@@ -185,9 +185,10 @@ object Decontaminate {
       probeDocs: Int,
       densityCutoff: Double): DecontPolicy = graft.Pins.scoped { scope =>
     val spark = train.sparkSession
-    val evalSpans = scope.pin(eval // consumed twice: count + probe join
+    // the pin's count sizes the decision; the probe join reads it again
+    val spans = scope.pinCounted(eval
       .select(explode(T.shingleHashes(col(textCol), w)).as("span_hash")).distinct())
-    val nEvalSpans = evalSpans.count()
+    val (evalSpans, nEvalSpans) = (spans.df, spans.rows)
     val bcastBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
     if (bcastBytes >= 0 && nEvalSpans * 8L > bcastBytes)
@@ -369,39 +370,24 @@ object Decontaminate {
     */
   def transitiveContamination(pairs: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"transitiveContamination: negative maxHops $maxHops")
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
-    var reached = seeds.select(col("id"), lit(0).as("hop")).cache()
-    var cachedHandle = reached
-    var reachedCount = reached.count()
-    var frontier = reached.select(col("id"))
-    var hop = 1
-    var done = maxHops == 0
-    while (!done) {
-      val next = frontier.join(edges, col("id") === col("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(reached.select(col("id")), Seq("id"), "left_anti")
-        .withColumn("hop", lit(hop))
-      val grown = reached.unionAll(next).cache()
-      // loop control needs the iteration materialized anyway; its count
-      // also detects the empty frontier (no growth → converged)
-      val grownCount = grown.count()
-      cachedHandle.unpersist()
-      cachedHandle = grown
-      done = grownCount == reachedCount || hop == maxHops
-      reachedCount = grownCount
-      // read the next frontier back out of the cached union — deriving it
-      // from `next` would re-execute the whole join chain next iteration
-      frontier = grown.where(col("hop") === hop).select(col("id"))
-      reached = grown
-      hop += 1
+    graft.Pins.scoped { scope =>
+      val edges = scope.adopt(pairs
+        .select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .cache())
+      val seed = graft.Pins.counted(seeds.select(col("id"), lit(0).as("hop")))
+      // one hop per round; a hop that adds no id ends the walk early
+      graft.Iterate(seed.df, maxHops, done = graft.Iterate.rowsUnchanged(seed.rows)) { r =>
+        // the frontier is read out of the pinned state: deriving it from
+        // the previous hop's plan would re-execute its join chain
+        val next = r.state.where(col("hop") === r.number - 1).select(col("id"))
+          .join(edges, col("id") === col("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(r.state.select(col("id")), Seq("id"), "left_anti")
+          .withColumn("hop", lit(r.number))
+        r.state.unionAll(next)
+      }
     }
-    val out = reached.localCheckpoint(true)
-    cachedHandle.unpersist()
-    edges.unpersist()
-    out
   }
 
   /** Drop training docs whose eval-span overlap ratio exceeds

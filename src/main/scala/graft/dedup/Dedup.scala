@@ -87,15 +87,15 @@ object Dedup {
     // pipeline runs once. MEMORY_AND_DISK: at 100 TB this is the artifact
     // you would checkpoint to the store — it is ~100 bytes/doc (signature
     // + hash set), orders of magnitude smaller than the corpus.
-    val prepared = preparedIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verified = lshVerifiedPairsPlan(prepared, bands, rows, threshold)
     // Materialize the (tiny) verified-pair set so the signature cache can be
-    // released immediately — otherwise every dedup call leaks a
+    // released on return or throw — otherwise every dedup call leaks a
     // MEMORY_AND_DISK entry for the session lifetime. localCheckpoint blocks
     // are reclaimed by the ContextCleaner once the result is unreferenced.
-    val out = verified.localCheckpoint(true)
-    prepared.unpersist()
-    out
+    graft.Pins.scoped { scope =>
+      val prepared = scope.adopt(
+        preparedIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      lshVerifiedPairsPlan(prepared, bands, rows, threshold).localCheckpoint(true)
+    }
   }
 
   /** The un-pinned pair plan behind [[lshVerifiedPairs]] — split out so
@@ -712,8 +712,8 @@ object Dedup {
     // row, one tiny agg) instead of a second join+count pass; coalesce:
     // max over an EMPTY label set (no near-duplicate pairs at all — the
     // common clean-corpus case) aggregates to null, not false
-    def unchanged(updated: DataFrame, round: Int): Boolean =
-      !updated.agg(coalesce(max(col("chg")), lit(false))).head().getBoolean(0)
+    def unchanged(updated: graft.Iterate.Next, round: Int): Boolean =
+      !updated.state.agg(coalesce(max(col("chg")), lit(false))).head().getBoolean(0)
     // every round pinned, not cached: the labels feed each round TWICE
     // (neighborMin + the update join), so an uncut lineage doubles per
     // iteration — a 2^diameter logical plan that OOMs the DRIVER on
@@ -863,51 +863,55 @@ object Dedup {
     require(numHashes % bands == 0)
     val rows = numHashes / bands
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val prepC = corpusSignatures.select(col("id"), col("sig"), col("shset")).persist(lvl)
-    val prepB = batchSignatures.select(col("id"), col("sig"), col("shset")).persist(lvl)
-    // SIDE-LOCAL set-group collapse (the [[lshVerifiedPairsPlan]]
-    // giant-cluster guard, applied per side): only group representatives
-    // band. Groups key on the exact sorted shingle set (not the MinHash
-    // signature — see lshVerifiedPairsPlan for why signature grouping
-    // folds distinct sets together), so a member shares its rep's set,
-    // hence its signature and band keys: the rep's corpus verdict
-    // genuinely covers the group, and the member itself dies against its
-    // rep via the star candidate below — the same (lower id survives)
-    // outcome the full clique produced, at O(cluster) cost.
-    def collapse(prep: DataFrame) = {
-      val ne = prep.where(size(col("shset")) > 0) // empty sets never band (sentinel collision)
-        .withColumn("__sk", xxhash64(array_sort(col("shset"))))
-      ne.join(ne.groupBy(col("__sk")).agg(min(col("id")).as("rep")), Seq("__sk"))
+    // both signature tables are released on return or throw
+    val losers = graft.Pins.scoped { scope =>
+      def prep(sigs: DataFrame) =
+        scope.adopt(sigs.select(col("id"), col("sig"), col("shset")).persist(lvl))
+      val prepC = prep(corpusSignatures)
+      val prepB = prep(batchSignatures)
+      // SIDE-LOCAL set-group collapse (the [[lshVerifiedPairsPlan]]
+      // giant-cluster guard, applied per side): only group representatives
+      // band. Groups key on the exact sorted shingle set (not the MinHash
+      // signature — see lshVerifiedPairsPlan for why signature grouping
+      // folds distinct sets together), so a member shares its rep's set,
+      // hence its signature and band keys: the rep's corpus verdict
+      // genuinely covers the group, and the member itself dies against its
+      // rep via the star candidate below — the same (lower id survives)
+      // outcome the full clique produced, at O(cluster) cost.
+      def collapse(prep: DataFrame) = {
+        val ne = prep.where(size(col("shset")) > 0) // empty sets never band (sentinel collision)
+          .withColumn("__sk", xxhash64(array_sort(col("shset"))))
+        ne.join(ne.groupBy(col("__sk")).agg(min(col("id")).as("rep")), Seq("__sk"))
+      }
+      val wrC = collapse(prepC)
+      val wrB = collapse(prepB)
+      def keyed(wr: DataFrame) = wr
+        .where(col("id") === col("rep"))
+        .select(col("id"), posexplode(H.bandHashes(col("sig"), bands, rows)).as(Seq("band", "bucket")))
+      val keyedC = keyed(wrC)
+      val keyedB = keyed(wrB)
+      // batch-vs-corpus candidates (all such pairs kill the batch doc) and
+      // batch-internal candidates (ordered: only the higher id can die);
+      // batch members of an identical-signature group die against their
+      // group rep (star — verified like every other candidate)
+      val starBB = wrB.where(col("id") =!= col("rep"))
+        .select(col("id").as("id_b"), col("rep").as("id_other"))
+      val candCB = keyedB.as("b").join(keyedC.as("c"), Seq("band", "bucket"))
+        .select(col("b.id").as("id_b"), col("c.id").as("id_other")).distinct()
+      val candBB = keyedB.as("a").join(keyedB.as("b"), Seq("band", "bucket"))
+        .where(col("a.id") < col("b.id"))
+        .select(col("b.id").as("id_b"), col("a.id").as("id_other")).distinct()
+        .unionAll(starBB)
+      val shC = prepC.select(col("id"), col("shset"))
+      val shB = prepB.select(col("id"), col("shset"))
+      def verified(cand: DataFrame, otherSh: DataFrame) = cand
+        .join(shB.withColumnRenamed("id", "id_b").withColumnRenamed("shset", "sh_b"), "id_b")
+        .join(otherSh.withColumnRenamed("id", "id_other").withColumnRenamed("shset", "sh_o"), "id_other")
+        .where(jaccardSets(col("sh_b"), col("sh_o")) >= threshold)
+        .select(col("id_b"))
+      verified(candCB, shC).unionAll(verified(candBB, shB)).distinct()
+        .localCheckpoint(true)
     }
-    val wrC = collapse(prepC)
-    val wrB = collapse(prepB)
-    def keyed(wr: DataFrame) = wr
-      .where(col("id") === col("rep"))
-      .select(col("id"), posexplode(H.bandHashes(col("sig"), bands, rows)).as(Seq("band", "bucket")))
-    val keyedC = keyed(wrC)
-    val keyedB = keyed(wrB)
-    // batch-vs-corpus candidates (all such pairs kill the batch doc) and
-    // batch-internal candidates (ordered: only the higher id can die);
-    // batch members of an identical-signature group die against their
-    // group rep (star — verified like every other candidate)
-    val starBB = wrB.where(col("id") =!= col("rep"))
-      .select(col("id").as("id_b"), col("rep").as("id_other"))
-    val candCB = keyedB.as("b").join(keyedC.as("c"), Seq("band", "bucket"))
-      .select(col("b.id").as("id_b"), col("c.id").as("id_other")).distinct()
-    val candBB = keyedB.as("a").join(keyedB.as("b"), Seq("band", "bucket"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("b.id").as("id_b"), col("a.id").as("id_other")).distinct()
-      .unionAll(starBB)
-    val shC = prepC.select(col("id"), col("shset"))
-    val shB = prepB.select(col("id"), col("shset"))
-    def verified(cand: DataFrame, otherSh: DataFrame) = cand
-      .join(shB.withColumnRenamed("id", "id_b").withColumnRenamed("shset", "sh_b"), "id_b")
-      .join(otherSh.withColumnRenamed("id", "id_other").withColumnRenamed("shset", "sh_o"), "id_other")
-      .where(jaccardSets(col("sh_b"), col("sh_o")) >= threshold)
-      .select(col("id_b"))
-    val losers = verified(candCB, shC).unionAll(verified(candBB, shB)).distinct()
-      .localCheckpoint(true)
-    prepC.unpersist(); prepB.unpersist()
     batch.join(losers.withColumnRenamed("id_b", idCol), Seq(idCol), "left_anti")
   }
 

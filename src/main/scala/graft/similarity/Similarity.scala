@@ -266,8 +266,9 @@ object Similarity {
     val spark = newVectors.sparkSession
     // pin the sidecar BEFORE any write: a refreshed sidecar overwrites
     // the very files this plan would otherwise lazily re-read
-    val sidecar = scope.pin(loadIvfCentroids(spark, dir))
-    require(sidecar.count() > 0, s"ivf append: no _centroids sidecar under " +
+    val pinned = scope.pinCounted(loadIvfCentroids(spark, dir))
+    val sidecar = pinned.df
+    require(pinned.rows > 0, s"ivf append: no _centroids sidecar under " +
       s"$dir - build with saveIvfIndexAppendable")
     val maxCell = sidecar.agg(max(col("cell"))).head().getLong(0)
     val bounds = newVectors.agg(

@@ -5,7 +5,7 @@ import graft.table.RowId
 import graft.text.{Packing, Sharding}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Training-data export — the pipeline's last mile: turn a curated corpus
   * into the artifact a trainer actually consumes.
@@ -328,10 +328,20 @@ object Export {
   def readPackedShards(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
+  // every lane a manifest line of either layout or of the JSONL export
+  // carries, integers as BIGINT; a lane a line lacks reads as null
+  private val manifestSchema = StructType.fromDDL(
+    "epoch BIGINT, max_doc_id BIGINT, max_seq_id BIGINT, min_doc_id BIGINT, " +
+      "min_seq_id BIGINT, n_docs BIGINT, n_sequences BIGINT, n_tokens BIGINT, " +
+      "pad_tokens BIGINT, seq_len BIGINT, shard BIGINT, " +
+      "sources ARRAY<STRUCT<n_docs: BIGINT, n_tokens: BIGINT, source: STRING>>")
+
   /** Read the `_manifest.jsonl` sidecar of a packed-shard directory.
     * The `_` prefix keeps the sidecar out of Spark's data-file listing
     * (Hadoop treats `_`-prefixed files as metadata), so it is read
-    * directly through the FS — one line per shard, driver-bounded.
+    * directly through the FS — one line per shard, driver-bounded — with
+    * the declared manifest schema: no inference job, and a manifest with
+    * no lines (an empty export) still has its columns.
     */
   def readManifest(spark: SparkSession, dir: String): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(dir, "_manifest.jsonl")
@@ -341,7 +351,7 @@ object Export {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     import spark.implicits._
-    spark.read.json(text.split('\n').toSeq.filter(_.nonEmpty).toDS())
+    spark.read.schema(manifestSchema).json(text.split('\n').toSeq.filter(_.nonEmpty).toDS())
   }
 
   /** Audit a packed-shard export root (flat [[writePackedShards]] or
@@ -365,19 +375,15 @@ object Export {
     * manifest side is the driver-bounded sidecar.
     */
   def auditPackedShards(spark: SparkSession, dir: String): DataFrame = {
-    val manifest = readManifest(spark, dir)
-    val m = manifest.select(
-      (if (manifest.columns.contains("epoch")) col("epoch") else lit(-1L))
-        .cast(LongType).as("epoch"),
-      col("shard").cast(LongType).as("shard"),
-      col("n_sequences").cast(LongType).as("cert_sequences"),
-      col("n_tokens").cast(LongType).as("cert_tokens"))
-    val data = readPackedShards(spark, dir)
-    val d = data.select(
-      (if (data.columns.contains("epoch")) col("epoch") else lit(-1L))
-        .cast(LongType).as("epoch"),
-      col("shard").cast(LongType).as("shard"),
-      col("n_real"))
+    val m = readManifest(spark, dir).select(
+      coalesce(col("epoch"), lit(-1L)).as("epoch"),
+      col("shard"),
+      col("n_sequences").as("cert_sequences"),
+      col("n_tokens").as("cert_tokens"))
+    // declared columns, not inference: an empty export has no data file to
+    // infer from, and the flat layout has no epoch directory (null here)
+    val d = spark.read.schema("n_real BIGINT, shard BIGINT, epoch BIGINT").parquet(dir)
+      .select(coalesce(col("epoch"), lit(-1L)).as("epoch"), col("shard"), col("n_real"))
       .groupBy(col("epoch"), col("shard"))
       .agg(count(lit(1)).as("actual_sequences"),
         sum(col("n_real")).cast(LongType).as("actual_tokens"))

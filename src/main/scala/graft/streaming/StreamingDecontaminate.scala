@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * The eval side is indexed ONCE at wiring time ([[buildIndex]]): the
   * Bloom sketch rides into every micro-batch plan as a binary literal
   * (scan-side `might_contain`, no per-batch eval scan), and the exact
-  * span set is pinned with an eager localCheckpoint so the per-batch
+  * span set is pinned ([[graft.Pins.counted]]) so the per-batch
   * verification join reads cached blocks, not the eval parquet. State
   * never grows — the eval set is immutable, unlike the dedup twins'
   * admitted sets.
@@ -46,14 +46,13 @@ object StreamingDecontaminate {
       fpp: Double = 0.01
   ): EvalIndex = {
     require(fpp > 0 && fpp < 1, s"StreamingDecontaminate: fpp $fpp out of (0,1)")
-    val spans = eval
+    val spans = graft.Pins.counted(eval
       .select(explode(T.shingleHashes(col(textCol), w)).as("span_hash"))
-      .distinct()
-      .localCheckpoint(true)
-    val n = spans.count()
+      .distinct())
     val bloom =
-      if (n == 0) null else Decontaminate.bloomBytes(spans, "span_hash", n, fpp)
-    EvalIndex(bloom, spans, w, maxOverlap)
+      if (spans.rows == 0) null
+      else Decontaminate.bloomBytes(spans.df, "span_hash", spans.rows, fpp)
+    EvalIndex(bloom, spans.df, w, maxOverlap)
   }
 
   /** Wire a streaming `docs` source into foreachBatch decontamination.

@@ -288,7 +288,7 @@ object StreamingLinkGraph {
     val committed = committedBatches(spark, dir)
     val nB = m.nBuckets
     graft.Pins.scoped { scope =>
-      val edges = scope.pin(readEdgesCanonical(spark, dir))
+      val edges = scope.pinCounted(readEdgesCanonical(spark, dir))
       val posts = effectivePostings(spark,
         LinkGraphStore.readPostingsSurface(spark, s"$dir/base")
           .select(col("h"), col("id")),
@@ -304,7 +304,7 @@ object StreamingLinkGraph {
       LinkGraphStore.stampEpochs(spark, outDir, newEpoch)
       // through the store's own writer: repartition-by-bucket = one file
       // per bucket, not tasks x buckets
-      LinkGraphStore.writeBucketed(edges.withColumn("bucket",
+      LinkGraphStore.writeBucketed(edges.df.withColumn("bucket",
         pmod(xxhash64(col("id_a"), col("id_b")), lit(nB.toLong)).cast("int")),
         s"$outDir/edges")
       LinkGraphStore.writeBucketed(
@@ -314,7 +314,7 @@ object StreamingLinkGraph {
       val metas = committed.map(b => readMeta(spark, dir, b))
       val manifest = LinkGraphStore.Manifest(m.version, m.w, m.maxDf, nB,
         nDocs = m.nDocs + metas.map(_.nDocs).sum,
-        nEdges = edges.count(),
+        nEdges = edges.rows,
         maxId = (m.maxId +: metas.map(_.maxId)).max,
         lastBatchId = (-1L +: committed).max,
         epoch = newEpoch)

@@ -69,18 +69,18 @@ object StreamingVideoIndex {
     // micro-batch until ContextCleaner GC
     val index = scope.pin(Multimodal.indexVideoAuto(batch, idCol, payloadCol))
     index.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    val quarantined = scope.pin(batch
+    val quarantined = scope.pinCounted(batch
       .join(index.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
       .select(col(idCol),
         coalesce(length(col(payloadCol)).cast("long"), lit(0L)).as("n_bytes"),
         when(col(payloadCol).isNull, lit("null_payload"))
           .otherwise(lit("unparseable_container")).as("reason")))
-    quarantined.write.mode("overwrite").parquet(s"$quarantineDir/batch=$batchId")
+    quarantined.df.write.mode("overwrite").parquet(s"$quarantineDir/batch=$batchId")
     val counts = index.agg(
       countDistinct(col(idCol)).as("n_indexed"),
       count(lit(1)).as("n_samples"),
       coalesce(sum(when(col("keyframe"), 1L).otherwise(0L)), lit(0L)).as("n_keyframes"))
-    val nQuarantined = quarantined.count()
+    val nQuarantined = quarantined.rows
     counts
       .select(lit(batchId).as("batch_id"),
         (col("n_indexed") + lit(nQuarantined)).as("n_videos"),

@@ -1,7 +1,6 @@
 package graft.table
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
@@ -46,7 +45,9 @@ object RowId {
     * where the per-partition offsets come from ONE single-stage job that
     * counts each partition (no shuffle, O(#partitions) driver memory) and
     * ride the data path as a dense plan literal (a broadcast join past
-    * 4096 partitions).
+    * 4096 partitions). A frame that is not provably narrow is pinned
+    * first, and its counts are those of the job that materializes the pin
+    * ([[graft.Pins.counted]]); a narrow one is counted in place.
     */
   def withRowIndexCounted(df: DataFrame, name: String = "row_index"): (DataFrame, Long) = {
     require(!df.columns.contains(name), s"column $name already exists")
@@ -60,14 +61,11 @@ object RowId {
     // the partitioning must be identical across the two. Scan-only
     // (exchange-free) plans repartition deterministically from the file
     // listing; anything with a shuffle can be replanned by AQE between the
-    // two jobs → pin it first. The pin is lazy: the count job below
-    // materializes it, so the heavy upstream plan runs once, in the job
-    // that counts it. ADVICE r2.
-    val src = if (narrowDeterministic(df)) df else df.localCheckpoint(false)
-    val counts = src.select()
-      .mapPartitions(it => Iterator.single((TaskContext.getPartitionId(), it.size.toLong)))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .collect().sortBy(_._1).map(_._2)
+    // two jobs → pin it first, counting it in the job that materializes
+    // the pin. ADVICE r2.
+    val (src, counts) =
+      if (narrowDeterministic(df)) (df, graft.Pins.partitionRows(df))
+      else { val pinned = graft.Pins.counted(df); (pinned.df, pinned.partitionRows) }
     // offsets(p) = rows before partition p; the last entry is the total
     val offsets = counts.scanLeft(0L)(_ + _)
     val total = offsets.last
@@ -212,7 +210,7 @@ object RowId {
     // every key is untouched), so termination is guaranteed; the pin every
     // 20 passes only guards pathological inputs from unbounded plan growth
     graft.Iterate(withRowIndex(df, ord), maxRounds = Int.MaxValue, pinEvery = 20,
-        done = (cur, _) => duplicateKeys(cur, keyCol).isEmpty) { r =>
+        done = (cur, _) => duplicateKeys(cur.state, keyCol).isEmpty) { r =>
       val w = Window.partitionBy(col(keyCol)).orderBy(col(ord))
       r.state
         .withColumn(tmp, row_number().over(w) - 1)

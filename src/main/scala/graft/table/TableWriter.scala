@@ -1,5 +1,8 @@
 package graft.table
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
+import com.fasterxml.jackson.databind.util.RawValue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,22 +69,23 @@ object TableWriter {
     WriteResult(path, rowCount, domains)
   }
 
-  private def escape(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x" // any other control char
-    case c => c.toString
-  } + "\""
+  /** Sidecar codec: Jackson both ways. NaN and ±Infinity bounds are
+    * written bare, as Java prints them, so the reader accepts them.
+    */
+  private lazy val sidecarMapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
 
-  private def fmt(v: Any): String = v match {
-    case null => "null"
-    case s: String => escape(s)
-    case b: Boolean => b.toString
-    case n: java.lang.Number => n.toString
-    case other => escape(other.toString)
+  /** A domain value as JSON: numbers as Java prints them, booleans as
+    * themselves, anything else (strings, dates, timestamps) as its string.
+    */
+  private def jsonValue(v: Any): JsonNode = {
+    val f = JsonNodeFactory.instance
+    v match {
+      case null => f.nullNode()
+      case b: Boolean => f.booleanNode(b)
+      case n: java.lang.Number => f.rawValueNode(new RawValue(n.toString))
+      case other => f.textNode(other.toString)
+    }
   }
 
   /** Persist domains as `_graft_domains.json` inside the table directory
@@ -92,33 +96,36 @@ object TableWriter {
     * [[readDistinctSketches]]).
     */
   def persistDomains(spark: SparkSession, path: String, rowCount: Long, domains: Seq[Domains.ColumnDomain]): Unit = {
-    val cols = domains.map { d =>
-      val nominal = d.nominal.map(_.map(fmt).mkString("[", ",", "]")).getOrElse("null")
-      val sketch = d.distinctSketch
-        .map(b => "\"" + java.util.Base64.getEncoder.encodeToString(b) + "\"")
-        .getOrElse("null")
-      val qsketch = d.quantileSketch
-        .map(b => "\"" + java.util.Base64.getEncoder.encodeToString(b) + "\"")
-        .getOrElse("null")
-      s"""{"column":${fmt(d.column)},"type":${fmt(d.dataType.simpleString)},""" +
-        s""""min":${d.min.map(fmt).getOrElse("null")},"max":${d.max.map(fmt).getOrElse("null")},""" +
-        s""""nominal":$nominal,"null_count":${d.nullCount},"approx_distinct":${d.approxDistinct},""" +
-        s""""distinct_sketch":$sketch,"quantile_sketch":$qsketch}"""
-    }
+    def base64(b: Option[Array[Byte]]): String =
+      b.map(java.util.Base64.getEncoder.encodeToString).orNull
+    val root = sidecarMapper.createObjectNode()
     // the fingerprint of the data the stats describe (listed AFTER the
     // data write, so it covers exactly what is on disk now) — appendWrite
     // compares it against a fresh listing to detect a prior TORN append
     // (data landed, sidecar didn't) and route to the full-rescan fallback
     // instead of merging a stale prior
     val (nFiles, nBytes) = dataFingerprint(spark, path)
-    val json = s"""{"row_count":$rowCount,"data_files":$nFiles,""" +
-      s""""data_bytes":$nBytes,"columns":[${cols.mkString(",")}]}"""
+    root.put("row_count", rowCount).put("data_files", nFiles).put("data_bytes", nBytes)
+    val cols = root.putArray("columns")
+    domains.foreach { d =>
+      val c = cols.addObject()
+      c.put("column", d.column).put("type", d.dataType.simpleString)
+      c.set[JsonNode]("min", jsonValue(d.min.orNull))
+      c.set[JsonNode]("max", jsonValue(d.max.orNull))
+      d.nominal match {
+        case Some(vs) => val arr = c.putArray("nominal"); vs.foreach(v => arr.add(jsonValue(v)))
+        case None => c.putNull("nominal")
+      }
+      c.put("null_count", d.nullCount).put("approx_distinct", d.approxDistinct)
+      c.put("distinct_sketch", base64(d.distinctSketch))
+      c.put("quantile_sketch", base64(d.quantileSketch))
+    }
     // Hadoop FileSystem, not java.nio: the table path may be s3a/hdfs —
     // the sidecar must land next to the data wherever it lives
     val p = new org.apache.hadoop.fs.Path(path, "_graft_domains.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(sidecarMapper.writeValueAsBytes(root))
     finally out.close()
   }
 
@@ -136,22 +143,25 @@ object TableWriter {
     }
   }
 
+  /** The parsed sidecar; None when it is absent or not a JSON object. */
+  private def readSidecar(spark: SparkSession, path: String): Option[JsonNode] =
+    readDomainsJson(spark, path).flatMap { json =>
+      try Option(sidecarMapper.readTree(json)).filter(_.isObject)
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+
   /** Deserialize the per-column HLL sketches from a table's sidecar:
     * column → sketch bytes (absent for non-sketchable columns / old
-    * sidecars). Regex-scoped parse of the sidecar's own writer format.
+    * sidecars). Every column's sketch, even where [[readDomains]] cannot
+    * rebuild that column's bounds.
     */
-  def readDistinctSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] =
-    readDomainsJson(spark, path) match {
-      case None => Map.empty
-      case Some(json) =>
-        val entry =
-          """"column":"((?:[^"\\]|\\.)*)".*?"distinct_sketch":(?:"([A-Za-z0-9+/=]+)"|null)""".r
-        entry.findAllMatchIn(json).flatMap { m =>
-          Option(m.group(2)).map(b64 =>
-            m.group(1).replace("\\\"", "\"").replace("\\\\", "\\") ->
-              java.util.Base64.getDecoder.decode(b64))
-        }.toMap
-    }
+  def readDistinctSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    readSidecar(spark, path).toSeq.flatMap(_.path("columns").elements().asScala).flatMap { c =>
+      Option(c.get("distinct_sketch")).filter(_.isTextual).map(b64 =>
+        c.path("column").asText() -> java.util.Base64.getDecoder.decode(b64.asText()))
+    }.toMap
+  }
 
   /** Structured read-back of the domain sidecar: (rowCount, domains) —
     * the reverse of [[persistDomains]], value types reconstructed from
@@ -161,52 +171,50 @@ object TableWriter {
     * treat None as "recompute", never as "merge blind".
     */
   def readDomains(spark: SparkSession, path: String): Option[(Long, Seq[Domains.ColumnDomain])] =
-    readDomainsJson(spark, path).flatMap { json =>
-      try {
-        val root = domainsMapper.readTree(json)
-        if (root == null || !root.isObject || !root.has("row_count")) return None
-        val rowCount = root.get("row_count").longValue()
-        import scala.jdk.CollectionConverters._
-        import org.apache.spark.sql.types._
-        def convert(dt: DataType, v: com.fasterxml.jackson.databind.JsonNode): Any = dt match {
-          case IntegerType => v.intValue()
-          case LongType => v.longValue()
-          case ShortType => v.shortValue()
-          case ByteType => v.numberValue().byteValue()
-          case DoubleType => v.doubleValue()
-          case FloatType => v.floatValue()
-          case _: DecimalType => new java.math.BigDecimal(v.asText())
-          case BooleanType => v.booleanValue()
-          case StringType => v.asText()
-          case DateType => java.sql.Date.valueOf(v.asText())
-          case TimestampType => java.sql.Timestamp.valueOf(v.asText())
-          // numeric-array leaves carry ELEMENT-typed bounds
-          case ArrayType(e: NumericType, _) => convert(e, v)
-          case other => throw new IllegalArgumentException(s"unmergeable type $other")
-        }
-        val cols = root.get("columns").elements().asScala.map { c =>
-          val dt = DataType.fromDDL(c.get("type").asText())
-          def opt(f: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-            Option(c.get(f)).filterNot(_.isNull)
-          Domains.ColumnDomain(
-            column = c.get("column").asText(),
-            dataType = dt,
-            min = opt("min").map(convert(dt, _)),
-            max = opt("max").map(convert(dt, _)),
-            nominal = opt("nominal").map(_.elements().asScala.map(n =>
-              if (n.isBoolean) Boolean.box(n.booleanValue()) else (n.asText(): Any)).toSeq),
-            nullCount = c.get("null_count").longValue(),
-            approxDistinct = c.get("approx_distinct").longValue(),
-            distinctSketch = opt("distinct_sketch")
-              .map(n => java.util.Base64.getDecoder.decode(n.asText())),
-            quantileSketch = opt("quantile_sketch")
-              .map(n => java.util.Base64.getDecoder.decode(n.asText())))
-        }.toSeq
-        Some((rowCount, cols))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+    readSidecar(spark, path).flatMap(domainsOf)
 
-  private lazy val domainsMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def domainsOf(root: JsonNode): Option[(Long, Seq[Domains.ColumnDomain])] =
+    if (!root.has("row_count")) None
+    else try {
+      val rowCount = root.get("row_count").longValue()
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.types._
+      def convert(dt: DataType, v: JsonNode): Any = dt match {
+        case IntegerType => v.intValue()
+        case LongType => v.longValue()
+        case ShortType => v.shortValue()
+        case ByteType => v.numberValue().byteValue()
+        case DoubleType => v.doubleValue()
+        case FloatType => v.floatValue()
+        case _: DecimalType => new java.math.BigDecimal(v.asText())
+        case BooleanType => v.booleanValue()
+        case StringType => v.asText()
+        case DateType => java.sql.Date.valueOf(v.asText())
+        case TimestampType => java.sql.Timestamp.valueOf(v.asText())
+        // numeric-array leaves carry ELEMENT-typed bounds
+        case ArrayType(e: NumericType, _) => convert(e, v)
+        case other => throw new IllegalArgumentException(s"unmergeable type $other")
+      }
+      val cols = root.get("columns").elements().asScala.map { c =>
+        val dt = DataType.fromDDL(c.get("type").asText())
+        def opt(f: String): Option[JsonNode] =
+          Option(c.get(f)).filterNot(_.isNull)
+        Domains.ColumnDomain(
+          column = c.get("column").asText(),
+          dataType = dt,
+          min = opt("min").map(convert(dt, _)),
+          max = opt("max").map(convert(dt, _)),
+          nominal = opt("nominal").map(_.elements().asScala.map(n =>
+            if (n.isBoolean) Boolean.box(n.booleanValue()) else (n.asText(): Any)).toSeq),
+          nullCount = c.get("null_count").longValue(),
+          approxDistinct = c.get("approx_distinct").longValue(),
+          distinctSketch = opt("distinct_sketch")
+            .map(n => java.util.Base64.getDecoder.decode(n.asText())),
+          quantileSketch = opt("quantile_sketch")
+            .map(n => java.util.Base64.getDecoder.decode(n.asText())))
+      }.toSeq
+      Some((rowCount, cols))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** (file count, total bytes) over the table's DATA files — hidden files
     * (`_SUCCESS`, the sidecar itself, committer temp dirs) excluded,
@@ -248,15 +256,10 @@ object TableWriter {
     * sidecars written before fingerprints existed (treated as stale:
     * recompute is always correct).
     */
-  private def recordedFingerprint(spark: SparkSession, path: String): Option[(Long, Long)] =
-    readDomainsJson(spark, path).flatMap { json =>
-      try {
-        val root = domainsMapper.readTree(json)
-        if (root != null && root.has("data_files") && root.has("data_bytes"))
-          Some((root.get("data_files").longValue(), root.get("data_bytes").longValue()))
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+  private def recordedFingerprint(root: JsonNode): Option[(Long, Long)] =
+    if (root.has("data_files") && root.has("data_bytes"))
+      Some((root.get("data_files").longValue(), root.get("data_bytes").longValue()))
+    else None
 
   /** Append a batch to an existing table and MERGE its statistics into
     * the sidecar without rescanning the old data — the reference's
@@ -284,7 +287,8 @@ object TableWriter {
       nominalCap: Int = Domains.DefaultNominalCap
   ): WriteResult = {
     val spark = df.sparkSession
-    val prior = readDomains(spark, path)
+    val sidecar = readSidecar(spark, path)
+    val prior = sidecar.flatMap(domainsOf)
     if (prior.isEmpty &&
         !new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration).exists(new org.apache.hadoop.fs.Path(path)))
@@ -297,7 +301,7 @@ object TableWriter {
     }
     // listed BEFORE this batch's append: equality with the recorded
     // fingerprint certifies the sidecar describes exactly the data on disk
-    val sidecarFresh = recordedFingerprint(spark, path)
+    val sidecarFresh = sidecar.flatMap(recordedFingerprint)
       .contains(dataFingerprint(spark, path))
     val (batchDomains, batchCount) =
       Domains.observing(df, nominalCap)(_.write.mode("append").parquet(path))

@@ -152,9 +152,9 @@ object HyperBall {
     // per-hop mode keeps every round's pin live (the final join reads
     // them all); otherwise the driver releases each superseded round
     var snapshots = init.select(col("id"))
-    def snapshot(regs: DataFrame, d: Int): Boolean = {
+    def snapshot(regs: graft.Iterate.Next, d: Int): Boolean = {
       if (perHop) snapshots = snapshots.join(
-        regs.select(col("id"), col("reg").as(s"__reg$d")), Seq("id"))
+        regs.state.select(col("id"), col("reg").as(s"__reg$d")), Seq("id"))
       false
     }
     val regs = try graft.Iterate(init, maxHops, retain = perHop, done = snapshot) { r =>

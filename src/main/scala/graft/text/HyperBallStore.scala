@@ -90,14 +90,14 @@ object HyperBallStore {
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().cache()
     try graft.Pins.scoped { scope =>
-      val init = scope.pin(ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg")))
-      val nNodes = init.count()
-      writeHop(init, dir, 0, nBuckets)
-      scope.adopt(graft.Iterate(init, maxHops, done = (regs, d) => {
-        writeHop(regs, dir, d, nBuckets); false
+      val init = scope.pinCounted(
+        ids.select(col("id"), HyperBall.initRegisters(col("id")).as("reg")))
+      writeHop(init.df, dir, 0, nBuckets)
+      scope.adopt(graft.Iterate(init.df, maxHops, done = (regs, d) => {
+        writeHop(regs.state, dir, d, nBuckets); false
       })(r => HyperBall.registerRound(e, r.state)))
       writeManifest(spark, dir,
-        Manifest(1, HyperBall.M, maxHops, nNodes, nBuckets, source))
+        Manifest(1, HyperBall.M, maxHops, init.rows, nBuckets, source))
     } finally e.unpersist()
   }
 
@@ -189,7 +189,7 @@ object HyperBallStore {
     try graft.Pins.scoped { scope =>
       scope.adopt(graft.Iterate(scope.pin(readHop(spark, dir, m.maxHops)),
         newMaxHops - m.maxHops, done = (regs, i) => {
-          writeHop(regs, dir, m.maxHops + i, m.nBuckets); false
+          writeHop(regs.state, dir, m.maxHops + i, m.nBuckets); false
         })(r => HyperBall.registerRound(e, r.state)))
       // manifest LAST; source per the scaladoc (None unless re-verified)
       writeManifest(spark, dir, m.copy(maxHops = newMaxHops, source = source))

@@ -109,130 +109,79 @@ object LinkGraph {
   private def centralityImpl(nodes: DataFrame, idCol: String, edges: DataFrame,
       maxHops: Int, maxReachPerRoot: Option[Long], maxEstimatedReach: Long): DataFrame = {
     require(maxHops >= 1, s"LinkGraph.centrality: maxHops $maxHops < 1")
-    // this loop stays off graft.Iterate: its cache()d rounds are
-    // materialized by the convergence count itself, so a driver pin
-    // would add one job per hop.
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().cache()
-    // reached: (root, id, d) with d = min hops root → id; seed d = 0 rows
-    // keep every node present in the output even when isolated
-    var reached = nodes.select(col(idCol).as("root"), col(idCol).as("id"),
-      lit(0).as("d")).cache()
-    var cachedHandle = reached
-    var staleHandle: Option[org.apache.spark.sql.DataFrame] = None
-    var reachedCount = reached.count()
-    // density guard for the UNCAPPED closure (capped runs are bounded by
-    // construction): one cheap aggregation over the cached edges, then
-    // fail fast BEFORE any closure state accumulates. The probe rides on
-    // data the loop needs cached anyway; see the [[centrality]] scaladoc.
-    if (maxReachPerRoot.isEmpty && maxEstimatedReach < Long.MaxValue) {
-      // approx_count_distinct, not exact: the probe must stay one
-      // map-side-combined pass even on a 10⁹-edge table (an exact
-      // distinct is itself a full shuffle), and a ±2% HLL error cannot
-      // flip a guard whose failure mode is orders of magnitude
-      val probe = e.agg(count(lit(1)).as("m"),
-        approx_count_distinct(col("src")).as("s")).head()
-      val m = probe.getLong(0)
-      val avgDeg = m.toDouble / math.max(1L, probe.getLong(1))
-      var est = 0.0
-      var term = reachedCount.toDouble
-      var i = 0
-      while (i < maxHops && est <= maxEstimatedReach.toDouble) {
-        term *= avgDeg; est += term; i += 1
-      }
-      if (est > maxEstimatedReach.toDouble) {
-        cachedHandle.unpersist() // fail-fast must not leak the seed/edge caches
-        e.unpersist()
-        throw new IllegalArgumentException(
-          f"LinkGraph.centrality: estimated closure size $est%.3g (root, id) rows " +
-            f"(${reachedCount} roots x avg out-degree $avgDeg%.1f over $maxHops hops, " +
-            s"$m edges) exceeds maxEstimatedReach $maxEstimatedReach - an uncapped " +
-            "all-roots BFS at this density is a measured disk-exhaustion footgun. " +
-            "Sample the roots, use centralityCapped(maxReachPerRoot), or pass " +
-            "centrality(..., maxEstimatedReach) explicitly to accept the cost.")
-      }
-    }
-    var frontier = reached.select(col("root"), col("id"))
-    // roots stopped by the ball cap (None = unlimited); cumulative, and
-    // always re-derived from the CACHED reached table so checking it
-    // never re-executes the join chain
-    var cappedRoots: Option[DataFrame] = None
-    var d = 1
-    var done = false
-    while (!done) {
-      // BFS step as ONE aggregation (optimization round 18): the old
-      // shape shuffled the hop's candidate set twice (distinct + the
-      // anti-join against reached) before the union; min(d) over
-      // reached ∪ candidates is the same min-distance semantics — a
-      // node rediscovered at hop d keeps its earlier d, a fresh node
-      // enters with d — in a single (root, id) exchange (guide §2.4).
-      // Candidate rows carry d = current hop, so min(d) ≡ first
-      // discovery; the frontier filter below (d === current) then picks
-      // exactly the fresh nodes.
-      val candidates = frontier.join(e, col("id") === col("src"))
-        .select(col("root"), col("dst").as("id"), lit(d).as("d"))
-      val grown = reached.unionAll(candidates)
-        .groupBy(col("root"), col("id")).agg(min(col("d")).as("d"))
-        .cache()
-      if (d == maxHops) {
-        // the final iteration terminates unconditionally: skip its
-        // convergence count and let the closing localCheckpoint do the
-        // one materialization. The previous cache must stay live until
-        // then — `grown`'s lineage still reads it
-        staleHandle = Some(cachedHandle)
-        cachedHandle = grown
-        done = true
-      } else {
-        // loop control materializes the iteration; the count doubles as
-        // empty-frontier detection (no growth → converged early)
-        val grownCount = grown.count()
-        cachedHandle.unpersist()
-        cachedHandle = grown
-        done = grownCount == reachedCount
-        reachedCount = grownCount
-        // ball-size check AFTER the hop materialized: roots over the cap
-        // expand no further (their reached rows stay — flagged partial).
-        // Reach only grows, so the latest check subsumes earlier ones.
-        maxReachPerRoot.foreach { cap =>
-          cappedRoots = Some(grown.groupBy(col("root"))
-            .agg(count(lit(1)).as("__n"))
-            .where(col("__n") > cap)
-            .select(col("root")))
+    val reached = graft.Pins.scoped { scope =>
+      val e = scope.adopt(edges.select(col("src"), col("dst"))
+        .where(col("src") =!= col("dst")).distinct().cache())
+      // reached: (root, id, d) with d = min hops root → id; seed d = 0 rows
+      // keep every node present in the output even when isolated
+      val seed = scope.pinCounted(nodes.select(col(idCol).as("root"), col(idCol).as("id"),
+        lit(0).as("d")))
+      // density guard for the UNCAPPED closure (capped runs are bounded by
+      // construction): one cheap aggregation over the cached edges, then
+      // fail fast BEFORE any closure state accumulates. The probe rides on
+      // data the loop needs cached anyway; see the [[centrality]] scaladoc.
+      if (maxReachPerRoot.isEmpty && maxEstimatedReach < Long.MaxValue) {
+        // approx_count_distinct, not exact: the probe must stay one
+        // map-side-combined pass even on a 10⁹-edge table (an exact
+        // distinct is itself a full shuffle), and a ±2% HLL error cannot
+        // flip a guard whose failure mode is orders of magnitude
+        val probe = e.agg(count(lit(1)).as("m"),
+          approx_count_distinct(col("src")).as("s")).head()
+        val m = probe.getLong(0)
+        val avgDeg = m.toDouble / math.max(1L, probe.getLong(1))
+        var est = 0.0
+        var term = seed.rows.toDouble
+        var i = 0
+        while (i < maxHops && est <= maxEstimatedReach.toDouble) {
+          term *= avgDeg; est += term; i += 1
         }
+        if (est > maxEstimatedReach.toDouble)
+          throw new IllegalArgumentException(
+            f"LinkGraph.centrality: estimated closure size $est%.3g (root, id) rows " +
+              f"(${seed.rows} roots x avg out-degree $avgDeg%.1f over $maxHops hops, " +
+              s"$m edges) exceeds maxEstimatedReach $maxEstimatedReach - an uncapped " +
+              "all-roots BFS at this density is a measured disk-exhaustion footgun. " +
+              "Sample the roots, use centralityCapped(maxReachPerRoot), or pass " +
+              "centrality(..., maxEstimatedReach) explicitly to accept the cost.")
       }
-      // read the next frontier back out of the cached union — deriving it
-      // from `next` would re-execute the whole join chain next iteration
-      frontier = grown.where(col("d") === d).select(col("root"), col("id"))
-      cappedRoots.foreach(cr => frontier = frontier.join(cr, Seq("root"), "left_anti"))
-      reached = grown
-      d += 1
+      // one hop per round; a hop that adds no row ends the walk early
+      graft.Iterate(seed.df, maxHops, done = graft.Iterate.rowsUnchanged(seed.rows)) { r =>
+        // the frontier (nodes first reached by the previous hop) is read
+        // out of the pinned state; roots whose ball is over the cap expand
+        // no further (their reached rows stay — flagged partial below)
+        val fresh = r.state.where(col("d") === r.number - 1).select(col("root"), col("id"))
+        val frontier = maxReachPerRoot.filter(_ => r.number > 1).fold(fresh) { cap =>
+          fresh.join(r.state.groupBy(col("root")).agg(count(lit(1)).as("__n"))
+            .where(col("__n") > cap).select(col("root")), Seq("root"), "left_anti")
+        }
+        // BFS step as ONE aggregation (optimization round 18): the old
+        // shape shuffled the hop's candidate set twice (distinct + the
+        // anti-join against reached) before the union; min(d) over
+        // reached ∪ candidates is the same min-distance semantics — a
+        // node rediscovered at hop d keeps its earlier d, a fresh node
+        // enters with d — in a single (root, id) exchange (guide §2.4).
+        val candidates = frontier.join(e, col("id") === col("src"))
+          .select(col("root"), col("dst").as("id"), lit(r.number).as("d"))
+        r.state.unionAll(candidates)
+          .groupBy(col("root"), col("id")).agg(min(col("d")).as("d"))
+      }
     }
-    val pinned = reached.localCheckpoint(true)
-    // pin the capped set too before releasing the caches its plan reads
-    val cappedPinned = cappedRoots.map(_.localCheckpoint(true))
-    staleHandle.foreach(_.unpersist())
-    cachedHandle.unpersist()
-    e.unpersist()
     val hopAggs = (1 to maxHops).map(i =>
       sum(when(col("d") === i, 1L).otherwise(0L)).as(s"n_hop_$i"))
-    val agg = pinned.groupBy(col("root").as(idCol))
-      .agg(hopAggs.head, hopAggs.tail: _*)
+    // the ball each root had before the last hop: rows only ever enter
+    // with the current hop as their d, so it is the rows with d < maxHops
+    // (every row, when the walk ended early). A root stopped by the cap
+    // had that ball over the cap; maxHops == 1 never truncates.
+    val settled = sum(when(col("d") < maxHops, 1L).otherwise(0L)).as("__settled")
+    val aggs = if (maxReachPerRoot.isDefined) hopAggs :+ settled else hopAggs
+    val agg = reached.groupBy(col("root").as(idCol)).agg(aggs.head, aggs.tail: _*)
     val reach = (1 to maxHops).map(i => col(s"n_hop_$i")).reduce(_ + _)
     val harmonic = (1 to maxHops)
       .map(i => col(s"n_hop_$i").cast("double") / lit(i.toDouble))
       .reduce(_ + _)
     val base = agg.withColumn("reach", reach).withColumn("harmonic", harmonic)
-    cappedPinned match {
-      case Some(cr) =>
-        base.join(cr.select(col("root").as(idCol), lit(true).as("__capped")),
-            Seq(idCol), "left")
-          .withColumn("capped", coalesce(col("__capped"), lit(false)))
-          .drop("__capped")
-      case None if maxReachPerRoot.isDefined =>
-        // maxHops == 1 never truncates (the single hop always completes)
-        base.withColumn("capped", lit(false))
-      case None => base
-    }
+    maxReachPerRoot.fold(base)(cap =>
+      base.withColumn("capped", col("__settled") > cap).drop("__settled"))
   }
 
   /** Damped PageRank power iteration in FIXED-POINT integer arithmetic —
@@ -554,7 +503,9 @@ object LinkGraph {
     * component to be a star rooted at its minimum (a root that were not
     * the component min would appear on both sides). The probe is one
     * aggregation over a 2|E|-row union, short-circuited with `limit(1)`,
-    * and runs only on rounds that leave the edge count unchanged.
+    * and runs only on rounds that leave the edge count unchanged. That
+    * count is the one [[graft.Iterate]] hands over from the job that pins
+    * the round's edges, so the gate costs no job of its own.
     *
     * `maxRounds` counts the rounds run, and at least one round runs even
     * on an input that is already a star (the probe only follows a round),
@@ -569,30 +520,26 @@ object LinkGraph {
   def connectedComponents(nodes: DataFrame, idCol: String, edges: DataFrame,
       maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, s"LinkGraph.connectedComponents: maxRounds $maxRounds < 1")
-    val canon = canonicalEdges(edges).localCheckpoint(true)
-    var cnt = canon.count()
+    val canon = graft.Pins.counted(canonicalEdges(edges))
     // convergence = the EXACT star-fixpoint probe, but gated behind
     // edge-count stability (optimization round 19): the star passes can
     // only reach their fixpoint through a round that leaves the edge count
     // unchanged (a fixpoint round leaves the SET unchanged), and the count
-    // is a near-free job over the just-pinned checkpoint, while isStarSet
-    // is a full 2|E| shuffle+aggregation. Probing only count-stable rounds
+    // comes free with the round's pin, while isStarSet is a full 2|E|
+    // shuffle+aggregation. Probing only count-stable rounds
     // ran the expensive probe ONCE instead of every round (one-JVM A/B:
     // 2.15 s vs 3.27 s, labels identical, OPTIMIZATION_r19.md §2); a
     // count-stable non-fixpoint round just pays one extra probe and keeps
     // looping — exactness is untouched. Already-star inputs run one extra
     // round: the passes are idempotent at the fixpoint, so the set (and
     // labels) are identical.
-    def starFixpoint(next: DataFrame, round: Int): Boolean = {
-      val c = next.count()
-      val star = c == cnt && isStarSet(next)
-      cnt = c
-      star
-    }
+    val countStable = graft.Iterate.rowsUnchanged(canon.rows)
+    def starFixpoint(next: graft.Iterate.Next, round: Int): Boolean =
+      countStable(next, round) && isStarSet(next.state)
     // the alternation provably converges in O(log² n) rounds; a graph
     // that exhausts maxRounds means a bound set far too low — fail fast
     // rather than return a partially-contracted (wrong) labeling
-    val e = graft.Iterate(canon, maxRounds, done = starFixpoint,
+    val e = graft.Iterate(canon.df, maxRounds, done = starFixpoint,
       exhausted = Some(s"LinkGraph.connectedComponents: not converged after $maxRounds " +
         "rounds - the alternating algorithm needs O(log^2 n) rounds; raise maxRounds " +
         "(default 30 covers any graph that fits on disk).")) { r =>

@@ -107,11 +107,11 @@ object LinkGraphStore {
       val postings = spans.join(inPost, Seq("h"))
       val band = dfs.where(col("df") >= 2 && col("df") <= maxDf).select(col("h"))
       val sp = spans.join(band, Seq("h"))
-      val edges = scope.pin(sp.select(col("h"), col("id").as("id_a"))
+      val edges = scope.pinCounted(sp.select(col("h"), col("id").as("id_a"))
         .join(sp.select(col("h"), col("id").as("id_b")), Seq("h"))
         .where(col("id_a") < col("id_b"))
         .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("support")))
-      writeBucketed(edges.withColumn("bucket", edgeBucket(nBuckets)),
+      writeBucketed(edges.df.withColumn("bucket", edgeBucket(nBuckets)),
         s"$dir/edges")
       writeBucketed(postings.withColumn("bucket", spanBucket(nBuckets)),
         s"$dir/postings")
@@ -120,7 +120,7 @@ object LinkGraphStore {
       val stats = docs.agg(count(lit(1)).as("n"),
         max(col(idCol).cast("long")).as("mx")).head()
       writeManifest(spark, dir, Manifest(1, w, maxDf, nBuckets,
-        nDocs = stats.getLong(0), nEdges = edges.count(),
+        nDocs = stats.getLong(0), nEdges = edges.rows,
         maxId = if (stats.isNullAt(1)) Long.MinValue else stats.getLong(1),
         lastBatchId = -1L, epoch = newEpoch))
     }
@@ -356,7 +356,7 @@ object LinkGraphStore {
     import graft.streaming.{StreamingLinkGraph => S}
     val deltaRoot = s"$dir/deltas"
     graft.Pins.scoped { scope =>
-      val edges = scope.pin(S.mergedEdgesCanonical(spark,
+      val edges = scope.pinCounted(S.mergedEdgesCanonical(spark,
         readSurface(spark, s"$dir/edges", edgesSchema)
           .select(col("id_a"), col("id_b"), col("support")),
         deltaRoot, live))
@@ -368,7 +368,7 @@ object LinkGraphStore {
         deltaRoot, live))
       val newEpoch = m.epoch + 1L
       stampEpochs(spark, dir, newEpoch)
-      writeBucketed(edges.withColumn("bucket", edgeBucket(m.nBuckets)),
+      writeBucketed(edges.df.withColumn("bucket", edgeBucket(m.nBuckets)),
         s"$dir/edges")
       writeBucketed(posts.withColumn("bucket", spanBucket(m.nBuckets)),
         s"$dir/postings")
@@ -377,7 +377,7 @@ object LinkGraphStore {
       val metas = live.map(b => S.readMetaAt(spark, deltaRoot, b))
       writeManifest(spark, dir, m.copy(
         nDocs = m.nDocs + metas.map(_.nDocs).sum,
-        nEdges = edges.count(),
+        nEdges = edges.rows,
         maxId = (m.maxId +: metas.map(_.maxId)).max,
         lastBatchId = live.max,
         epoch = newEpoch))

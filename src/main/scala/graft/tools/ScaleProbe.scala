@@ -838,9 +838,9 @@ object ScaleProbe {
         // regardless of diameter; also time the min-propagation loop on
         // the same graph for the head-to-head (its rounds = diameter)
         val t0 = System.nanoTime()
-        val edges = LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32)
-          .localCheckpoint(true)
-        val nEdges = edges.count()
+        val pinned = graft.Pins.counted(
+          LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32))
+        val (edges, nEdges) = (pinned.df, pinned.rows)
         val tEdges = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
         val cc = LinkGraph.connectedComponents(docs.select(col("doc_id")), "doc_id", edges)
@@ -880,9 +880,9 @@ object ScaleProbe {
         // label propagation, seed-teleport PageRank — all linear-in-|E|
         // shapes; this probe confirms none hides a super-linear stage
         val t0 = System.nanoTime()
-        val edges = LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32)
-          .localCheckpoint(true)
-        val nE = edges.count()
+        val pinned = graft.Pins.counted(
+          LinkGraph.sharedSpanEdges(docs, "doc_id", "text", w = 6, maxDf = 32))
+        val (edges, nE) = (pinned.df, pinned.rows)
         val tE = (System.nanoTime() - t0) / 1e9
         val ids = docs.select(col("doc_id"))
         val t1 = System.nanoTime()

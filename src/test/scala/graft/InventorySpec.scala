@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The declared query inventory is six maps merged with `++`, which
   * silently keeps the LAST of two equal keys: a duplicate name would
   * shadow a query, and an oracle entry without a query would never run.
-  * Plus one source guard: pins are released only through their scope.
+  * Plus two source guards: pins are made only through `Pins` and
+  * released only through their scope.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -38,5 +39,28 @@ class InventorySpec extends AnyFunSuite {
       }).toList
     finally files.close()
     assert(hits.isEmpty, s"hand-rolled pin releases (use Pins.scoped): ${hits.mkString(", ")}")
+  }
+
+  test("localCheckpoint(false) appears only in Pins, the one pin that counts what it pins") {
+    import scala.jdk.CollectionConverters._
+    // Sources.jsonLinesQuarantine returns a lazy pin that its caller's first
+    // action materializes, and nothing counts it
+    val allowed = Set("Sources.scala" -> "jsonLinesQuarantine")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Pins.scala")
+      .flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+        val defName = """\bdef (\w+)""".r
+        lines.zipWithIndex.collect {
+          case (line, i) if line.contains("localCheckpoint(false)") =>
+            val enclosing = lines.take(i + 1).reverseIterator
+              .flatMap(l => defName.findFirstMatchIn(l).map(_.group(1))).nextOption()
+            (p.getFileName.toString, enclosing.getOrElse(""), s"$p:${i + 1}")
+        }
+      }.toList
+    finally files.close()
+    val bad = hits.filterNot { case (file, fn, _) => allowed((file, fn)) }.map(_._3)
+    assert(bad.isEmpty, s"lazy pins outside Pins (use Pins.counted): ${bad.mkString(", ")}")
   }
 }

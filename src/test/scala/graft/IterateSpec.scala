@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.{Dedup, MinHashStore, SemDedupStore}
+import graft.dedup.{Decontaminate, Dedup, MinHashStore, SemDedupStore}
 import graft.similarity.Similarity
 import graft.streaming.{StreamingAnnIndex, StreamingClean}
 import graft.table.{Combine, RowId}
@@ -37,13 +37,26 @@ class IterateSpec extends SparkSpec {
       s"$name left pins its result does not read: ${added -- resultPins(out)}")
   }
 
-  /** Run `op`, which must throw `T`, and require that it pinned nothing. */
+  /** Plans registered in the session CacheManager (`cache()`/`persist()`);
+    * its counter is `private[sql]` to Scala only, so it is read reflectively.
+    */
+  private def cachedPlans: Int = {
+    val cm = spark.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  /** Run `op`, which must throw `T`, and require that it pinned nothing
+    * and left no cached plan registered.
+    */
   private def noPinsAfter[T <: Throwable](name: String)(op: => Any)
       (implicit ct: scala.reflect.ClassTag[T]): Unit = {
     val before = persisted
+    val cachedBefore = cachedPlans
     intercept[T](op)
     val added = persisted -- before
     assert(added.isEmpty, s"$name failed fast but left pins $added")
+    assert(cachedPlans == cachedBefore,
+      s"$name failed fast but left ${cachedPlans - cachedBefore} cached plans registered")
   }
 
   private def undirected(pairs: Seq[(Long, Long)]): DataFrame = {
@@ -95,6 +108,11 @@ class IterateSpec extends SparkSpec {
     onlyResultPins("clusterRepresentatives")(Dedup.clusterRepresentatives(pairs))
     onlyResultPins("clusterRepresentatives at maxIters")(
       Dedup.clusterRepresentatives(pairs, maxIters = 1))
+    val seeds = Seq(1L).toDF("id")
+    onlyResultPins("transitiveContamination, maxHops = 0")(
+      Decontaminate.transitiveContamination(pairs, seeds, maxHops = 0))
+    onlyResultPins("transitiveContamination, maxHops = 2")(
+      Decontaminate.transitiveContamination(pairs, seeds, maxHops = 2))
   }
 
   test("fail-fast paths leave no pin behind") {
@@ -107,6 +125,14 @@ class IterateSpec extends SparkSpec {
     noPinsAfter[IllegalArgumentException]("pageRankWeighted over maxSourceWeight")(
       LinkGraph.pageRankWeighted(ids, "id", graph.withColumn("weight", lit(10L)),
         iters = 3, maxSourceWeight = 5L))
+    noPinsAfter[IllegalArgumentException]("centrality over maxEstimatedReach")(
+      LinkGraph.centrality(ids, "id", graph, maxHops = 3, maxEstimatedReach = 10L))
+    // a corpus signature table whose shset is not an array fails analysis
+    // after both signature tables are persisted
+    val sigs = Dedup.minHashSignatureTable(docs, "text", "doc_id", numHashes = 8)
+    noPinsAfter[org.apache.spark.sql.AnalysisException]("minHashIncrementalSigs, bad shset")(
+      Dedup.minHashIncrementalSigs(sigs.withColumn("shset", lit("x")), sigs, docs, "doc_id",
+        numHashes = 8, bands = 4))
   }
 
   test("Iterate: pin cadence, fixed point, exhaustion and a throwing step") {

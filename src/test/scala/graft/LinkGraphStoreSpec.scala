@@ -345,7 +345,12 @@ class LinkGraphStoreSpec extends SparkSpec {
     val schemas = Map(
       "q_linkgraph_stream" -> "struct<doc_id:bigint,rep:bigint,component_size:bigint>",
       "q_linkgraph_append" -> edges, "q_linkgraph_append_auto" -> edges,
-      "q_approx_distinct" -> "struct<exact_parts:bigint,approx_within_5pct:boolean>")
+      "q_approx_distinct" -> "struct<exact_parts:bigint,approx_within_5pct:boolean>",
+      "q_export_epoch" -> ("struct<epoch:bigint,shard:bigint,n_sequences:bigint," +
+        "n_tokens:bigint,pad_tokens:bigint,n_docs:bigint,min_doc_id:bigint,max_doc_id:bigint," +
+        "min_seq_id:bigint,max_seq_id:bigint>"),
+      "q_export_audit" -> ("struct<epoch:bigint,shard:bigint,cert_sequences:bigint," +
+        "actual_sequences:bigint,cert_tokens:bigint,actual_tokens:bigint,status:string>"))
     for ((q, schema) <- schemas) {
       val df = SparkEntry.queries(q)(spark, dir)
       assert(df.schema.simpleString == schema, q)

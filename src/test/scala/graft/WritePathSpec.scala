@@ -300,4 +300,25 @@ class WritePathSpec extends SparkSpec {
     assert(indexJobs.length == 1, s"withRowIndex ran ${indexJobs.length} jobs")
     assert(indexed.where($"ri" =!= $"id").isEmpty)
   }
+
+  test("job counts: one job pins and counts a frame; connectedComponents counts in its pin jobs") {
+    var pinned: Pins.Counted = null
+    val pinJobs = jobsStarted { pinned = Pins.counted(spark.range(0, 2000, 1, 4).toDF("id")) }
+    assert(pinJobs.length == 1, s"Pins.counted ran ${pinJobs.length} jobs")
+    assert(Pins.isPinned(pinned.df) && pinned.partitionRows.toSeq == Seq.fill(4)(500L))
+    Pins.release(pinned.df)
+    // IterateSpec's graph: two triangles bridged by a path, plus an isolated node
+    val pairs = Seq(1L -> 2L, 2L -> 3L, 1L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 6L, 6L -> 7L,
+      7L -> 8L, 6L -> 8L).toDF("src", "dst")
+    val graph = pairs.unionAll(pairs.select($"dst".as("src"), $"src".as("dst")))
+    var labels: Seq[org.apache.spark.sql.Row] = Nil
+    val ccJobs = jobsStarted {
+      labels = graft.text.LinkGraph.connectedComponents((1L to 9L).toDF("id"), "id", graph)
+        .orderBy("id").collect().toSeq
+    }
+    assert(labels.map(r => (r.getLong(1), r.getLong(2))) ==
+      Seq.fill(8)((1L, 8L)) :+ ((9L, 1L)))
+    // 40 jobs when the edges were counted after each pin, in a job of their own
+    assert(ccJobs.length <= 32, s"connectedComponents ran ${ccJobs.length} jobs")
+  }
 }
